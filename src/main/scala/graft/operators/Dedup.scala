@@ -91,12 +91,17 @@ object Dedup {
     * ~(1−t) of each doc); at low thresholds the prefixes approach the
     * full sets and the plain inverted index is cheaper. Composes with
     * `maxDocFreq` (prefixes are taken over the capped universe).
+    *
+    * Materialization: the capped and prefix-filtered paths hold the
+    * (doc, shingle) table as one lazy [[Materialize.checkpoint]] per
+    * call — written to the session's checkpoint dir when one is set,
+    * executor-local blocks otherwise. The plain capless path stays a
+    * fully lazy plan.
     */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       n: Int = 2, threshold: Double = 0.2,
       maxDocFreq: Option[Int] = scala.Some(5000),
-      prefixFilter: Boolean = false, sep: String = " ",
-      cacheShingles: Boolean = true): DataFrame = {
+      prefixFilter: Boolean = false, sep: String = " "): DataFrame = {
     val sh0 = shingles(df, id, text, n, sep)
     val sh1 = maxDocFreq match {
       case scala.Some(cap) =>
@@ -117,42 +122,19 @@ object Dedup {
     // unmaterialized, each re-runs the explode + corpus-wide distinct
     // lineage: the round-14 plan audit read the Generate/HashAggregate
     // subtree FOUR times in the executed dedup_ngram plan. A LAZY
-    // localCheckpoint materializes it once per call and — unlike the
-    // minHashPairs persist() contract — registers nothing in the
-    // CacheManager, so a repeated invocation (a re-run, a benchmark
-    // sample) pays its own full cost instead of silently reading the
-    // previous call's cache; blocks release via the ContextCleaner
-    // when the result plan is collected. The PLAIN CAPLESS path
-    // (maxDocFreq = None, no prefix filter — the explicit small-corpus
-    // verification shape) is deliberately left unmaterialized: its
-    // only consumers are the two identical self-join sides (one
-    // shared exchange via reuse) plus the cheap counts agg, and the
-    // checkpoint measured as pure overhead there (the minHashKeep
-    // lesson: materialize only when consumers' partitionings differ).
-    // Pass cacheShingles = false to keep the fully-lazy composable
-    // plan everywhere (streaming, or managing materialization
-    // yourself).
-    //
-    // Scale-safety (round-14 verdict item 4): localCheckpoint stores
-    // a CORPUS-SIZED table in executor-local blocks with its lineage
-    // truncated — on a real cluster losing one executor then fails
-    // the job instead of recomputing. When the session has a reliable
-    // checkpoint dir (the 100 TB deployment posture —
-    // setCheckpointDir on preemptible/dynamic clusters), the shingle
-    // table checkpoints THERE instead, with the fuzzyJoin materialize
-    // recipe (persist first so the eager checkpoint's write job reads
-    // cached blocks rather than recomputing the explode+distinct
-    // lineage, then release). Local mode / the bench have no dir and
-    // keep the lazy local form — same plan dedup, zero bench delta.
+    // checkpoint materializes it once per call (reliable under a
+    // checkpoint dir — the table is corpus-sized — local otherwise).
+    // The PLAIN CAPLESS path (maxDocFreq = None, no prefix filter —
+    // the explicit small-corpus verification shape) is deliberately
+    // left unmaterialized: its only consumers are the two identical
+    // self-join sides (one shared exchange via reuse) plus the cheap
+    // counts agg, and the checkpoint measured as pure overhead there
+    // (the minHashKeep lesson: materialize only when consumers'
+    // partitionings differ).
     val sh =
-      if (cacheShingles && (maxDocFreq.isDefined || prefixFilter)) {
-        if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-          sh1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try sh1.checkpoint()
-          finally { try sh1.unpersist()
-                    catch { case _: Exception => () } }
-        } else sh1.localCheckpoint(false)
-      } else sh1
+      if (maxDocFreq.isDefined || prefixFilter)
+        Materialize.checkpoint(sh1, eager = false)
+      else sh1
     val counts = sh.groupBy("doc_id").agg(F.count(lit(1)).as("n_sh"))
     val inter =
       if (!prefixFilter)
@@ -1089,7 +1071,8 @@ object Dedup {
     * paraphrased docs would serialize it). The driver loop holds no
     * data — per round it compares successive edge SETS (two counts +
     * an except on checkpointed frames) and each round's result is
-    * `localCheckpoint`ed so plan lineage stays constant-size. Vertex
+    * checkpointed ([[Materialize.checkpoint]]) so plan lineage stays
+    * constant-size; the previous round's blocks are released. Vertex
     * ids may be any orderable type (both sides must agree).
     */
   def connectedComponents(pairs: DataFrame, a: Column, b: Column,
@@ -1119,17 +1102,17 @@ object Dedup {
         .distinct()
     }
 
-    var cur = pairs.select(greatest(a, b).as("a"), least(a, b).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    var cur = Materialize.checkpoint(
+      pairs.select(greatest(a, b).as("a"), least(a, b).as("b"))
+        .where(col("a") =!= col("b")).distinct(), eager = true)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(true)
+      val next = Materialize.checkpoint(smallStar(largeStar(cur)), eager = true)
       // both sides are oriented (a > b) and distinct, so set equality
       // is equal counts + one empty difference
       converged = next.count() == cur.count() && next.except(cur).isEmpty
-      cur.unpersist()
+      Materialize.release(cur)
       cur = next
       round += 1
     }

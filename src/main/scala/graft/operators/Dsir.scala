@@ -46,19 +46,19 @@ object Dsir {
     */
   def bucketCounts(df: DataFrame, text: Column, buckets: Int,
       sep: String = " "): DataFrame =
-    df.select(explode(split(text, java.util.regex.Pattern.quote(sep)))
-        .as("token"))
-      .filter(col("token") =!= "")
-      .select(bucketOf(col("token"), buckets).as("bucket"))
-      .groupBy("bucket")
-      .agg(F.count(lit(1)).as("cnt"))
-      // the model is a REUSED artifact with ≥2 consumers by design
-      // ([[totalOf]]'s action + the scorer's broadcast): lazily
-      // localCheckpoint'd so the corpus-wide count pass runs once per
-      // model, not once per consumer (round-14 — dsir_weights was
-      // paying 2 extra full-corpus token passes); ≤ `buckets` rows,
-      // so the blocks are trivially small at any corpus scale
-      .localCheckpoint(false)
+    // the model is a REUSED artifact with ≥2 consumers by design
+    // ([[totalOf]]'s action + the scorer's broadcast): lazily
+    // checkpointed so the corpus-wide count pass runs once per model,
+    // not once per consumer (round-14 — dsir_weights was paying 2
+    // extra full-corpus token passes); ≤ `buckets` rows, so the
+    // blocks are trivially small at any corpus scale
+    Materialize.checkpoint(
+      df.select(explode(split(text, java.util.regex.Pattern.quote(sep)))
+          .as("token"))
+        .filter(col("token") =!= "")
+        .select(bucketOf(col("token"), buckets).as("bucket"))
+        .groupBy("bucket")
+        .agg(F.count(lit(1)).as("cnt")), eager = false)
 
   /** Total token count behind a bucket-counts model (tiny action;
     * pass the result into [[logImportanceWeights]] so scoring stays

@@ -40,19 +40,19 @@ object GraphOps {
     * — DESIGN.md adjudicates the alternatives): the edge table is
     * hash-partitioned on the join key ONCE and persisted together
     * with verts/outd, and each round's ranks materialize via an eager
-    * `localCheckpoint` before the next round builds on them. Per
-    * round that leaves exactly the shuffles the algorithm inherently
-    * needs — the rank⋈edges equijoin reads co-partitioned cached
-    * blocks, and only the contribution groupBy(dst) moves data. The
+    * [[Materialize.checkpoint]] (reliable when the session has a
+    * checkpoint dir, local otherwise) before the next round builds on
+    * them. Per round that leaves exactly the shuffles the algorithm
+    * inherently needs — the rank⋈edges equijoin reads co-partitioned
+    * cached blocks, and only the contribution groupBy(dst) moves data. The
     * earlier fully-lazy K-round single plan re-shuffled AND recomputed
     * the edge lineage every round and its unrolled lineage sent
     * Catalyst superlinear (3/6/9 iterations at 20M edges: 15 s / 26 s
     * / 202 s); the materialized form is flat per round and the
     * blocks (edges/verts/outd and each round's previous ranks) are
-    * unpersisted before returning — the result is a checkpointed,
-    * lineage-free frame. `checkpointEvery` is subsumed (every round
-    * checkpoints) and retained for source compatibility. The dangling
-    * mass stays a ONE-ROW decimal-exact aggregate broadcast back, and
+    * released before returning, on a throw too — the result is a
+    * checkpointed, lineage-free frame. The dangling mass stays a
+    * ONE-ROW decimal-exact aggregate broadcast back, and
     * `numVertices` still skips the vertex count when the caller knows
     * N.
     *
@@ -65,7 +65,7 @@ object GraphOps {
     */
   def pageRank(edges: DataFrame, iterations: Int = 3,
       damping: Double = 0.85, numVertices: Option[Long] = None,
-      checkpointEvery: Int = 0, tol: Double = 0.0): DataFrame = {
+      tol: Double = 0.0): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping >= 0.0 && damping <= 1.0,
       s"damping must be in [0, 1], got $damping")
@@ -83,109 +83,93 @@ object GraphOps {
       if (integral(edges.schema("src").dataType) &&
         integral(edges.schema("dst").dataType)) "long"
       else "string"
-    // one shuffle builds the whole edge layout: clustering on src
-    // alone satisfies the (src, dst) dedup's distribution
-    // requirement, so repartition-then-dropDuplicates dedups
-    // partition-locally and the cached table comes out hash-
-    // partitioned on the join key (round-8 verdict item 3)
-    val e = edges.select(col("src").cast(keyType).as("src"),
-        col("dst").cast(keyType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .persist()
-    // distinct() leaves verts hash-partitioned on node — no extra
-    // exchange needed for the per-round joins
-    val verts = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    val n = numVertices.getOrElse(verts.count())
-    require(n > 0, "graph has no vertices")
-    val nD = n.toDouble
-    // zero-shuffle over the cached src-clustered edges; output stays
-    // hash-partitioned on the key
-    val outd = e.groupBy(col("src").as("node"))
-      .agg(F.count(lit(1)).as("__graft_deg")).persist()
-
-    // Dataset.unpersist only uncaches CacheManager entries;
-    // localCheckpoint persists at the RDD level, so releasing a
-    // round's blocks needs the persisted RDD itself (round-9 advice
-    // item — previously per-round rank blocks accumulated until the
-    // ContextCleaner GC'd them). The checkpointed Dataset's plan is a
-    // scan over that RDD: walk the (checkpoint-truncated, shuffle-
-    // free) dependency chain from `df.rdd` to the first persisted
-    // RDD and unpersist it directly. GraphSpec pins block release
-    // under a long iteration run.
-    def freeCheckpointBlocks(df: DataFrame): Unit = {
-      def walk(r: org.apache.spark.rdd.RDD[_], depth: Int): Unit =
-        if (depth < 8) {
-          if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-            r.unpersist(blocking = false)
-          else r.dependencies.foreach(d => walk(d.rdd, depth + 1))
+    // the edge layout, vertex set and out-degrees are cached for the
+    // call and released when the scope exits
+    Materialize.scope { s =>
+      // one shuffle builds the whole edge layout: clustering on src
+      // alone satisfies the (src, dst) dedup's distribution
+      // requirement, so repartition-then-dropDuplicates dedups
+      // partition-locally and the cached table comes out hash-
+      // partitioned on the join key (round-8 verdict item 3)
+      val e = s.persist(edges.select(col("src").cast(keyType).as("src"),
+          col("dst").cast(keyType).as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .repartition(col("src"))
+        .dropDuplicates("src", "dst"))
+      // distinct() leaves verts hash-partitioned on node — no extra
+      // exchange needed for the per-round joins
+      val verts = s.persist(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = numVertices.getOrElse(verts.count())
+      require(n > 0, "graph has no vertices")
+      val nD = n.toDouble
+      // zero-shuffle over the cached src-clustered edges; output stays
+      // hash-partitioned on the key
+      val outd = s.persist(e.groupBy(col("src").as("node"))
+        .agg(F.count(lit(1)).as("__graft_deg")))
+      var ranks = Materialize.checkpoint(
+        verts.withColumn("rank", lit(1.0 / nD)), eager = true)
+      var converged = false
+      // per-round joins pinned to SHUFFLED HASH on the NODES-SIZED side
+      // (round-15 A/B, superseding round-14's MERGE pin — VERDICT item
+      // 9): the pin itself exists because long node keys shrink size
+      // ESTIMATES under the auto-broadcast threshold and the planner
+      // then rebuilds a broadcast of ranks/outd/contribs EVERY round
+      // (collect + ship per iteration — measured 1.6× the whole op at
+      // the 2M-edge bench shape; at 100 TB a per-round rank broadcast
+      // is not even feasible). MERGE kept the no-broadcast guarantee
+      // but paid a per-round SORT of both sides; SHUFFLE_HASH keeps the
+      // guarantee without the sorts — measured 3.21 → 2.80 s (x1) and
+      // 6.0–6.3 → 5.43 s (x10), isolated min-of-2. The hint rides the
+      // nodes-sized side of every join (outd / the rank side / contribs
+      // — never the edge table), so the in-memory build is bounded by
+      // the SMALLER table's per-partition share — the standard SHJ
+      // safety condition; the edge table streams. (Building the EDGE
+      // side measured ~10% faster at this scale but puts the unbounded
+      // table in the no-spill build — rejected on the memory argument.)
+      for (_ <- 1 to iterations if !converged) {
+        val withDeg = ranks.join(outd.hint("SHUFFLE_HASH"), Seq("node"), "left")
+        // nodes with no out-edges: their rank mass redistributes
+        // uniformly (one-row decimal-exact aggregate, broadcast back)
+        val dangling = withDeg.filter(col("__graft_deg").isNull)
+          .agg(coalesce(F.sum(col("rank").cast(Num.DotDec)),
+            lit(0).cast(Num.DotDec)).cast(DoubleType).as("__graft_dmass"))
+        val contribs = withDeg.filter(col("__graft_deg").isNotNull)
+          .hint("SHUFFLE_HASH")
+          .join(e, col("node") === col("src"))
+          .groupBy(col("dst").as("node"))
+          .agg(F.sum((col("rank") / col("__graft_deg").cast(DoubleType))
+            .cast(Num.DotDec)).cast(DoubleType).as("__graft_contrib"))
+        val next = verts.join(contribs.hint("SHUFFLE_HASH"), Seq("node"), "left")
+          .crossJoin(F.broadcast(dangling))
+          .select(col("node"),
+            (lit((1.0 - damping) / nD) + lit(damping) *
+              (coalesce(col("__graft_contrib"), lit(0.0)) +
+                col("__graft_dmass") / lit(nD))).as("rank"))
+        // materialize the round (eager checkpoint) so the next
+        // round's plan starts from flat lineage, then release the
+        // previous round's blocks (the BPE/connectedComponents pattern)
+        val prev = ranks
+        ranks = Materialize.checkpoint(next, eager = true)
+        if (tol > 0) {
+          // convergence check: one-row L1 delta vs the previous round;
+          // both tables carry exactly the `verts` node set, so the
+          // delta equijoin co-partitions on the node key
+          val delta = ranks
+            .join(prev.select(col("node"), col("rank").as("__graft_prev")),
+              Seq("node"))
+            .agg(coalesce(F.sum(abs(col("rank") - col("__graft_prev"))
+              .cast(Num.DotDec)), lit(0).cast(Num.DotDec)).cast(DoubleType))
+            .head().getDouble(0)
+          if (delta < tol) converged = true
         }
-      walk(df.rdd, 0)
-    }
-    var ranks = verts.withColumn("rank", lit(1.0 / nD)).localCheckpoint()
-    var converged = false
-    // per-round joins pinned to SHUFFLED HASH on the NODES-SIZED side
-    // (round-15 A/B, superseding round-14's MERGE pin — VERDICT item
-    // 9): the pin itself exists because long node keys shrink size
-    // ESTIMATES under the auto-broadcast threshold and the planner
-    // then rebuilds a broadcast of ranks/outd/contribs EVERY round
-    // (collect + ship per iteration — measured 1.6× the whole op at
-    // the 2M-edge bench shape; at 100 TB a per-round rank broadcast
-    // is not even feasible). MERGE kept the no-broadcast guarantee
-    // but paid a per-round SORT of both sides; SHUFFLE_HASH keeps the
-    // guarantee without the sorts — measured 3.21 → 2.80 s (x1) and
-    // 6.0–6.3 → 5.43 s (x10), isolated min-of-2. The hint rides the
-    // nodes-sized side of every join (outd / the rank side / contribs
-    // — never the edge table), so the in-memory build is bounded by
-    // the SMALLER table's per-partition share — the standard SHJ
-    // safety condition; the edge table streams. (Building the EDGE
-    // side measured ~10% faster at this scale but puts the unbounded
-    // table in the no-spill build — rejected on the memory argument.)
-    for (_ <- 1 to iterations if !converged) {
-      val withDeg = ranks.join(outd.hint("SHUFFLE_HASH"), Seq("node"), "left")
-      // nodes with no out-edges: their rank mass redistributes
-      // uniformly (one-row decimal-exact aggregate, broadcast back)
-      val dangling = withDeg.filter(col("__graft_deg").isNull)
-        .agg(coalesce(F.sum(col("rank").cast(Num.DotDec)),
-          lit(0).cast(Num.DotDec)).cast(DoubleType).as("__graft_dmass"))
-      val contribs = withDeg.filter(col("__graft_deg").isNotNull)
-        .hint("SHUFFLE_HASH")
-        .join(e, col("node") === col("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(F.sum((col("rank") / col("__graft_deg").cast(DoubleType))
-          .cast(Num.DotDec)).cast(DoubleType).as("__graft_contrib"))
-      val next = verts.join(contribs.hint("SHUFFLE_HASH"), Seq("node"), "left")
-        .crossJoin(F.broadcast(dangling))
-        .select(col("node"),
-          (lit((1.0 - damping) / nD) + lit(damping) *
-            (coalesce(col("__graft_contrib"), lit(0.0)) +
-              col("__graft_dmass") / lit(nD))).as("rank"))
-      // materialize the round (eager localCheckpoint) so the next
-      // round's plan starts from flat lineage, then release the
-      // previous round's blocks (the BPE/connectedComponents pattern)
-      val prev = ranks
-      ranks = next.localCheckpoint()
-      if (tol > 0) {
-        // convergence check: one-row L1 delta vs the previous round;
-        // both tables carry exactly the `verts` node set, so the
-        // delta equijoin co-partitions on the node key
-        val delta = ranks
-          .join(prev.select(col("node"), col("rank").as("__graft_prev")),
-            Seq("node"))
-          .agg(coalesce(F.sum(abs(col("rank") - col("__graft_prev"))
-            .cast(Num.DotDec)), lit(0).cast(Num.DotDec)).cast(DoubleType))
-          .head().getDouble(0)
-        if (delta < tol) converged = true
+        // release the previous round's checkpoint blocks (RDD-level)
+        Materialize.release(prev)
       }
-      // release the previous round's checkpoint blocks (RDD-level)
-      freeCheckpointBlocks(prev)
+      // the result is checkpointed (lineage-free): the iteration's
+      // cached layout releases with the scope
+      ranks
     }
-    // the result is checkpointed (lineage-free): the iteration's
-    // cached layout can release before returning
-    e.unpersist(); verts.unpersist(); outd.unpersist()
-    ranks
   }
 
   /** DuckDB replay of [[pageRank]] as unrolled CTEs over an edge

@@ -29,18 +29,17 @@ object LangModel {
     */
   def unigramCounts(ref: DataFrame, text: Column,
       sep: String = " "): DataFrame =
-    ref.select(explode(split(text, java.util.regex.Pattern.quote(sep)))
-        .as("token"))
-      .filter(col("token") =!= "")
-      .groupBy("token")
-      .agg(F.count(lit(1)).as("cnt"))
-      // the LM is a reused artifact: [[totalTokens]]'s action plus
-      // one or two broadcast lookups per scorer ([[scoreByBigram]]
-      // probes it for the token AND its predecessor) — a lazy
-      // localCheckpoint runs the reference-corpus count pass once per
-      // model instead of once per consumer (round-14); the table is
-      // vocabulary-sized
-      .localCheckpoint(false)
+    // the LM is a reused artifact: [[totalTokens]]'s action plus one
+    // or two broadcast lookups per scorer ([[scoreByBigram]] probes it
+    // for the token AND its predecessor) — a lazy checkpoint runs the
+    // reference-corpus count pass once per model instead of once per
+    // consumer (round-14); the table is vocabulary-sized
+    Materialize.checkpoint(
+      ref.select(explode(split(text, java.util.regex.Pattern.quote(sep)))
+          .as("token"))
+        .filter(col("token") =!= "")
+        .groupBy("token")
+        .agg(F.count(lit(1)).as("cnt")), eager = false)
 
   /** Total token count of a counts table (one tiny aggregation —
     * an action; pass the result into [[scoreByUnigram]] so the scorer

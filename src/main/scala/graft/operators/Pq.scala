@@ -141,16 +141,16 @@ object Pq {
         (code, v.slice(j * dsub, (j + 1) * dsub))
       }.toSeq
     }
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to iters) Materialize.scope { s =>
       // one pass assigns every subspace; materialize the argmins
       // BEFORE the explodes (the ivfCentroids CollapseProject lesson:
       // a Generate would re-evaluate the k-way argmin per exploded
       // element — dim× the most expensive expression in the loop)
-      val assigned = c.select(array((0 until m).map { j =>
+      val assigned = s.persist(c.select(array((0 until m).map { j =>
         struct(lit(j).as("sub"),
           nearestCode(col("nv"), j, dim, dsub, books(j), exact).as("code"),
           subVec(col("nv"), j, dsub).as("sv"))
-      }: _*).as("__a")).persist()
+      }: _*).as("__a")))
       val means = assigned
         .select(explode(col("__a")).as("a"))
         // NaN components pass the length/null validity filter but
@@ -166,7 +166,6 @@ object Pq {
         .map(r => ((r.getInt(0), r.getInt(1)), (r.getInt(2), r.getDouble(3))))
         .groupBy(_._1)
         .map { case (k, xs) => (k, xs.map(_._2).sortBy(_._1).map(_._2).toSeq) }
-      assigned.unpersist()
       books = (0 until m).map { j =>
         books(j).map { case (code, prev) =>
           (code, means.getOrElse((j, code), prev))

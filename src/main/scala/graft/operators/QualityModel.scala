@@ -60,10 +60,9 @@ object QualityModel {
     require(lr > 0.0, s"lr must be positive, got $lr")
     val spark = df.sparkSession
     import spark.implicits._
-    val feats = features(df, id, text, Some(label), dim, grams)
-      .repartition(col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scope { s =>
+      val feats = s.persist(features(df, id, text, Some(label), dim, grams)
+        .repartition(col("doc_id")))
       val nDocs = feats.select(col("doc_id")).distinct().count()
       require(nDocs > 0, "no documents with features to train on")
       val nD = nDocs.toDouble
@@ -95,7 +94,7 @@ object QualityModel {
         }
       }
       weights.toSeq.toDF("bucket", "weight")
-    } finally feats.unpersist()
+    }
   }
 
   /** Score documents under a trained (double-weight) model — the

@@ -453,30 +453,34 @@ object Reshape {
     * high-cardinality id column must not be forced through a driver
     * broadcast). Appends `name` (int); callers needing the uniques
     * use the companion [[factorizeTable]].
+    *
+    * The uniques table is materialized once, eagerly, by
+    * [[Materialize.checkpoint]]. With a session checkpoint dir it is
+    * written there, so an executor loss re-reads the files. Without
+    * one its blocks are executor-local: losing an executor before the
+    * result is consumed fails the downstream action instead of
+    * recomputing (acceptable for a bounded one-row-per-category
+    * table), and the blocks release via the ContextCleaner once the
+    * result's RDD is unreferenced.
     */
   def factorize(df: DataFrame, c: Column, ord: Column,
       name: String = "code",
       maxBroadcastCategories: Long = 1L << 20): DataFrame = {
     require(maxBroadcastCategories >= 1,
       s"maxBroadcastCategories must be >= 1, got $maxBroadcastCategories")
-    // eager localCheckpoint on the bounded uniques table: the
-    // groupBy + global sort + zipWithIndex lineage executes exactly
-    // ONCE and both the shape-picking count and the join back read
-    // the checkpointed blocks — previously each re-ran the full
-    // pipeline, a deterministic cost only masked by shuffle-file
-    // reuse (round-9 advice item). localCheckpoint, NOT persist:
-    // Dataset.persist registers the plan in the CacheManager, which
-    // holds a strong reference until the session ends, so an
-    // un-unpersisted cache here would leak one uniques table per
-    // factorize call for the session lifetime (round-10 advice item);
-    // checkpoint blocks have no CacheManager entry and release via
-    // the ContextCleaner as soon as the result's RDD is unreferenced.
-    // Caveat (inherent to localCheckpoint): the table's lineage is
-    // truncated, so an executor loss before the result is consumed
-    // fails the downstream action instead of recomputing — acceptable
-    // for a bounded one-row-per-category table.
-    val tbl = factorizeTable(df, c, ord, name)
-      .withColumnRenamed("value", "__graft_fv").localCheckpoint()
+    // eager checkpoint on the bounded uniques table: the groupBy +
+    // global sort + zipWithIndex lineage executes exactly ONCE and
+    // both the shape-picking count and the join back read the
+    // checkpointed blocks — previously each re-ran the full pipeline,
+    // a deterministic cost only masked by shuffle-file reuse (round-9
+    // advice item). A checkpoint, NOT persist: Dataset.persist
+    // registers the plan in the CacheManager, which holds a strong
+    // reference until the session ends, so an un-unpersisted cache
+    // here would leak one uniques table per factorize call for the
+    // session lifetime (round-10 advice item); the result outlives the
+    // call, so no scope could release it either.
+    val tbl = Materialize.checkpoint(factorizeTable(df, c, ord, name)
+      .withColumnRenamed("value", "__graft_fv"), eager = true)
     // one bounded count over the checkpointed uniques table picks the
     // join shape
     val keyed = if (tbl.count() <= maxBroadcastCategories) F.broadcast(tbl)

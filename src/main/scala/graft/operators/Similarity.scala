@@ -421,17 +421,16 @@ object Similarity {
       .zipWithIndex
       .map { case (v, i) => (i, v) }
       .toSeq
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to iters) Materialize.scope { s =>
       // materialize the assignment BEFORE the positional explode:
       // CollapseProject would otherwise merge the k-centroid argmax
       // into the post-Generate projection and re-evaluate it once per
       // EXPLODED element — a dim× blowup of the most expensive
       // expression in the loop (observed as a ~64× slowdown at
       // k = 160). The persisted frame is (cid, vector) — corpus-sized
-      // but narrow — and is dropped right after the mean aggregation.
-      val assigned = c
-        .select(nearestCid(col("nv"), centroids, exact).as("cid"), col("nv"))
-        .persist()
+      // but narrow — and is released with the round's scope.
+      val assigned = s.persist(c
+        .select(nearestCid(col("nv"), centroids, exact).as("cid"), col("nv")))
       centroids = assigned
         .select(col("cid"), posexplode(col("nv")).as(Seq("pos", "x")))
         .groupBy("cid", "pos")
@@ -447,7 +446,6 @@ object Similarity {
         .map { case (cid, xs) => (cid, xs.sortBy(_._2).map(_._3).toSeq) }
         .toSeq
         .sortBy(_._1)
-      assigned.unpersist()
     }
     centroids
   }

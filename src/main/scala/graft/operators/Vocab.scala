@@ -106,8 +106,9 @@ object Vocab {
     * TakeOrdered(1) for the argmax (a one-row bounded action per
     * round, like the IVF centroid probe), then a row-local
     * left-to-right fold rewrites the symbol arrays. Each round
-    * localCheckpoints the vocab-sized table so K rounds keep constant
-    * lineage (the dedup-clusters pattern).
+    * checkpoints the vocab-sized table ([[Materialize.checkpoint]]) so
+    * K rounds keep constant lineage (the dedup-clusters pattern), and
+    * releases the previous round's blocks.
     */
   def learnBpeMerges(df: DataFrame, text: Column, rounds: Int,
       minPairFreq: Long = 1L, sep: String = " "): DataFrame = {
@@ -115,12 +116,11 @@ object Vocab {
     require(minPairFreq >= 1, s"minPairFreq must be >= 1, got $minPairFreq")
     val spark = df.sparkSession
     import spark.implicits._
-    var cur = df
+    var cur = Materialize.checkpoint(df
       .select(explode(split(text, java.util.regex.Pattern.quote(sep))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(F.count(lit(1)).as("freq"))
-      .select(split(col("word"), "").as("syms"), col("freq"))
-      .localCheckpoint()
+      .select(split(col("word"), "").as("syms"), col("freq")), eager = true)
     val merges = scala.collection.mutable.Buffer.empty[(Int, String, String, String, Long)]
     var done = false
     for (r <- 1 to rounds if !done) {
@@ -140,17 +140,19 @@ object Vocab {
         val b = pairTop.head.getAs[String]("b")
         merges += ((r, a, b, a + b, pairTop.head.getAs[Long]("pf")))
         // release the PREVIOUS round's checkpoint blocks once the new
-        // round's checkpoint has materialized (the eager
-        // localCheckpoint cuts lineage, so the old blocks are dead) —
-        // otherwise checkpointed partitions accumulate linearly with
-        // merge rounds, material at realistic BPE vocab sizes
-        // (thousands of merges); the connectedComponents pattern
+        // round's checkpoint has materialized (the eager checkpoint
+        // cuts lineage, so the old blocks are dead) — otherwise
+        // checkpointed partitions accumulate linearly with merge
+        // rounds, material at realistic BPE vocab sizes (thousands of
+        // merges); the connectedComponents pattern
         val prev = cur
-        cur = cur.withColumn("syms", mergePair(col("syms"), a, b))
-          .localCheckpoint()
-        prev.unpersist()
+        cur = Materialize.checkpoint(
+          cur.withColumn("syms", mergePair(col("syms"), a, b)), eager = true)
+        Materialize.release(prev)
       }
     }
+    // the result is driver-built: the last round's table is dead too
+    Materialize.release(cur)
     merges.toSeq.toDF("merge_rank", "left", "right", "merged", "pair_freq")
   }
 

@@ -167,14 +167,11 @@ class CurationSpec extends AnyFunSuite {
       org.apache.spark.sql.types.LongType)
   }
 
-  test("pageRank: two-node cycle is the uniform fixed point; checkpointing changes nothing") {
+  test("pageRank: two-node cycle is the uniform fixed point") {
     val e = Seq("x" -> "y", "y" -> "x").toDF("src", "dst")
     val r = GraphOps.pageRank(e, iterations = 5).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(math.abs(r("x") - 0.5) < 1e-9 && math.abs(r("y") - 0.5) < 1e-9)
-    val rc = GraphOps.pageRank(e, iterations = 5, checkpointEvery = 2)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(rc === r)
   }
 
   test("pageRank releases each round's checkpoint blocks eagerly (round-9 advice)") {
@@ -205,6 +202,36 @@ class CurationSpec extends AnyFunSuite {
     assert(bytes < 64L * 1024,
       s"$bytes bytes of rank blocks remain after a 12-round run — " +
         "more than one round's result is still resident")
+  }
+
+  test("connectedComponents releases each round's checkpoint blocks") {
+    // the pageRank pin for the star rounds: a 64-vertex path takes
+    // several rounds, each checkpointed; Dataset.unpersist would leave
+    // every one of them registered. Only the returned result's final
+    // round may still hold blocks.
+    val sc = spark.sparkContext
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("x", "y")
+    val before = sc.getPersistentRDDs.keySet
+    val r = graft.operators.Dedup.connectedComponents(edges, col("x"), col("y"))
+    assert(r.count() === 64)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.size <= 1,
+      s"${leaked.size} persisted RDDs remain after connectedComponents — " +
+        "per-round checkpoint blocks are accumulating instead of being freed")
+  }
+
+  test("learnBpeMerges releases every round's checkpoint blocks") {
+    // the merge list is driver-built, so no round's vocab table may
+    // outlive the call — the last round's included
+    val sc = spark.sparkContext
+    val d = Seq((1L, "low low low lower lowest"), (2L, "newest newest"))
+      .toDF("doc_id", "text")
+    val before = sc.getPersistentRDDs.keySet
+    val m = graft.operators.Vocab.learnBpeMerges(d, col("text"), 6)
+    assert(m.count() === 6)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty,
+      s"${leaked.size} persisted RDDs remain after learnBpeMerges")
   }
 
   test("pageRank validates its arguments") {
@@ -352,37 +379,6 @@ class CurationSpec extends AnyFunSuite {
         left, col("id"), col("name"), right, col("id"), col("name"), maxDist = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
     assert(out === Set((1L, 10L, 1), (3L, 40L, 0)))
-  }
-
-  test("fuzzyJoin under a reliable checkpoint dir: same output, all caches released") {
-    // round-11 advice item 1: with a checkpoint dir set, the pair
-    // table is persisted around the eager reliable checkpoint so the
-    // checkpoint-write job reads cached blocks instead of recomputing
-    // the candidate pipeline — and the persist is released in a
-    // finally. This pins (a) output identity with the local path and
-    // (b) zero lingering persisted RDDs (l0/r0/aux AND the pair-table
-    // persist; the checkpoint's own blocks live in the dir, not the
-    // block manager).
-    val sc = spark.sparkContext
-    val left = Seq((1L, "Widget Alpha"), (2L, "Gadget Beta"), (3L, "Gizmo"))
-      .toDF("id", "name")
-    val right = Seq((10L, "widget alpja"), (20L, "Xadget Beta"),
-      (30L, "gizmo XL"), (40L, "GIZMO ")).toDF("id", "name")
-    def run(): Set[(Long, Long, Int)] = graft.operators.Joins.fuzzyJoin(
-        left, col("id"), col("name"), right, col("id"), col("name"),
-        maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
-    val localOut = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-")
-    sc.setCheckpointDir(dir.toString)
-    try {
-      val before = sc.getPersistentRDDs.keySet
-      assert(run() === localOut)
-      val leaked = sc.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty,
-        s"${leaked.size} persisted RDDs remain after a checkpointed " +
-          "fuzzyJoin — the pair-table persist or a projection leaked")
-    } finally sc.setCheckpointDir(null)
   }
 
   test("fuzzyJoin length-band adjacency: a one-char insertion across a bin boundary still matches") {

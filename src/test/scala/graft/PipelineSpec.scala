@@ -943,32 +943,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(capped.head.getAs[Double]("jaccard") === 1.0)
   }
 
-  test("ngram shingle table takes the reliable checkpoint under a checkpoint dir: same pairs, no leaked persists (round-15)") {
-    // scale-safety policy (round-14 verdict item 4): with a reliable
-    // checkpoint dir configured — the cluster deployment posture —
-    // the corpus-sized capped/prefix shingle table materializes to
-    // checkpoint files (survives executor loss) instead of executor-
-    // local blocks; values are identical and the guard persist is
-    // released. Local mode (no dir) keeps the lazy localCheckpoint.
-    val sc = spark.sparkContext
-    def run(prefix: Boolean): Map[(Long, Long), Double] =
-      Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"),
-        n = 2, threshold = 0.5, maxDocFreq = Some(30),
-        prefixFilter = prefix)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val localOut = (run(false), run(true))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-ngram-")
-    sc.setCheckpointDir(dir.toString)
-    try {
-      val before = sc.getPersistentRDDs.keySet
-      assert((run(false), run(true)) === localOut)
-      val leaked = sc.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty,
-        s"${leaked.size} persisted RDDs remain after a checkpointed " +
-          "ngramJaccardPairs — the shingle guard persist leaked")
-    } finally sc.setCheckpointDir(null)
-  }
-
   test("prefix-filtered ngram jaccard is lossless vs the all-pairs path") {
     // prefix filtering must return the IDENTICAL pair set and scores —
     // across thresholds (prefix length depends on t), with and without
