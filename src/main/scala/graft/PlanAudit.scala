@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.{Dedup, GroupBy, Margins, Reshape}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Representative operator plans with their scale invariants, shared by
@@ -40,6 +42,15 @@ object PlanAudit {
     *    SortMergeJoin/CartesianProduct) — the ADC shape: every corpus
     *    row meets every query, queries are the small side, the corpus
     *    never shuffles.
+    *  - `cacheLocal`: the plan reads a cache and no Exchange sits
+    *    between its root and the cache reads — set on the
+    *    [[GroupBy.persisted]] plans, whose cache is range-partitioned
+    *    and sorted by the keys once, so every key distribution and key
+    *    ordering the plan needs is already there.
+    *  - `oneJob`: a warm run is exactly one Spark job (no sampling job
+    *    for a range exchange).
+    *  - `noSort`: no Sort operator outside the cache.
+    *  - `joinFree`: no join operator of any kind.
     */
   final case class Audited(
       name: String,
@@ -51,7 +62,21 @@ object PlanAudit {
       broadcastProbe: Boolean = false,
       windowGroupLimit: Boolean = false,
       takeOrdered: Boolean = false,
-      broadcastScan: Boolean = false)
+      broadcastScan: Boolean = false,
+      cacheLocal: Boolean = false,
+      oneJob: Boolean = false,
+      noSort: Boolean = false,
+      joinFree: Boolean = false)
+
+  /** Every operator of a physical plan outside its cached relations:
+    * the walk stops at each InMemoryTableScan and looks through AQE's
+    * wrapper and query stages.
+    */
+  def operators(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+    case q: QueryStageExec => q +: operators(q.plan)
+    case p => p +: p.children.flatMap(operators)
+  }
 
   def plans(spark: SparkSession, dir: String): Seq[Audited] = {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
@@ -68,6 +93,10 @@ object PlanAudit {
       case _ => (ev0.withColumn("ts", unix_micros(col("ts"))), 21600000000L)
     }
     val liKeys = Seq(col("l_returnflag"), col("l_linestatus"))
+    // filled up front: under AQE a plan sees the cache's layout only
+    // once the cache is filled
+    val evCached = new GroupBy(ev, Seq(col("user_id"))).persisted
+    evCached.df.count()
 
     Seq(
       Audited("masked grouped agg (q1 shape)",
@@ -337,6 +366,15 @@ object PlanAudit {
             nCentroids = 4, nProbe = 2, ivfIters = 1)
         },
         noSinglePartition = true, broadcastProbe = true),
+      Audited("persisted sorted sum (range-partitioned, key-sorted cache: no exchange, one job)",
+        evCached.sum(Seq(col("value"))),
+        cacheLocal = true, oneJob = true),
+      Audited("persisted transform mean (key window over the key-sorted cache: no sort)",
+        evCached.mean(Seq(col("value")), transform = true),
+        cacheLocal = true, noSort = true),
+      Audited("persisted ewm mean (one fold over whole rows: no join-back, no exchange)",
+        new graft.operators.RollingOps(evCached).ewmMean(col("value"), col("ts"), 0.25),
+        cacheLocal = true, joinFree = true),
       Audited("resample (one (keys, bucket) hash agg + summary-sized bin-domain equijoin)",
         graft.operators.Resample.resample(
           new GroupBy(ev, Seq(col("user_id"))), col("ts"), 21600000000000L,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -36,10 +37,14 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   *
   * Scale shape: an ewm is a linear recurrence — irreducibly
   * sequential per key — so this is the funnel pattern: ONE
-  * `groupBy(keys)` shuffle, a row-local sorted fold over each key's
-  * history, posexplode, and a co-partitioned join back on
-  * (keys, ord). Per-key state is its (ord, value) history; keys with
-  * histories too large for one task should be pre-thinned or
+  * `groupBy(keys)`, a row-local sorted fold over each key's history,
+  * and an explode that brings every row back out beside its output.
+  * The collected rows are whole rows (ord, value and the input's
+  * other columns), so there is no join back on (keys, ord) and no
+  * second shuffle; over a [[GroupBy.persisted]] cache, which is
+  * range-partitioned and sorted by the keys once, the groupBy itself
+  * needs no exchange. Per-key state is that key's whole rows; keys
+  * with histories too large for one task should be pre-thinned or
   * time-sessionized first (same contract as Funnel.funnel). No
   * window-rescaling trick survives unbounded spans: the prefix-sum
   * form needs `(1-α)^(-rank)`, which overflows double past
@@ -77,43 +82,59 @@ object Ewm {
     1.0 - math.exp(-math.log(2.0) / halflife)
   }
 
-  /** See object doc. `ord` must be non-null and unique within each
-    * group (it is also the join-back key); value casts to double.
+  /** See object doc. `ord` must be non-null on every grouped row and
+    * unique within each group (it orders the fold); value casts to
+    * double. The per-key fold is ONE native O(n) pass
+    * ([[org.apache.spark.sql.graft.EwmMeanFold]]) — the same IEEE
+    * operation sequence as the DuckDB replay [[meanSql]].
     */
   def mean(gb: GroupBy, value: Column, ord: Column, alpha: Double,
       adjust: Boolean = true, ignoreNa: Boolean = false,
       name: String = "ewm_mean"): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    val f = 1.0 - alpha
-    val nw = if (adjust) 1.0 else alpha
+    foldRows(gb, value, ord, name)(rows =>
+      org.apache.spark.sql.graft.FoldExpressions.ewmMeanFold(
+        rows, alpha, adjust, ignoreNa))
+  }
+
+  /** The shape [[mean]] and [[variance]] share: ONE `groupBy(keys)`
+    * collects each grouped row whole — `(__ord, __v, __p)`, where the
+    * payload `__p` holds the row's non-key columns — sorts the rows by
+    * ord, runs `fold` over them and explodes each payload back out
+    * beside its output. Null-key rows that `gb.base` drops come back
+    * through a union with a null output. Output columns: the keys, the
+    * input's other columns in order, then `name`.
+    */
+  private def foldRows(gb: GroupBy, value: Column, ord: Column,
+      name: String)(fold: Column => Column): DataFrame = {
     val keyC = gb.keyNames.map(col)
+    val restNames = gb.dfWithKeys.columns.toSeq.filterNot(gb.keyNames.contains)
+    val rest = restNames.map(c => col(s"`$c`"))
     val checkedOrd = when(ord.isNull, raise_error(lit(
       "graft: ewm requires a non-null ord on every grouped row")))
       .otherwise(ord)
-    val sub = gb.base
-      .select(keyC :+ checkedOrd.as("__ord") :+
-        value.cast(DoubleType).as("__v"): _*)
-    // the per-key fold runs as ONE native O(n) pass
-    // ([[org.apache.spark.sql.graft.EwmMeanFold]], round-14): the
-    // previous declarative `aggregate` lambda appended each output
-    // with an array concat — O(n²) copies per key — and executed
-    // interpreted per element. The native fold is the same IEEE
-    // operation sequence (seed / stepwise decay / blend), so outputs
-    // are bit-identical (EwmSpec pins the equality; the DuckDB replay
-    // [[meanSql]] is unchanged).
-    def outsOf(rows: Column): Column =
-      org.apache.spark.sql.graft.FoldExpressions.ewmMeanFold(
-        rows, alpha, adjust, ignoreNa)
-    val perKey = sub.groupBy(keyC: _*)
-      .agg(sort_array(F.collect_list(struct(col("__ord"), col("__v"))))
-        .as("__rows"))
-      .select(keyC :+ explode(zip_with(col("__rows"), outsOf(col("__rows")),
-        (r, o) => struct(r.getField("__ord").as("__ord"), o.as(name)))).as("__e"): _*)
-      .select(keyC :+ col("__e.__ord").as("__ord") :+ col(s"__e.$name"): _*)
-    gb.dfWithKeys
-      .withColumn("__ord", ord)
-      .join(perKey, gb.keyNames :+ "__ord", "left")
-      .drop("__ord")
+    val payload = struct(rest: _*)
+    val rows = F.collect_list(struct(checkedOrd.as("__ord"),
+      value.cast(DoubleType).as("__v"), payload.as("__p")))
+    // sort_array compares whole structs, which (ord, value) settle when
+    // ord is unique; a payload that cannot be ordered (a map column)
+    // sorts through an ord-only comparator instead
+    val sorted =
+      if (RowOrdering.isOrderable(gb.dfWithKeys.select(payload).schema.head.dataType))
+        sort_array(rows)
+      else array_sort(rows, (l, r) => {
+        val (a, b) = (l.getField("__ord"), r.getField("__ord"))
+        when(a < b, -1).when(a > b, 1).otherwise(0)
+      })
+    val folded = gb.base.groupBy(keyC: _*).agg(sorted.as("__rows"))
+      .select(keyC :+ explode(zip_with(col("__rows"), fold(col("__rows")),
+        (r, o) => struct(r.getField("__p").as("__p"), o.as(name)))).as("__e"): _*)
+      .select(keyC ++ restNames.map(c => col("__e.__p").getField(c).as(c)) :+
+        col("__e").getField(name).as(name): _*)
+    if (!gb.dropNullKeys) folded
+    else folded.union(gb.dfWithKeys
+      .filter(!gb.keyNames.map(col(_).isNotNull).reduce(_ && _))
+      .select(keyC ++ rest :+ lit(null).cast(DoubleType).as(name): _*))
   }
 
   /** Exponentially weighted variance — pandas `ewm(alpha).var()`
@@ -127,8 +148,9 @@ object Ewm {
     * (`bias = true` emits cov itself), null while fewer than
     * `max(minPeriods, 1)` values have arrived or when the debias
     * denominator is ≤ 0 (a single value has no spread). Same scale
-    * contract as [[mean]]: one groupBy shuffle, sorted fold,
-    * join-back; bit-exact replay via [[varianceSql]].
+    * contract as [[mean]]: one groupBy, a sorted fold over each key's
+    * whole rows, explode — no join-back; bit-exact replay via
+    * [[varianceSql]].
     */
   def variance(gb: GroupBy, value: Column, ord: Column, alpha: Double,
       adjust: Boolean = true, ignoreNa: Boolean = false,
@@ -136,35 +158,14 @@ object Ewm {
       name: String = "ewm_var"): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
     require(minPeriods >= 0, s"minPeriods must be >= 0, got $minPeriods")
-    val f = 1.0 - alpha
-    val nw = if (adjust) 1.0 else alpha
-    val minp = math.max(minPeriods, 1)
-    val keyC = gb.keyNames.map(col)
-    val checkedOrd = when(ord.isNull, raise_error(lit(
-      "graft: ewm requires a non-null ord on every grouped row")))
-      .otherwise(ord)
-    val sub = gb.base
-      .select(keyC :+ checkedOrd.as("__ord") :+
-        value.cast(DoubleType).as("__v"): _*)
-    // ONE native O(n) pass ([[org.apache.spark.sql.graft.EwmVarFold]],
-    // round-15 — the EwmMeanFold treatment): the declarative
-    // `aggregate` lambda below is retained ONLY as the differential
+    // ONE native O(n) pass ([[org.apache.spark.sql.graft.EwmVarFold]]);
+    // [[varianceOutsDeclarative]] is retained ONLY as the differential
     // reference (DifferentialSpec pins bit-equality on randomized null
     // patterns; the 6-field state is where operation-order risk
-    // concentrates, so the pin is the proof).
-    def outsOf(rows: Column): Column =
+    // concentrates, so the pin is the proof)
+    foldRows(gb, value, ord, name)(rows =>
       org.apache.spark.sql.graft.FoldExpressions.ewmVarFold(
-        rows, alpha, adjust, ignoreNa, bias, minPeriods)
-    val perKey = sub.groupBy(keyC: _*)
-      .agg(sort_array(F.collect_list(struct(col("__ord"), col("__v"))))
-        .as("__rows"))
-      .select(keyC :+ explode(zip_with(col("__rows"), outsOf(col("__rows")),
-        (r, o) => struct(r.getField("__ord").as("__ord"), o.as(name)))).as("__e"): _*)
-      .select(keyC :+ col("__e.__ord").as("__ord") :+ col(s"__e.$name"): _*)
-    gb.dfWithKeys
-      .withColumn("__ord", ord)
-      .join(perKey, gb.keyNames :+ "__ord", "left")
-      .drop("__ord")
+        rows, alpha, adjust, ignoreNa, bias, minPeriods))
   }
 
   /** The pre-round-15 declarative fold of [[variance]] — kept ONLY as

@@ -48,10 +48,12 @@ final case class AggSpec(
   * grouping of `df` by `keys` over which many aggregations can run.
   *
   * Design notes (Spark-first, not a port):
-  *   - The reference factorizes keys once and reuses the codes; the
-  *     Spark equivalent of "reuse the factorization" is reusing a
-  *     key-partitioned, persisted DataFrame — [[persisted]] — so
-  *     repeated aggregations skip the shuffle. Catalyst owns
+  *   - The reference factorizes keys once into a sorted result index
+  *     and reuses it; the Spark equivalent of "reuse the
+  *     factorization" is [[persisted]]: the rows are range-partitioned
+  *     and sorted by the keys once and cached, so repeated
+  *     aggregations — sorted results included — and key windows run
+  *     with no shuffle and no sort of the keys. Catalyst owns
   *     everything else the reference hand-built (partial/final
   *     aggregation, chunking, thread budgets; see SURVEY §4).
   *   - `mask` is an inline filter evaluated *inside* the aggregate
@@ -103,13 +105,25 @@ final class GroupBy(
       dfWithKeys.filter(keyNames.map(col(_).isNotNull).reduce(_ && _))
     else dfWithKeys
 
-  /** The "reuse the factorization" lever at cluster scale: hash-
-    * partition by the keys once and persist, so every subsequent
-    * aggregation on this GroupBy is shuffle-free map-side work.
+  /** The "reuse the factorization" lever at cluster scale: the rows
+    * are range-partitioned and sorted by the keys once, then
+    * persisted. The cache's range partitioning satisfies both the
+    * clustered distribution of `groupBy(keys)` / `partitionBy(keys)`
+    * and the ordered distribution of the `sort = true` result, and its
+    * within-partition order is the key sort a key window needs — so a
+    * sorted aggregation is one job with no exchange, a `transform`
+    * window sorts nothing, and ord windows sort rows already in key
+    * order. Paid once, when the cache is filled: a sampling job for
+    * the range bounds and one sort. Under adaptive execution a plan
+    * sees the layout only once the cache is filled (by the first
+    * action on it). A join of [[df]] against a hash-partitioned frame
+    * can no longer shuffle just one side (range and hash layouts are
+    * not co-partitioned).
     */
   def persisted: GroupBy = {
-    val g = new GroupBy(base.repartition(keyCols: _*).persist(), keyCols,
-      sort, dropNullKeys)
+    val g = new GroupBy(
+      base.repartitionByRange(keyCols: _*).sortWithinPartitions(keyCols: _*).persist(),
+      keyCols, sort, dropNullKeys)
     g.ownsCache = true
     g
   }
@@ -428,7 +442,8 @@ final class GroupBy(
     * tiny next to the corpus, so the input is clipped map-side with
     * ZERO shuffle of the data rows; pass `broadcastQuantiles = false`
     * at extreme group cardinalities and the join falls back to a
-    * hash shuffle on the keys (both sides co-partition).
+    * hash shuffle on the keys (both sides co-partition). On a
+    * [[persisted]] GroupBy that join shuffles both sides, cache included.
     */
   def winsorize(value: Column, lo: Double = 0.01, hi: Double = 0.99,
       out: String = "winsorized",
@@ -811,7 +826,8 @@ final class GroupBy(
     * rejoins the input BROADCAST by default (the winsorize pattern):
     * the data rows are standardized map-side with zero shuffle. A
     * whole-partition window would serialize each hot key on one task;
-    * this shape never does.
+    * this shape never does. With `broadcastStats = false` on a
+    * [[persisted]] GroupBy the join shuffles both sides, cache included.
     */
   def zscore(value: Column, ddof: Int = 1, out: String = "zscore",
       broadcastStats: Boolean = true): DataFrame = {
@@ -835,7 +851,8 @@ final class GroupBy(
 
   /** Per-group min-max scaling transform: `(x − min)/(max − min)` in
     * [0, 1], null where the group range is zero or x is null. Same
-    * broadcast-stats shape as [[zscore]].
+    * broadcast-stats shape as [[zscore]], and the same two-sided
+    * shuffle with `broadcastStats = false` on a [[persisted]] GroupBy.
     */
   def minmaxScale(value: Column, out: String = "scaled",
       broadcastStats: Boolean = true): DataFrame = {

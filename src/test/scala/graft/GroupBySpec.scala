@@ -335,10 +335,70 @@ class GroupBySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { g.groupsOf(col("id"), maxGroupSize = 0) }
   }
 
+  /** The perfbench reuse table in miniature: keys (k1, k2), a unique
+    * order `ts`, three nullable values on a half-integer grid (so every
+    * sum is exact whatever the row order) and a boolean mask; with
+    * `nullKeys` some rows carry a null k1 or k2.
+    */
+  private def reuseFixture(nullKeys: Boolean): DataFrame =
+    (0 until 48).map { i =>
+      val k1 = if (nullKeys && i % 11 == 3) None else Some(i % 3)
+      val k2 = if (nullKeys && i % 13 == 5) None else Some(s"s${i % 2}")
+      def v(j: Int) = if ((i + j) % 7 == 0) None else Some(((i * (j + 3)) % 17 - 8) / 2.0)
+      (k1, k2, i.toLong, v(1), v(2), v(3), i % 3 != 1)
+    }.toDF("k1", "k2", "ts", "v1", "v2", "v3", "m")
+
   test("persisted GroupBy returns identical results") {
-    val p = gb.persisted
-    assert(asMap(p.sum(Seq(col("value")))) === asMap(gb.sum(Seq(col("value")))))
-    p.df.unpersist()
+    import graft.api.Implicits._
+    import graft.operators.Reshape
+    val (v1, v2, v3, m, ts) = (col("v1"), col("v2"), col("v3"), col("m"), col("ts"))
+    // the 13 perfbench reuse request kinds; the grouped kinds return
+    // key-ordered results when `sort`, the windowed ones input rows
+    val grouped: Seq[(String, GroupBy => DataFrame)] = Seq(
+      "sum_masked" -> (_.sum(Seq(v1, v2), mask = Some(m))),
+      "mean_masked" -> (_.mean(Seq(v1, v2), mask = Some(m))),
+      "min_max" -> (_.agg(Seq("min", "max"), Seq(v1, v2))),
+      "std" -> (_.std(Seq(v1))),
+      "nunique" -> (_.nunique(Seq(round(v3, 1).as("v3r")))),
+      "size_margins" -> (_.size(margins = Margins.All)),
+      "crosstab" -> (g => Reshape.crosstab(g.df, Seq(col("k1")), col("k2"),
+        margins = Margins.All)))
+    val windowed: Seq[(String, GroupBy => DataFrame)] = Seq(
+      "transform_mean" -> (_.mean(Seq(v1), transform = true)),
+      "rolling_sum" -> (_.rolling(5, Some(1)).sum(v1, ts)),
+      "rolling_mean" -> (_.rolling(5, Some(1)).mean(v2, ts)),
+      "cumsum" -> (_.windows.cumsum(v1, ts)),
+      "cummax" -> (_.windows.cummax(v2, ts)),
+      "ewm_mean" -> (_.windows.ewmMean(v3, ts, alpha = 0.25)))
+    // doubles agree to 1e-12 (std's moment merge is order-dependent)
+    def close(a: Row, b: Row): Boolean = a.length == b.length &&
+      a.toSeq.zip(b.toSeq).forall {
+        case (x: Double, y: Double) =>
+          x == y || math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(y))
+        case (x, y) => x == y
+      }
+    def rows(d: DataFrame, ordered: Boolean): Seq[Row] = {
+      val rs = d.collect().toSeq
+      if (ordered) rs else rs.sortBy(_.toString)
+    }
+    // (label, sort, dropNullKeys, fixture, request kinds)
+    val variants = Seq(
+      ("sorted", true, true, reuseFixture(false), grouped ++ windowed),
+      ("sort = false", false, true, reuseFixture(false), grouped),
+      ("dropNullKeys = false", true, false, reuseFixture(true), grouped ++ windowed))
+    for ((label, sort, dropNull, d, kinds) <- variants) {
+      val plain = GroupBy(d, Seq(col("k1"), col("k2")), sort = sort,
+        dropNullKeys = dropNull)
+      val p = plain.persisted
+      for ((kind, run) <- kinds) {
+        // sorted grouped results must agree row for row, nulls first
+        val ordered = sort && grouped.exists(_._1 == kind)
+        val (got, want) = (rows(run(p), ordered), rows(run(plain), ordered))
+        assert(got.size === want.size && got.zip(want).forall { case (a, b) => close(a, b) },
+          s"$label / $kind:\n${got.mkString("\n")}\nvs\n${want.mkString("\n")}")
+      }
+      p.unpersist()
+    }
   }
 
   test("expression key aliased to an existing column name is rejected (review regression)") {

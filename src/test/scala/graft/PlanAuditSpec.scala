@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.graft.SparkJobs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Machine-checked scale invariants over [[PlanAudit.plans]] — the same
@@ -75,6 +78,44 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!plan.contains("SortMergeJoin"), s"${a.name}:\n$plan")
       assert(!plan.contains("CartesianProduct"), s"${a.name}:\n$plan")
     }
+  }
+
+  private def operators(a: PlanAudit.Audited) =
+    PlanAudit.operators(a.df.queryExecution.executedPlan)
+
+  test("persisted-GroupBy plans read the key-sorted cache with no Exchange above it") {
+    val flagged = audited.filter(_._1.cacheLocal)
+    assert(flagged.nonEmpty)
+    for ((a, plan) <- flagged) {
+      assert(operators(a).exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"${a.name}: no cache read\n$plan")
+      assert(!operators(a).exists(_.nodeName.contains("Exchange")), s"${a.name}:\n$plan")
+    }
+  }
+
+  test("one-job plans run as exactly one Spark job once warm") {
+    val flagged = audited.filter(_._1.oneJob)
+    assert(flagged.nonEmpty)
+    for ((a, _) <- flagged) {
+      a.df.collect() // warm
+      // counted on a fresh plan: a re-run of `a.df` itself would reuse
+      // the shuffle files its first run left behind
+      assert(SparkJobs.count(spark)(a.df.select("*").collect()) === 1, a.name)
+    }
+  }
+
+  test("noSort plans sort nothing outside the cache") {
+    val flagged = audited.filter(_._1.noSort)
+    assert(flagged.nonEmpty)
+    for ((a, plan) <- flagged)
+      assert(!operators(a).exists(_.isInstanceOf[SortExec]), s"${a.name}:\n$plan")
+  }
+
+  test("join-free plans contain no join operator") {
+    val flagged = audited.filter(_._1.joinFree)
+    assert(flagged.nonEmpty)
+    for ((a, plan) <- flagged)
+      assert(!operators(a).exists(_.nodeName.contains("Join")), s"${a.name}:\n$plan")
   }
 
   test("bucketed candidate generators plan equijoins, not cartesian/nested-loop") {

@@ -685,6 +685,28 @@ class RollingSpec extends AnyFunSuite {
     assert(vals(out, "ewm_mean") === Seq(null, 2.0, 10.0 / 3.0, 9.0, null))
   }
 
+  test("ewm mean/var fold the null-key group when dropNullKeys = false (pandas dropna=False)") {
+    // pandas 2.2.2 df.groupby("key", dropna=False)["value"].ewm(alpha=0.5)
+    // .mean() / .var(): the null key is one more group, as cumsum has it
+    val d = Seq((0, Some("a"), Some(1.0)), (1, None, Some(2.0)),
+      (2, Some("a"), Some(3.0)), (3, None, None), (4, None, Some(4.0)),
+      (5, Some("a"), Some(6.0))).toDF("ord", "key", "value")
+    val ops = new RollingOps(new GroupBy(d, Seq(col("key")), dropNullKeys = false))
+    assert(vals(ops.ewmMean(col("value"), col("ord"), 0.5), "ewm_mean") ===
+      Seq(1.0, 2.0, 2.3333333333333335, 2.0, 3.6, 4.428571428571429))
+    assert(vals(ops.ewmVar(col("value"), col("ord"), 0.5), "ewm_var") ===
+      Seq(null, null, 2.0, null, 2.0, 6.428571428571429))
+  }
+
+  test("ewm carries input columns sort_array cannot order (a map column)") {
+    val d = Seq((0, 0, 1.0, Map("a" -> 1)), (1, 0, 3.0, Map("b" -> 2)))
+      .toDF("ord", "key", "value", "tags")
+    val out = ops(d).ewmMean(col("value"), col("ord"), 0.5)
+    assert(out.columns.toSeq === Seq("key", "ord", "value", "tags", "ewm_mean"))
+    assert(vals(out, "ewm_mean") === Seq(1.0, (0.5 * 1.0 + 3.0) / 1.5))
+    assert(vals(out, "tags") === Seq(Map("a" -> 1), Map("b" -> 2)))
+  }
+
   def ewmVarCheck(adjust: Boolean, ignoreNa: Boolean, exp: Seq[Any]): Unit = {
     val got = vals(ops(ewmDf).ewmVar(col("value"), col("ord"), 0.25,
       adjust = adjust, ignoreNa = ignoreNa), "ewm_var")
