@@ -51,6 +51,12 @@ object PlanAudit {
     *    for a range exchange).
     *  - `noSort`: no Sort operator outside the cache.
     *  - `joinFree`: no join operator of any kind.
+    *  - `noLoopInvariantSplit`: no higher-order function's lambda body
+    *    holds a `split` whose input ignores that lambda's own
+    *    variables. Such a split runs once per array element with the
+    *    same result (lambdas run interpreted, with no shared
+    *    subexpressions), so a per-gram lambda over a document split is
+    *    quadratic in its tokens — set on the shingle consumers.
     */
   final case class Audited(
       name: String,
@@ -66,7 +72,8 @@ object PlanAudit {
       cacheLocal: Boolean = false,
       oneJob: Boolean = false,
       noSort: Boolean = false,
-      joinFree: Boolean = false)
+      joinFree: Boolean = false,
+      noLoopInvariantSplit: Boolean = false)
 
   /** Every operator of a physical plan outside its cached relations:
     * the walk stops at each InMemoryTableScan and looks through AQE's
@@ -127,11 +134,11 @@ object PlanAudit {
         noSinglePartition = true, equiJoinOnly = true),
       Audited("minhash LSH banding (shuffle on (band, slice-array) key)",
         Dedup.minHashPairs(docs, col("doc_id"), col("text")),
-        noSinglePartition = true, equiJoinOnly = true),
+        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true),
       Audited("minhash keep verdicts (claim agg + verdict agg, no pair join)",
         Dedup.minHashKeep(docs, col("doc_id"), col("text"),
           ord = col("doc_id")),
-        noSinglePartition = true, equiJoinOnly = true),
+        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true),
       Audited("brute-force ANN (native cosine expr — scoring inside codegen)",
         graft.operators.Similarity.bruteForceTopK(embs,
           embs.filter(col("vec_id") < 5), col("vec_id"), col("embedding"), 5),
@@ -174,7 +181,8 @@ object PlanAudit {
         Dedup.contamination(docs.where(col("doc_id") % 20 =!= 0),
           col("doc_id"), col("text"),
           docs.where(col("doc_id") % 20 === 0), col("text"), n = 5),
-        noSinglePartition = true, equiJoinOnly = true, broadcastProbe = true),
+        noSinglePartition = true, equiJoinOnly = true, broadcastProbe = true,
+        noLoopInvariantSplit = true),
       Audited("segment dedup (claim agg on segment md5 + co-partitioned join-back)",
         Dedup.dedupSegments(docs, col("doc_id"), col("text"),
           ord = col("doc_id"), sep = " "),
@@ -189,7 +197,7 @@ object PlanAudit {
           col("doc_id"), col("text"),
           Dedup.evalGramBloom(docs.where(col("doc_id") % 20 === 0),
             col("text"), n = 5, expectedItems = Some(5000L)), n = 5),
-        noSinglePartition = true, noShuffle = true),
+        noSinglePartition = true, noShuffle = true, noLoopInvariantSplit = true),
       Audited("head unsplit (rank-limit pushdown: partial map-side top-n per key)",
         // the r8 bench adjudication (DESIGN.md): row_number <= n plans
         // a WindowGroupLimit (Partial) BEFORE the key shuffle, so the
@@ -225,7 +233,7 @@ object PlanAudit {
         Dedup.contaminationFuzzy(docs.where(col("doc_id") % 10 =!= 0),
           col("doc_id"), col("text"),
           docs.where(col("doc_id") % 10 === 0), col("doc_id"), col("text")),
-        noSinglePartition = true, equiJoinOnly = true),
+        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true),
       Audited("semdedup (map-side centroid assignment; cluster-key equijoin only)",
         Dedup.semDedup(embs, col("vec_id"), col("embedding"), col("vec_id"),
           graft.operators.Similarity.ivfCentroids(embs, col("vec_id"),

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.graft.StringExpressions
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Text-analysis expressions for training-data pipelines: token
@@ -13,15 +14,19 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   */
 object TextFunctions {
 
-  /** Whitespace token count. */
-  def tokenCountWs(text: Column): Column = size(split(text, " "))
+  // The counts below use array_size, not size: size(null) is −1 when
+  // spark.sql.ansi.enabled is false, and a −1 poisons token sums.
 
-  /** Regex token count — a BPE-ish lexer class. */
+  /** Whitespace token count; null for a null text. */
+  def tokenCountWs(text: Column): Column = array_size(split(text, " "))
+
+  /** Regex token count — a BPE-ish lexer class; null for a null text. */
   def tokenCountRegex(text: Column, pattern: String = "[a-z0-9]+"): Column =
-    size(regexp_extract_all(text, lit(pattern), lit(0)))
+    array_size(regexp_extract_all(text, lit(pattern), lit(0)))
 
+  /** Punctuation character count; null for a null text. */
   def punctCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[.!?,;:]"), lit(0)))
+    array_size(regexp_extract_all(text, lit("[.!?,;:]"), lit(0)))
 
   val DefaultStopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is")
@@ -100,15 +105,13 @@ object TextFunctions {
   val GarbageClass: String =
     "[\\x{0000}-\\x{0008}\\x{000B}\\x{000C}\\x{000E}-\\x{001F}\\x{FFFD}]"
 
-  private def nonWsChars(text: Column): Column =
-    length(regexp_replace(text, "\\s", ""))
-
   /** One-pass native per-code-point counts in ScriptClasses order +
     * garbage + non-ws (slots doc at
     * [[org.apache.spark.sql.graft.ScriptCountUtil]]). Round-15: the
-    * regex formulation below ([[scriptFractionsTree]], retained as
-    * the spec reference) paid one java.util.regex scan of the whole
-    * document per class per consumer — 13 scans per text_signals row.
+    * regex formulation (kept in test scope as the spec reference,
+    * `TextTreeForms.scriptFractions`) paid one java.util.regex scan of
+    * the whole document per class per consumer — 13 scans per
+    * text_signals row.
     */
   private def scriptCounts(text: Column): Column =
     org.apache.spark.sql.graft.StringExpressions.scriptCharCounts(text)
@@ -128,20 +131,6 @@ object TextFunctions {
     val fields = ScriptClasses.zipWithIndex.map { case ((name, _), i) =>
       Num.safeDiv(c.getItem(i).cast(DoubleType), denom).as(s"f_$name")
     } :+ Num.safeDiv(c.getItem(6).cast(DoubleType), denom).as("f_garbage")
-    struct(fields: _*)
-  }
-
-  /** The pre-round-15 regex formulation of [[scriptFractions]] — kept
-    * ONLY as the differential reference CorpusSpec pins the native
-    * counter against (each regexp_count is separately oracle-proven).
-    */
-  private[graft] def scriptFractionsTree(text: Column): Column = {
-    val denom = nonWsChars(text).cast(DoubleType)
-    val fields = ScriptClasses.map { case (name, cls) =>
-      Num.safeDiv(regexp_count(text, lit(cls)).cast(DoubleType), denom)
-        .as(s"f_$name")
-    } :+ Num.safeDiv(regexp_count(text, lit(GarbageClass)).cast(DoubleType),
-      denom).as("f_garbage")
     struct(fields: _*)
   }
 
@@ -177,20 +166,11 @@ object TextFunctions {
     * ([[org.apache.spark.sql.graft.FingerprintFold]] — the md5 stays,
     * the per-word hex string / substring / string-conv round-trip
     * goes); values are identical by construction and CorpusSpec pins
-    * the equality against [[fingerprintTree]].
+    * the equality against the tree form (`TextTreeForms.fingerprint`,
+    * test scope).
     */
   def fingerprint(text: Column): Column =
     org.apache.spark.sql.graft.StringExpressions.fingerprintFold(text)
-
-  /** The pre-round-15 expression-tree form of [[fingerprint]] — kept
-    * ONLY as the differential reference CorpusSpec pins the native
-    * fold against (it is the form the oracle SQL mirrors literally).
-    */
-  private[graft] def fingerprintTree(text: Column): Column =
-    F.aggregate(split(text, " "), lit(0L),
-      (acc, w) =>
-        (acc * 31 + conv(substring(md5(w), 1, 8), 16, 10).cast(LongType))
-          % 1000000007L)
 
   // ------------------------------------------------- repetition filters
   // The within-document repetition signals used by pretraining quality
@@ -199,43 +179,40 @@ object TextFunctions {
   // prose. All are row-local array expressions — no explode, no
   // shuffle; they run inside a projection at any corpus scale.
 
-  /** Word n-gram array (space-joined); documents shorter than n words
-    * yield an empty array. The shared gram builder for the repetition
+  /** Word n-gram array: the `count − n + 1` windows of n consecutive
+    * `sep`-separated tokens, each joined by `sep`; documents shorter
+    * than n tokens and null documents yield an empty array (n = 1 is
+    * the token array itself, `split`, null for a null document). Tokens
+    * follow Java `split` on the literal `sep` with limit −1: `""` is
+    * one empty token, and leading, trailing and repeated separators
+    * give empty tokens. `sep = ""` selects character n-grams
+    * ([[charNgramArray]]). The shared gram builder for the repetition
     * stats here and the shingle stage of [[graft.operators.Dedup]].
+    *
+    * n ≥ 2 runs as one native byte scan per document
+    * ([[org.apache.spark.sql.graft.TokenWindows]]): every gram is a
+    * slice of the document's bytes.
     */
   def ngramArray(text: Column, n: Int, sep: String = " "): Column = {
-    // sep = "" selects CHARACTER n-grams (CJK and other unsegmented
-    // scripts have no token separator to split on) — substr-based, not
-    // an empty-regex split: Java split keeps a trailing empty string
-    // under Spark's limit=-1 where other engines drop it, so the split
-    // form would not replay cross-engine
+    require(n >= 1, s"n-gram width must be >= 1, got $n")
     if (sep.isEmpty) charNgramArray(text, n)
-    else {
-      val w = split(text, java.util.regex.Pattern.quote(sep))
-      if (n == 1) w
-      else
-        // the descending sequence(0, size-n) on a short doc would
-        // evaluate slice(start=0) and throw — guard with an empty array
-        when(F.size(w) >= n,
-          F.transform(F.sequence(lit(0), F.size(w) - n),
-            i => array_join(F.slice(w, i + lit(1), lit(n)), sep)))
-          .otherwise(array())
-    }
+    else if (n == 1) split(text, java.util.regex.Pattern.quote(sep))
+    else StringExpressions.tokenWindows(text, sep, n, 1, partial = false)
   }
 
   /** Character n-gram array — the shingle unit for unsegmented
     * scripts (CJK text has no whitespace tokens to shingle on; the
-    * standard near-dup recipe there is character 3–5-grams). Sliding
-    * `substr` windows, so any engine's character-indexed substring
-    * replays it; texts shorter than n characters yield an empty
-    * array. Reached from the whole dedup family via `sep = ""`.
+    * standard near-dup recipe there is character 3–5-grams). The
+    * `length − n + 1` windows of n consecutive characters (code
+    * points, as `substr` and `length` count them), so any engine's
+    * character-indexed substring replays it; texts shorter than n
+    * characters and null texts yield an empty array. Reached from the
+    * whole dedup family via `sep = ""`. Runs in the same native kernel
+    * as [[ngramArray]].
     */
   def charNgramArray(text: Column, n: Int): Column = {
     require(n >= 1, s"char n-gram width must be >= 1, got $n")
-    when(length(text) >= n,
-      F.transform(F.sequence(lit(0), length(text) - n),
-        i => text.substr(i + lit(1), lit(n))))
-      .otherwise(array().cast("array<string>"))
+    StringExpressions.tokenWindows(text, "", n, 1, partial = false)
   }
 
   private def segments(text: Column, sep: String): Column =
@@ -321,16 +298,8 @@ object TextFunctions {
     // three regex passes + four intermediate strings per document;
     // identical output by construction (semantics contract at
     // [[org.apache.spark.sql.graft.NormalizeUtil]]), CorpusSpec pins
-    // the equality against [[normalizeForDedupTree]]
+    // the equality against the regex chain (TextTreeForms, test scope)
     org.apache.spark.sql.graft.StringExpressions.normalizeForDedup(text)
-
-  /** The pre-round-15 regex-chain form of [[normalizeForDedup]] —
-    * kept ONLY as the differential reference CorpusSpec pins the
-    * native pass against (it is the form the oracle SQL mirrors).
-    */
-  private[graft] def normalizeForDedupTree(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9\\s]", " "), "\\s+", " "))
 
   // ---------------------------------------------------- URL handling
   // Domain-level filtering (blocklists, per-domain mixing/stats) is a
@@ -402,6 +371,23 @@ object TextFunctions {
 
   // ------------------------------------------------- chunking / funnel
 
+  /** The chunk windows of [[chunkByTokens]] as a row-local array
+    * column — the unit the SQL registration (`graft_chunk_tokens`)
+    * exposes; explode it for the per-chunk rows. Tokens as in
+    * [[ngramArray]] (`sep = ""`: one token per character); each chunk
+    * is its tokens joined by `sep`, the last one cut at the document
+    * end. A null document yields null. Runs in the same native kernel
+    * as [[ngramArray]].
+    */
+  def chunkArray(text: Column, size: Int, overlap: Int,
+      sep: String = " "): Column = {
+    require(size >= 1, s"chunk size must be >= 1, got $size")
+    require(overlap >= 0 && overlap < size,
+      s"overlap must be in [0, size), got $overlap for size $size")
+    StringExpressions.tokenWindows(text, sep, size, size - overlap,
+      partial = true)
+  }
+
   /** Split each document into sliding token windows of `size` tokens
     * overlapping by `overlap` — the training-context chunking step
     * (documents → model-window pieces). Chunk i covers tokens
@@ -410,30 +396,11 @@ object TextFunctions {
     * chunks, the last truncated at the document end (every chunk adds
     * ≥ 1 new token, so no empty tail chunk exists).
     *
-    * Scale shape: a row-local array transform + posexplode — a narrow
+    * Scale shape: a row-local window kernel + posexplode — a narrow
     * projection, zero shuffle, output volume ≈ input · (1 + overlap
     * fraction). Output: id, chunk_id (0-based), chunk_text,
     * n_chunk_tokens.
     */
-  /** The chunk windows of [[chunkByTokens]] as a row-local array
-    * column — the unit the SQL registration (`graft_chunk_tokens`)
-    * exposes; explode it for the per-chunk rows.
-    */
-  def chunkArray(text: Column, size: Int, overlap: Int,
-      sep: String = " "): Column = {
-    require(size >= 1, s"chunk size must be >= 1, got $size")
-    require(overlap >= 0 && overlap < size,
-      s"overlap must be in [0, size), got $overlap for size $size")
-    val step = size - overlap
-    val w = split(text, java.util.regex.Pattern.quote(sep))
-    val n = F.size(w)
-    // ceil((n - size) / step) in exact integer math (n > size branch)
-    val a = greatest(n - lit(size), lit(0)) + lit(step - 1)
-    val nChunks = lit(1) + (a - pmod(a, lit(step))) / lit(step)
-    F.transform(F.sequence(lit(0), nChunks.cast("int") - 1),
-      i => array_join(F.slice(w, i * step + 1, lit(size)), sep))
-  }
-
   def chunkByTokens(df: org.apache.spark.sql.DataFrame, id: Column,
       text: Column, size: Int, overlap: Int,
       sep: String = " "): org.apache.spark.sql.DataFrame =
@@ -532,24 +499,11 @@ object TextFunctions {
     // zero gram-string allocation — the HOF/polyHash expression tree
     // it replaces was the dominant term (and the GC-variance driver)
     // of the quality_train bench row. Bit-equality with the tree form
-    // is spec-pinned (CorpusSpec) on empty/multi-space/surrogate/
-    // >MaxLen inputs; the DuckDB twin (hashFeatureBucketsSql) is
-    // unchanged and replays the same buckets.
+    // (TextTreeForms, test scope) is spec-pinned (CorpusSpec) on
+    // empty/multi-space/surrogate/>MaxLen inputs; the DuckDB twin
+    // (hashFeatureBucketsSql) is unchanged and replays the same buckets.
     org.apache.spark.sql.graft.StringExpressions
       .hashFeatureBuckets(text, dim, grams)
-  }
-
-  /** The pre-round-11 expression-tree form of [[hashFeatureBuckets]]
-    * — kept ONLY as the differential reference the spec pins the
-    * native kernel against (it is definitionally the composition of
-    * [[ngramArray]] and [[PortableHash.polyHash]], each separately
-    * oracle-proven).
-    */
-  private[graft] def hashFeatureBucketsTree(text: Column, dim: Int,
-      grams: Seq[Int] = Seq(1, 2)): Column = {
-    val arrs = grams.map(n => ngramArray(text, n))
-    val feats = if (arrs.sizeIs == 1) arrs.head else concat(arrs: _*)
-    F.transform(feats, g => PortableHash.polyHash(g) % dim)
   }
 
   /** DuckDB rendering of [[hashFeatureBuckets]] over a text expression

@@ -932,13 +932,9 @@ object Dedup {
       sep: String = " "): org.apache.spark.util.sketch.BloomFilter = {
     val grams = eval.select(explode(shingleArray(evalText, n, sep)).as("shingle"))
     val items = expectedItems.getOrElse {
-      // row-local gram count matching shingleArray's emission rule
-      // (tokens ≥ n → tokens − n + 1 grams, else 0; char grams count
-      // characters) — one narrow scan, nothing exploded or shuffled
-      val perDoc =
-        if (sep.isEmpty) greatest(length(evalText) - (n - 1), lit(0))
-        else greatest(size(split(evalText,
-          java.util.regex.Pattern.quote(sep))) - (n - 1), lit(0))
+      // row-local gram count — one narrow scan, nothing exploded or
+      // shuffled
+      val perDoc = F.array_size(shingleArray(evalText, n, sep))
       eval.agg(F.coalesce(F.sum(perDoc.cast("long")), lit(0L)))
         .head().getLong(0)
     }

@@ -170,8 +170,8 @@ object Ewm {
 
   /** The pre-round-15 declarative fold of [[variance]] — kept ONLY as
     * the differential reference DifferentialSpec pins
-    * [[org.apache.spark.sql.graft.EwmVarFold]] against (the
-    * hashFeatureBucketsTree pattern): given the sorted
+    * [[org.apache.spark.sql.graft.EwmVarFold]] against (the pattern of
+    * the retired text tree forms): given the sorted
     * `array<struct<__ord, __v:double>>` of one key, returns the
     * per-row output array under the identical recurrence.
     */

@@ -5,11 +5,14 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared kernel for [[DeletionHashes]] — static so both the
@@ -439,8 +442,171 @@ case class NormalizeForDedup(child: Expression)
       newChild: Expression): NormalizeForDedup = copy(child = newChild)
 }
 
+/** Shared kernel for [[TokenWindows]]. Reproduces the expression trees
+  * the three window builders of [[graft.functions.TextFunctions]] were
+  * (the tree forms are kept as test references):
+  *
+  *   - word n-grams `transform(sequence(0, size(w) − n), i ->
+  *     array_join(slice(w, i+1, n), sep))` guarded by `size(w) >= n`,
+  *     `w = split(text, Pattern.quote(sep))`;
+  *   - character n-grams `transform(sequence(0, length(text) − n),
+  *     i -> substr(text, i+1, n))` guarded by `length(text) >= n`;
+  *   - token chunks `transform(sequence(0, nChunks − 1), i ->
+  *     array_join(slice(w, i·step + 1, size), sep))`.
+  *
+  * Semantics contract (each point probed against the tree forms):
+  *
+  *   - tokens, `sep` non-empty: Java `split` with limit −1 on the
+  *     literal `sep`, leftmost and non-overlapping (`"aa"` cuts
+  *     `"aaa"` into `"", "a"`); n separators always give n+1 tokens,
+  *     so `""` is one empty token and leading, trailing and repeated
+  *     separators give empty tokens. The split runs on the UTF-8
+  *     bytes: a valid UTF-8 separator can only match at code-point
+  *     boundaries, so byte matching IS code-point matching. Input that
+  *     is not valid UTF-8 is re-encoded first through `toString`, as
+  *     `split` decodes it (each malformed sequence → U+FFFD). A
+  *     separator holding an unpaired surrogate never matches, as in
+  *     Java regex;
+  *   - tokens, `sep` empty: one token per character, stepped by
+  *     `UTF8String.numBytesForFirstByte` over the raw bytes — the walk
+  *     `length` and `substr` make, so malformed bytes slice exactly as
+  *     `substr` slices them (a sequence truncated by the end of the
+  *     text is clamped, where `substr` would read past it); `""` has
+  *     no tokens;
+  *   - windows: window i covers tokens [i·step, i·step + width). Full
+  *     windows only (`partial = false`): none when there are fewer
+  *     than `width` tokens. Chunks (`partial = true`): at least one
+  *     window, the last one cut at the last token, no window that adds
+  *     no new token;
+  *   - values: consecutive tokens are separated by exactly one `sep`,
+  *     so a window joined with `sep` IS the byte range from its first
+  *     token's start to its last token's end — each window is a view
+  *     of one private copy of the document's bytes, nothing is
+  *     re-encoded or re-joined;
+  *   - null text: an empty array for full windows (the trees' guard
+  *     is null, so they take the empty `otherwise`), null for chunks.
+  *
+  * Two deliberate departures, both on chunks: the chunk tree gave a null
+  * text one null chunk (its count skipped the null token count), and
+  * with `sep = ""` it split on an empty regex, which cut surrogate pairs
+  * into '?' halves and added a trailing empty token; chunks over
+  * characters now use the character tokens above.
+  *
+  * Why native: Spark runs a higher-order function's lambda interpreted,
+  * with no shared subexpressions, so the trees split the document (a
+  * full regex pass plus one string per token) once per gram —
+  * quadratic in the token count.
+  */
+object TokenWindowUtil {
+  /** `sep` as UTF-8, the form [[windows]] matches. A separator with an
+    * unpaired surrogate becomes 0xFF, a byte valid UTF-8 never holds:
+    * it never matches, as the surrogate never matches in Java regex.
+    */
+  def sepBytes(sep: String): Array[Byte] =
+    if (sep.codePoints().anyMatch(cp => cp >= 0xD800 && cp <= 0xDFFF))
+      Array(0xFF.toByte)
+    else sep.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  def windows(text: UTF8String, sep: Array[Byte], width: Int, step: Int,
+      partial: Boolean): ArrayData = {
+    if (text == null)
+      return if (partial) null else new GenericArrayData(Array.empty[Any])
+    val src = if (sep.length == 0 || text.isValid) text
+      else UTF8String.fromString(text.toString)
+    val b = new Array[Byte](src.numBytes)
+    src.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET)
+    val n = b.length
+    val gap = sep.length
+    // token t spans [starts(t), starts(t+1) − gap); the last one ends at n
+    var starts = new Array[Int](16)
+    var k = 0
+    var i = 0
+    if (gap == 0) {
+      while (i < n) {
+        starts = put(starts, k, i); k += 1
+        i += UTF8String.numBytesForFirstByte(b(i))
+      }
+    } else {
+      starts = put(starts, k, 0); k += 1
+      while (i <= n - gap) {
+        var j = 0
+        while (j < gap && b(i + j) == sep(j)) j += 1
+        if (j == gap) { i += gap; starts = put(starts, k, i); k += 1 }
+        else i += 1
+      }
+    }
+    val count =
+      if (partial) 1 + (math.max(k - width, 0) + step - 1) / step
+      else if (k < width) 0
+      else (k - width) / step + 1
+    val out = new Array[Any](count)
+    var w = 0
+    while (w < count) {
+      val first = w * step
+      val last = math.min(first + width, k) - 1
+      out(w) =
+        if (last < first) UTF8String.EMPTY_UTF8
+        else {
+          val end = if (last + 1 < k) starts(last + 1) - gap else n
+          UTF8String.fromBytes(b, starts(first), end - starts(first))
+        }
+      w += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  private def put(a: Array[Int], k: Int, v: Int): Array[Int] = {
+    val r = if (k == a.length) java.util.Arrays.copyOf(a, k * 2) else a
+    r(k) = v
+    r
+  }
+}
+
+/** `TokenWindows(text)` → `array<string>`: the token windows of
+  * `text` — word n-grams, character n-grams (`sep = ""`) or chunks
+  * (`partial`) — in one byte scan, as a native codegen'd expression.
+  * `sep`, `width`, `step` and `partial` are literal parameters. See
+  * [[TokenWindowUtil]] for the semantics contract with the expression
+  * trees it replaces; the output type and nullability are theirs.
+  */
+case class TokenWindows(child: Expression, sep: String, width: Int,
+    step: Int, partial: Boolean)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = "token_windows"
+
+  @transient private lazy val sepBytes: Array[Byte] =
+    TokenWindowUtil.sepBytes(sep)
+
+  override def eval(input: InternalRow): Any =
+    TokenWindowUtil.windows(child.eval(input).asInstanceOf[UTF8String],
+      sepBytes, width, step, partial)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = child.genCode(ctx)
+    val sepRef = ctx.addReferenceObj("sep", sepBytes, "byte[]")
+    ev.copy(code = code"""
+      ${t.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        org.apache.spark.sql.graft.TokenWindowUtil.windows(
+          ${t.isNull} ? null : ${t.value}, $sepRef, $width, $step, $partial);
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): TokenWindows = copy(child = newChild)
+}
+
 object StringExpressions {
   import org.apache.spark.sql.classic.ExpressionUtils
+
+  def tokenWindows(text: Column, sep: String, width: Int, step: Int,
+      partial: Boolean): Column =
+    ExpressionUtils.column(
+      TokenWindows(ExpressionUtils.expression(text), sep, width, step, partial))
 
   def deletionHashes(key: Column, pfx: Column): Column =
     ExpressionUtils.column(

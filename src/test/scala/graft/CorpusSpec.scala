@@ -15,7 +15,7 @@ class CorpusSpec extends AnyFunSuite {
   def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   test("hashFeatureBuckets: native kernel == expression tree, adversarial + corpus") {
-    import graft.functions.TextFunctions
+    import graft.functions.{TextFunctions, TextTreeForms}
     // the split/ascii/length contract edges the native kernel must
     // replicate: empty text (zero tokens), interior/trailing empty
     // tokens, single token (no bigrams), non-ASCII incl. a surrogate
@@ -28,7 +28,7 @@ class CorpusSpec extends AnyFunSuite {
     for (grams <- Seq(Seq(1, 2), Seq(1), Seq(2), Seq(1, 2, 3))) {
       val rows = trickyDf.select(
         TextFunctions.hashFeatureBuckets(col("t"), 97, grams).as("n"),
-        TextFunctions.hashFeatureBucketsTree(col("t"), 97, grams).as("e"))
+        TextTreeForms.hashFeatureBuckets(col("t"), 97, grams).as("e"))
         .collect()
       rows.zip(tricky).foreach { case (r, t) =>
         assert(r.getSeq[Long](0) === r.getSeq[Long](1),
@@ -37,7 +37,7 @@ class CorpusSpec extends AnyFunSuite {
     // the real corpus at the gate dimension
     val diff = docs.select(
         TextFunctions.hashFeatureBuckets(col("text"), 4096).as("n"),
-        TextFunctions.hashFeatureBucketsTree(col("text"), 4096).as("e"))
+        TextTreeForms.hashFeatureBuckets(col("text"), 4096).as("e"))
       .filter(not(col("n") <=> col("e"))).count()
     assert(diff === 0L)
     // null text stays null (explode_outer callers rely on it)
@@ -47,7 +47,7 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("round-15 native text kernels == retired regex/tree forms, adversarial + corpus") {
-    import graft.functions.TextFunctions
+    import graft.functions.{TextFunctions, TextTreeForms}
     // edges each kernel must replicate: empties/whitespace-only
     // (0/0 → null fractions; split-of-empty = one empty token),
     // interior/trailing space runs (empty tokens; \s+ collapse),
@@ -73,11 +73,11 @@ class CorpusSpec extends AnyFunSuite {
     }
     val checks = trickyDf.select(col("t"),
       TextFunctions.scriptFractions(col("t")).as("sf_n"),
-      TextFunctions.scriptFractionsTree(col("t")).as("sf_e"),
+      TextTreeForms.scriptFractions(col("t")).as("sf_e"),
       TextFunctions.fingerprint(col("t")).as("fp_n"),
-      TextFunctions.fingerprintTree(col("t")).as("fp_e"),
+      TextTreeForms.fingerprint(col("t")).as("fp_e"),
       TextFunctions.normalizeForDedup(col("t")).as("nd_n"),
-      TextFunctions.normalizeForDedupTree(col("t")).as("nd_e"),
+      TextTreeForms.normalizeForDedup(col("t")).as("nd_e"),
       TextFunctions.langIdScript(col("t")).as("li_n"))
     checks.collect().foreach { r =>
       assert(r.get(1) === r.get(2), s"scriptFractions for '${r.get(0)}'")
@@ -92,11 +92,11 @@ class CorpusSpec extends AnyFunSuite {
     assert(lang(11) === "ja") // kana present past 5% in the mixed row
     // the real corpus: all three kernels agree row-for-row
     diffOn(docs, TextFunctions.scriptFractions(col("text")) <=>
-      TextFunctions.scriptFractionsTree(col("text")))
+      TextTreeForms.scriptFractions(col("text")))
     diffOn(docs, TextFunctions.fingerprint(col("text")) <=>
-      TextFunctions.fingerprintTree(col("text")))
+      TextTreeForms.fingerprint(col("text")))
     diffOn(docs, TextFunctions.normalizeForDedup(col("text")) <=>
-      TextFunctions.normalizeForDedupTree(col("text")))
+      TextTreeForms.normalizeForDedup(col("text")))
   }
 
   // ------------------------------------------------------------ snapshot

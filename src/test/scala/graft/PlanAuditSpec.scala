@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, NamedLambdaVariable, StringSplit}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.graft.SparkJobs
 import org.scalatest.funsuite.AnyFunSuite
@@ -116,6 +118,42 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(flagged.nonEmpty)
     for ((a, plan) <- flagged)
       assert(!operators(a).exists(_.nodeName.contains("Join")), s"${a.name}:\n$plan")
+  }
+
+  /** Every physical operator of a plan, looking through AQE's wrapper
+    * and query stages and INTO the plans of the caches it reads: a
+    * cached frame with the same plan (the signatures another operator
+    * persisted, say) replaces the subtree that computed it.
+    */
+  private def withCachedPlans(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => withCachedPlans(a.executedPlan)
+    case q: QueryStageExec => q +: withCachedPlans(q.plan)
+    case m: InMemoryTableScanExec => m +: withCachedPlans(m.relation.cacheBuilder.cachedPlan)
+    case p => p +: p.children.flatMap(withCachedPlans)
+  }
+
+  /** Every `split` inside a lambda body whose input reads none of that
+    * lambda's own variables, as SQL.
+    */
+  private def loopInvariantSplits(a: PlanAudit.Audited): Seq[String] =
+    for {
+      node <- withCachedPlans(a.df.queryExecution.executedPlan)
+      f <- node.expressions.flatMap(_.collect { case f: LambdaFunction => f })
+      own = f.arguments.map(_.exprId).toSet
+      s <- f.function.collect { case s: StringSplit => s }
+      if !s.str.exists {
+        case v: NamedLambdaVariable => own(v.exprId)
+        case _ => false
+      }
+    } yield s.sql
+
+  test("shingle consumers split each document once, not once per lambda call") {
+    val flagged = audited.filter(_._1.noLoopInvariantSplit)
+    assert(flagged.nonEmpty)
+    val bad = flagged.map(f => f._1.name -> loopInvariantSplits(f._1))
+      .filter(_._2.nonEmpty)
+    assert(bad.isEmpty, bad.map { case (n, s) =>
+      s"$n: ${s.size} × ${s.distinct.mkString(", ")}" }.mkString("\n"))
   }
 
   test("bucketed candidate generators plan equijoins, not cartesian/nested-loop") {

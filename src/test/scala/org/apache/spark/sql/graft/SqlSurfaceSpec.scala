@@ -164,11 +164,11 @@ class SqlSurfaceSpec extends AnyFunSuite {
         .collect()
     }
     assert(e.getMessage.contains("must be an integer literal"))
-    // character shingles: same bridge, substr-sliding grams
+    // character shingles: same bridge, character windows
     val viaCharSql = spark.sql(
       "SELECT graft_char_shingles('你好世界', 2) AS g").head.getSeq[String](0)
     assert(viaCharSql === Seq("你好", "好世", "世界"))
-    // chunk windows: same tree as the Column API's chunkArray
+    // chunk windows: same expression as the Column API's chunkArray
     val viaChunkSql = spark.sql(
       """SELECT doc_id, posexplode(graft_chunk_tokens(text, 30, 5))
         |  AS (chunk_id, chunk_text)
