@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.TextFunctions
 import graft.operators.{Dedup, GroupBy, Margins, Reshape}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
@@ -57,6 +58,10 @@ object PlanAudit {
     *    same result (lambdas run interpreted, with no shared
     *    subexpressions), so a per-gram lambda over a document split is
     *    quadratic in its tokens — set on the shingle consumers.
+    *  - `noLambda`: no higher-order function anywhere in the plan. Its
+    *    lambda runs interpreted, element by element, and the lambda tree
+    *    is deserialized with every task — set on the curation page
+    *    filter, whose rules each run as one native pass.
     */
   final case class Audited(
       name: String,
@@ -73,7 +78,8 @@ object PlanAudit {
       oneJob: Boolean = false,
       noSort: Boolean = false,
       joinFree: Boolean = false,
-      noLoopInvariantSplit: Boolean = false)
+      noLoopInvariantSplit: Boolean = false,
+      noLambda: Boolean = false)
 
   /** Every operator of a physical plan outside its cached relations:
     * the walk stops at each InMemoryTableScan and looks through AQE's
@@ -226,7 +232,7 @@ object PlanAudit {
         takeOrdered = true),
       Audited("sequence packing (one hash exchange on shard, then a narrow walk)",
         graft.operators.Sampling.packSequences(docs, col("doc_id"),
-          graft.functions.TextFunctions.tokenCountWs(col("text")),
+          TextFunctions.tokenCountWs(col("text")),
           maxTokens = 400L, ord = col("doc_id"), shards = 8),
         noSinglePartition = true, equiJoinOnly = true),
       Audited("fuzzy decontamination (broadcast eval band buckets; hit-sized re-joins)",
@@ -318,7 +324,7 @@ object PlanAudit {
       Audited("quality-classifier scoring (broadcast weight table; doc-keyed feature aggs — equijoins only)",
         graft.operators.QualityModel.scoreQuality(docs, col("doc_id"),
           col("text"),
-          graft.functions.TextFunctions.pseudoWeights(spark, dim = 256)
+          TextFunctions.pseudoWeights(spark, dim = 256)
             .withColumnRenamed("weight", "w")
             .select(col("bucket"), col("w").cast("double").as("weight")),
           dim = 256),
@@ -383,6 +389,13 @@ object PlanAudit {
       Audited("persisted ewm mean (one fold over whole rows: no join-back, no exchange)",
         new graft.operators.RollingOps(evCached).ewmMean(col("value"), col("ts"), 0.25),
         cacheLocal = true, joinFree = true),
+      Audited("curation page filter (one native pass per text rule, no lambda)", {
+        val text = col("text")
+        docs.withColumn("text", TextFunctions.c4FilteredText(text))
+          .filter(TextFunctions.c4DocFlags(text).getField("pass"))
+          .filter(TextFunctions.gopherQualityFlags(text).getField("pass"))
+          .withColumn("lang", TextFunctions.langIdScript(text))
+      }, noLambda = true),
       Audited("resample (one (keys, bucket) hash agg + summary-sized bin-domain equijoin)",
         graft.operators.Resample.resample(
           new GroupBy(ev, Seq(col("user_id"))), col("ts"), 21600000000000L,

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.graft.StringExpressions
+import org.apache.spark.sql.graft.{GopherParams, StringExpressions}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Text-analysis expressions for training-data pipelines: token
@@ -31,14 +31,17 @@ object TextFunctions {
   val DefaultStopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is")
 
-  private def countIn(text: Column, words: Seq[String]): Column =
-    size(F.filter(split(text, " "), w => w.isInCollection(words)))
+  // The marker functions below (stopwordRatio, langScore, langId) each
+  // run as one native token walk over the `split(text, " ")` tokens
+  // (empty tokens included), matching markers exactly and
+  // case-sensitively ([[org.apache.spark.sql.graft.MarkerUtil]]).
 
-  /** Fraction of whitespace tokens that are stopwords. */
+  /** Fraction of whitespace tokens that are stopwords; null for a null
+    * text.
+    */
   def stopwordRatio(text: Column,
       stopwords: Seq[String] = DefaultStopwords): Column =
-    Num.safeDiv(countIn(text, stopwords).cast(DoubleType),
-      tokenCountWs(text).cast(DoubleType))
+    StringExpressions.markerCount(text, stopwords, ratio = true)
 
   /** Mean word length: (chars excluding separators) / word count —
     * one pass, no explode.
@@ -64,21 +67,18 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "et", "est", "les"),
     "es" -> Seq("el", "los", "es", "y", "las"))
 
-  /** Marker-count score for one language. */
+  /** Marker-count score for one language; null for a null text. */
   def langScore(text: Column, markers: Seq[String]): Column =
-    countIn(text, markers)
+    StringExpressions.markerCount(text, markers, ratio = false)
 
   /** Heuristic language-ID: argmax of marker counts, first-listed
-    * language wins ties, "und" (undetermined) when no marker hits.
+    * language wins ties, "und" (undetermined) when no marker hits or
+    * the text is null. The argmax runs inside the one token walk that
+    * counts every language's markers.
     */
   def langId(text: Column,
-      markers: Seq[(String, Seq[String])] = LangMarkers): Column = {
-    val scores = markers.map { case (l, m) => l -> langScore(text, m) }
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.foldRight(lit("und"): Column) { case ((l, s), acc) =>
-      when(s === best && best > 0, lit(l)).otherwise(acc)
-    }
-  }
+      markers: Seq[(String, Seq[String])] = LangMarkers): Column =
+    StringExpressions.markerLangId(text, markers)
 
   // ------------------------------------------- script / charset signals
   // The Latin-marker langId above cannot see CJK/Cyrillic/Arabic — the
@@ -218,13 +218,16 @@ object TextFunctions {
   private def segments(text: Column, sep: String): Column =
     split(text, java.util.regex.Pattern.quote(sep))
 
+  // The segment fractions use array_size, not size: size(null) is −1
+  // when spark.sql.ansi.enabled is false. A null text gives null.
+
   /** Fraction of segments (lines, under the default "\n" separator)
     * that repeat an earlier segment of the same document.
     */
   def duplicateSegmentFraction(text: Column, sep: String = "\n"): Column = {
     val s = segments(text, sep)
-    Num.safeDiv((F.size(s) - F.size(array_distinct(s))).cast(DoubleType),
-      F.size(s).cast(DoubleType))
+    Num.safeDiv((array_size(s) - array_size(array_distinct(s))).cast(DoubleType),
+      array_size(s).cast(DoubleType))
   }
 
   /** Fraction of characters contained in repeated segment occurrences
@@ -269,9 +272,9 @@ object TextFunctions {
       markers: Seq[String] = Seq("- ", "* ")): Column = {
     val s = segments(text, sep)
     Num.safeDiv(
-      F.size(F.filter(s, x => markers.map(m => x.startsWith(m))
+      array_size(F.filter(s, x => markers.map(m => x.startsWith(m))
         .reduce(_ || _))).cast(DoubleType),
-      F.size(s).cast(DoubleType))
+      array_size(s).cast(DoubleType))
   }
 
   /** Fraction of segments ending in an ellipsis. */
@@ -279,8 +282,8 @@ object TextFunctions {
       suffix: String = "..."): Column = {
     val s = segments(text, sep)
     Num.safeDiv(
-      F.size(F.filter(s, x => x.endsWith(suffix))).cast(DoubleType),
-      F.size(s).cast(DoubleType))
+      array_size(F.filter(s, x => x.endsWith(suffix))).cast(DoubleType),
+      array_size(s).cast(DoubleType))
   }
 
   /** Canonical text normalization for dedup pre-passes (the C4/
@@ -614,19 +617,18 @@ object TextFunctions {
   // Language Models: Methods, Analysis & Insights from Training
   // Gopher", Table A1) and C4's line/document cleaning (Raffel et al.
   // 2020, "Exploring the Limits of Transfer Learning with a Unified
-  // Text-to-Text Transformer", §2.2). Both are pure projections — ONE
-  // whole-stage-codegen'd corpus scan at 100 TB, no shuffle, nothing
-  // to tune — and every predicate stays in the Java ∩ RE2 regex subset
-  // plus list folds, so any engine replays them identically.
+  // Text-to-Text Transformer", §2.2). Each public function is ONE native
+  // byte walk per row ([[org.apache.spark.sql.graft.GopherUtil]],
+  // [[org.apache.spark.sql.graft.C4Util]], semantics contract at
+  // [[org.apache.spark.sql.graft.TextRuleUtil]]) that returns its whole
+  // result, so a rule read inside a Filter condition costs one call. The
+  // oracle replays them as split + filter list folds.
 
   /** The Gopher "required stop words" (Table A1): a document must
     * contain at least two of these for the stop-word rule to pass.
     */
   val GopherRequiredStops: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
-
-  private def wsWords(text: Column): Column =
-    F.filter(split(text, " "), w => w =!= "")
 
   /** Gopher document-quality rules as one struct: the raw signals,
     * per-rule booleans, and the composite `pass` (AND of all rules).
@@ -638,6 +640,13 @@ object TextFunctions {
     *  - < 90% of lines start with a bullet, < 30% end with "...",
     *  - ≥ 80% of words contain at least one alphabetic character,
     *  - ≥ 2 of the [[GopherRequiredStops]] present.
+    *
+    * Words are the non-empty `" "`-separated tokens, lines the
+    * `"\n"`-separated ones; lengths count code points, "alphabetic" is
+    * ASCII `[A-Za-z]`, stop words match exactly and case-sensitively, and
+    * a stop listed twice counts twice. The per-word ratios are null when
+    * there are no words. A null text gives `n_words`, the per-word ratios,
+    * `pass_word_count` null, fractions 0.0 and `pass` false.
     *
     * (The repetition rules of the same table — duplicate line/char
     * fractions, top-n-gram coverage — ship separately as
@@ -651,82 +660,30 @@ object TextFunctions {
       maxBulletFrac: Double = 0.9, maxEllipsisFrac: Double = 0.3,
       minAlphaWordFrac: Double = 0.8,
       requiredStops: Seq[String] = GopherRequiredStops,
-      minStops: Int = 2): Column = {
-    val words = wsWords(text)
-    val nWords = F.size(words).cast(LongType)
-    val meanLen = Num.safeDiv(
-      F.aggregate(words, lit(0L), (a, w) => a + length(w).cast(LongType))
-        .cast(DoubleType),
-      nWords.cast(DoubleType))
-    val symbolRatio = Num.safeDiv(
-      size(regexp_extract_all(text, lit("#|\\.\\.\\."), lit(0)))
-        .cast(DoubleType),
-      nWords.cast(DoubleType))
-    val alphaFrac = Num.safeDiv(
-      F.size(F.filter(words, w => w.rlike("[A-Za-z]"))).cast(DoubleType),
-      nWords.cast(DoubleType))
-    val nStops = requiredStops.map(sw =>
-      when(array_contains(words, sw), 1L).otherwise(0L))
-      .reduce(_ + _)
-    val bulletFrac = coalesce(bulletSegmentFraction(text), lit(0.0))
-    val ellipsisFrac = coalesce(ellipsisSegmentFraction(text), lit(0.0))
-    val passWords = nWords >= minWords && nWords <= maxWords
-    val passMeanLen = coalesce(
-      meanLen >= minMeanWordLen && meanLen <= maxMeanWordLen, lit(false))
-    val passSymbol = coalesce(symbolRatio <= maxSymbolRatio, lit(false))
-    val passBullet = bulletFrac < maxBulletFrac
-    val passEllipsis = ellipsisFrac < maxEllipsisFrac
-    val passAlpha = coalesce(alphaFrac >= minAlphaWordFrac, lit(false))
-    val passStops = nStops >= minStops
-    struct(
-      nWords.as("n_words"), meanLen.as("mean_word_len"),
-      symbolRatio.as("symbol_ratio"), bulletFrac.as("bullet_frac"),
-      ellipsisFrac.as("ellipsis_frac"), alphaFrac.as("alpha_word_frac"),
-      nStops.as("n_required_stops"),
-      passWords.as("pass_word_count"), passMeanLen.as("pass_mean_word_len"),
-      passSymbol.as("pass_symbol_ratio"), passBullet.as("pass_bullets"),
-      passEllipsis.as("pass_ellipsis"), passAlpha.as("pass_alpha_words"),
-      passStops.as("pass_stopwords"),
-      (passWords && passMeanLen && passSymbol && passBullet &&
-        passEllipsis && passAlpha && passStops).as("pass"))
-  }
+      minStops: Int = 2): Column =
+    StringExpressions.gopherFlags(text, GopherParams(minWords, maxWords,
+      minMeanWordLen, maxMeanWordLen, maxSymbolRatio, maxBulletFrac,
+      maxEllipsisFrac, minAlphaWordFrac, requiredStops, minStops))
 
   /** C4's LINE filter: keep lines that end in terminal punctuation
-    * (".", "!", "?", or a closing double quote, after right-trim),
-    * carry at least `minLineWords` words, and do not contain the word
-    * "javascript" (case-insensitive) — §2.2's retained-line rule.
-    * Returns the kept lines re-joined with "\n" (empty string when no
-    * line survives).
+    * (".", "!", "?", or a closing double quote, after trimming trailing
+    * spaces), carry at least `minLineWords` words, and do not contain
+    * the word "javascript" (case-insensitive, Spark's `lower`) — §2.2's
+    * retained-line rule. Returns the kept lines re-joined with "\n"
+    * (empty string when no line survives; null for a null text).
     */
-  def c4FilteredText(text: Column, minLineWords: Int = 5): Column = {
-    val lines = split(text, "\n")
-    val kept = F.filter(lines, l => {
-      val t = rtrim(l)
-      substring(t, -1, 1).isin(".", "!", "?", "\"") &&
-        F.size(F.filter(split(l, " "), w => w =!= "")) >= minLineWords &&
-        !lower(l).contains("javascript")
-    })
-    array_join(kept, "\n")
-  }
+  def c4FilteredText(text: Column, minLineWords: Int = 5): Column =
+    StringExpressions.c4Lines(text, minLineWords)
 
   /** C4's DOCUMENT flags as one struct: curly-brace presence (code),
     * "lorem ipsum" placeholder text (case-insensitive), the
     * sentence count (terminal-punctuation occurrences — the published
     * proxy), the count of lines the line filter keeps, and the
     * composite `pass` (≥ `minSentences` sentences, no brace, no lorem
-    * ipsum — §2.2's page-level drops).
+    * ipsum — §2.2's page-level drops). Every field is null for a null
+    * text.
     */
   def c4DocFlags(text: Column, minSentences: Int = 3,
-      minLineWords: Int = 5): Column = {
-    val nSentences = size(regexp_extract_all(text, lit("[.!?]"), lit(0)))
-      .cast(LongType)
-    val hasBrace = text.contains("{")
-    val hasLorem = lower(text).contains("lorem ipsum")
-    val keptLines = F.size(F.filter(split(c4FilteredText(text, minLineWords),
-      "\n"), l => l =!= "")).cast(LongType)
-    struct(
-      nSentences.as("n_sentences"), hasBrace.as("has_brace"),
-      hasLorem.as("has_lorem_ipsum"), keptLines.as("n_kept_lines"),
-      (nSentences >= minSentences && !hasBrace && !hasLorem).as("pass"))
-  }
+      minLineWords: Int = 5): Column =
+    StringExpressions.c4DocFlags(text, minSentences, minLineWords)
 }

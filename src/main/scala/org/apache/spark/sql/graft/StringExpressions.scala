@@ -6,11 +6,12 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -600,8 +601,557 @@ case class TokenWindows(child: Expression, sep: String, width: Int,
       newChild: Expression): TokenWindows = copy(child = newChild)
 }
 
+/** Byte-level helpers shared by the curation rule kernels ([[C4Lines]],
+  * [[C4DocFlags]], [[GopherFlags]], [[MarkerCount]], [[MarkerLangId]]),
+  * which replace the `split` + `filter` lambda trees of
+  * [[graft.functions.TextFunctions]] (kept as test references in
+  * `TextTreeForms`). Every kernel walks the UTF-8 bytes once; the
+  * contract they share with the trees:
+  *
+  *   - tokens are a literal split on `" "` (words) or `"\n"` (lines)
+  *     with limit −1: n separators give n+1 pieces, so `""` is one empty
+  *     piece and leading, trailing and repeated separators give empty
+  *     ones. A space or newline byte never occurs inside a multi-byte
+  *     sequence, so byte splitting IS character splitting;
+  *   - input that is not valid UTF-8 is re-encoded first through
+  *     `toString`, as `split` decodes it (each malformed sequence →
+  *     U+FFFD), see [[splitBytes]];
+  *   - every class the rules test is ASCII (`[A-Za-z]`, `#`, `{`, `.`,
+  *     `!`, `?`, `"`, `-`, `*`), a multi-byte sequence holds no ASCII
+  *     byte, and decoding keeps every ASCII byte of malformed input, so
+  *     byte tests are exact: the last byte of a line is one of `.!?"`
+  *     exactly when its last code point is;
+  *   - lengths count code points (the non-continuation bytes), as
+  *     Spark's `length` does;
+  *   - markers and stop words match whole tokens exactly and
+  *     case-sensitively, as the bytes of their string literal
+  *     ([[MarkerTable]]);
+  *   - `lower(x).contains(needle)` runs ASCII-only input through ASCII
+  *     case folding, which is what Spark's `Lower` does with it, and
+  *     any other input through Spark's own `Lower` ([[lowerContains]]),
+  *     so `"JAVASCRİPT"` (U+0130 lowers to `i` + U+0307) is no match.
+  */
+object TextRuleUtil {
+  /** The text's bytes as `split` sees them: valid UTF-8 as is, anything
+    * else decoded and re-encoded through `toString`.
+    */
+  def splitBytes(text: UTF8String): Array[Byte] =
+    (if (text.isValid) text else UTF8String.fromString(text.toString)).getBytes
+
+  /** `lower(b[s, e)).contains(needle)` for a lower-case ASCII `needle`:
+    * ASCII case folding when the slice is ASCII, Spark's `Lower` (with
+    * the session's `useICU`) on the slice otherwise.
+    */
+  def lowerContains(b: Array[Byte], s: Int, e: Int, needle: Array[Byte],
+      useICU: Boolean): Boolean = {
+    var found = false
+    var i = s
+    while (i < e) {
+      if (b(i) < 0) {
+        val lowered = CollationSupport.Lower.exec(UTF8String.fromBytes(b, s, e - s),
+          CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
+        return lowered.contains(UTF8String.fromBytes(needle))
+      }
+      if (!found && i + needle.length <= e) {
+        var j = 0
+        while (j < needle.length && asciiLower(b(i + j)) == needle(j)) j += 1
+        found = j == needle.length
+      }
+      i += 1
+    }
+    found
+  }
+
+  @inline private def asciiLower(c: Byte): Byte =
+    if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+
+  /** Number of non-empty `" "`-separated words in `b[s, e)`. */
+  def words(b: Array[Byte], s: Int, e: Int): Int = {
+    var n = 0
+    var i = s
+    while (i < e) {
+      if (b(i) != 0x20 && (i == s || b(i - 1) == 0x20)) n += 1
+      i += 1
+    }
+    n
+  }
+
+  /** End of the line starting at `s`: the next `\n` or the end. */
+  def lineEnd(b: Array[Byte], s: Int): Int = {
+    var e = s
+    while (e < b.length && b(e) != 0x0A) e += 1
+    e
+  }
+}
+
+/** Token → marker-set lookup for the marker kernels: `sets(k)` is a list
+  * of marker words, a token counts once for each set holding it (an
+  * `isin` per set). Markers are compared as the bytes of
+  * `UTF8String.fromString(m)`, the bytes of the string literal the tree
+  * forms compared against.
+  */
+final class MarkerTable(sets: Seq[Seq[String]]) extends Serializable {
+  val nSets: Int = sets.size
+  private val words: Array[Array[Byte]] =
+    sets.flatten.distinct.map(m => UTF8String.fromString(m).getBytes).toArray
+  private val owners: Array[Array[Int]] = sets.flatten.distinct.map(m =>
+    sets.indices.filter(k => sets(k).contains(m)).toArray).toArray
+  // word indices by byte length: a token is compared with same-length words only
+  private val byLen: Array[Array[Int]] = {
+    val maxLen = words.map(_.length).maxOption.getOrElse(-1)
+    Array.tabulate(maxLen + 1)(l => words.indices.filter(words(_).length == l).toArray)
+  }
+
+  /** Adds 1 to `counts(k)` for every set k that holds the token `b[s, e)`. */
+  def hit(b: Array[Byte], s: Int, e: Int, counts: Array[Int]): Unit = {
+    val len = e - s
+    if (len < byLen.length) {
+      val cands = byLen(len)
+      var c = 0
+      while (c < cands.length) {
+        val w = words(cands(c))
+        var j = 0
+        while (j < len && b(s + j) == w(j)) j += 1
+        if (j == len) {
+          val ks = owners(cands(c))
+          var k = 0
+          while (k < ks.length) { counts(ks(k)) += 1; k += 1 }
+          return
+        }
+        c += 1
+      }
+    }
+  }
+
+  /** Per-set counts of the `" "`-separated tokens of `b` (empty tokens
+    * included); the token count goes in the extra last slot.
+    */
+  def count(b: Array[Byte]): Array[Int] = {
+    val counts = new Array[Int](nSets + 1)
+    var s = 0
+    var i = 0
+    while (i <= b.length) {
+      if (i == b.length || b(i) == 0x20) {
+        hit(b, s, i, counts)
+        counts(nSets) += 1
+        s = i + 1
+      }
+      i += 1
+    }
+    counts
+  }
+}
+
+/** Shared kernels of [[MarkerCount]] and [[MarkerLangId]]. They replace
+  * `size(filter(split(text, " "), w -> w.isin(markers)))` per marker set
+  * (and, for language ID, one such walk per language inside every
+  * `when(score === greatest(scores))` branch) with one token walk that
+  * counts every set at once ([[MarkerTable.count]]). Contract in
+  * [[TextRuleUtil]].
+  */
+object MarkerUtil {
+  private val Und = UTF8String.fromString("und")
+
+  /** Tokens in set 0; with `ratio`, that count over the token count as a
+    * double (the tree's `safeDiv`; a text has at least one token).
+    */
+  def count(text: UTF8String, t: MarkerTable): Int =
+    t.count(TextRuleUtil.splitBytes(text))(0)
+
+  def ratio(text: UTF8String, t: MarkerTable): Double = {
+    val c = t.count(TextRuleUtil.splitBytes(text))
+    c(0).toDouble / c(t.nSets).toDouble
+  }
+
+  /** The label of the set with the most hits, the first-listed set on
+    * ties, `"und"` when no marker hits or the text is null.
+    */
+  def langId(text: UTF8String, t: MarkerTable, labels: Array[UTF8String]): UTF8String = {
+    if (text == null) return Und
+    val c = t.count(TextRuleUtil.splitBytes(text))
+    var best = 0
+    var k = 1
+    while (k < t.nSets) { if (c(k) > c(best)) best = k; k += 1 }
+    if (c(best) > 0) labels(best) else Und
+  }
+}
+
+/** `MarkerCount(text)` → the number of `" "`-separated tokens of `text`
+  * that are in `markers` (`int`, null for a null text), or with `ratio`
+  * that number over the token count (`double`). See [[MarkerUtil]].
+  */
+case class MarkerCount(child: Expression, markers: Seq[String], ratio: Boolean)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = if (ratio) DoubleType else IntegerType
+  // the tree's ratio was a safeDiv, nullable whatever the text
+  override def nullable: Boolean = ratio || child.nullable
+  override def prettyName: String = "marker_count"
+
+  @transient private lazy val table = new MarkerTable(Seq(markers))
+
+  override protected def nullSafeEval(t: Any): Any =
+    if (ratio) MarkerUtil.ratio(t.asInstanceOf[UTF8String], table)
+    else MarkerUtil.count(t.asInstanceOf[UTF8String], table)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("markers", table, classOf[MarkerTable].getName)
+    val fn = if (ratio) "ratio" else "count"
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = org.apache.spark.sql.graft.MarkerUtil.$fn($t, $ref);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MarkerCount =
+    copy(child = newChild)
+}
+
+/** `MarkerLangId(text)` → the marker language ID of `text`: the language
+  * whose markers hit most tokens, the first-listed on ties, `"und"` when
+  * none hits (never null). See [[MarkerUtil.langId]].
+  */
+case class MarkerLangId(child: Expression, langs: Seq[(String, Seq[String])])
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(langs.nonEmpty, "language ID needs at least one marker list")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+  override def prettyName: String = "marker_lang_id"
+
+  @transient private lazy val table = new MarkerTable(langs.map(_._2))
+  @transient private lazy val labels = langs.map(l => UTF8String.fromString(l._1)).toArray
+
+  override def eval(input: InternalRow): Any =
+    MarkerUtil.langId(child.eval(input).asInstanceOf[UTF8String], table, labels)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = child.genCode(ctx)
+    val tableRef = ctx.addReferenceObj("markers", table, classOf[MarkerTable].getName)
+    val labelsRef = ctx.addReferenceObj("labels", labels, "UTF8String[]")
+    ev.copy(code = code"""
+      ${t.code}
+      UTF8String ${ev.value} = org.apache.spark.sql.graft.MarkerUtil.langId(
+        ${t.isNull} ? null : ${t.value}, $tableRef, $labelsRef);""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MarkerLangId =
+    copy(child = newChild)
+}
+
+/** Shared kernels of [[C4Lines]] and [[C4DocFlags]], C4's line filter
+  * and page flags (Raffel et al. 2020 §2.2) in one walk over the lines.
+  * A line is kept when, after trimming trailing ASCII spaces (Spark's
+  * `rtrim`; so a line ending `".\r"` fails), its last code point is one
+  * of `.!?"`, it has at least `minLineWords` non-empty `" "`-separated
+  * words, and `lower(line)` does not contain `"javascript"`. Contract in
+  * [[TextRuleUtil]]; the tree forms re-split the text once per consumer
+  * and once more per line inside the filter lambda.
+  */
+object C4Util {
+  private val Javascript = "javascript".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val Lorem = "lorem ipsum".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  private def keep(b: Array[Byte], s: Int, e: Int, minLineWords: Int,
+      useICU: Boolean): Boolean = {
+    var t = e
+    while (t > s && b(t - 1) == 0x20) t -= 1
+    t > s && {
+      val c = b(t - 1)
+      c == '.' || c == '!' || c == '?' || c == '"'
+    } && TextRuleUtil.words(b, s, e) >= minLineWords &&
+      !TextRuleUtil.lowerContains(b, s, e, Javascript, useICU)
+  }
+
+  /** The kept lines joined by `"\n"` (`""` when none is kept). */
+  def filtered(text: UTF8String, minLineWords: Int, useICU: Boolean): UTF8String = {
+    val b = TextRuleUtil.splitBytes(text)
+    val out = new Array[Byte](b.length)
+    var o = 0
+    var s = 0
+    while (s <= b.length) {
+      val e = TextRuleUtil.lineEnd(b, s)
+      if (keep(b, s, e, minLineWords, useICU)) {
+        // a kept line is never empty, so o > 0 exactly after a kept line
+        if (o > 0) { out(o) = 0x0A; o += 1 }
+        System.arraycopy(b, s, out, o, e - s)
+        o += e - s
+      }
+      s = e + 1
+    }
+    UTF8String.fromBytes(out, 0, o)
+  }
+
+  /** `(n_sentences, has_brace, has_lorem_ipsum, n_kept_lines, pass)`:
+    * the `.!?` count, `{` presence, `lower(text)` containing
+    * `"lorem ipsum"`, the kept-line count, and the page verdict; every
+    * field null for a null text.
+    */
+  def docFlags(text: UTF8String, minSentences: Int, minLineWords: Int,
+      useICU: Boolean): InternalRow = {
+    if (text == null) return new GenericInternalRow(5)
+    val raw = text.getBytes
+    val b = if (text.isValid) raw else TextRuleUtil.splitBytes(text)
+    var nSentences = 0L
+    var hasBrace = false
+    var i = 0
+    while (i < b.length) {
+      val c = b(i)
+      if (c == '.' || c == '!' || c == '?') nSentences += 1
+      else if (c == '{') hasBrace = true
+      i += 1
+    }
+    val hasLorem = TextRuleUtil.lowerContains(raw, 0, raw.length, Lorem, useICU)
+    var kept = 0L
+    var s = 0
+    while (s <= b.length) {
+      val e = TextRuleUtil.lineEnd(b, s)
+      if (keep(b, s, e, minLineWords, useICU)) kept += 1
+      s = e + 1
+    }
+    new GenericInternalRow(Array[Any](nSentences, hasBrace, hasLorem, kept,
+      nSentences >= minSentences && !hasBrace && !hasLorem))
+  }
+
+  /** The tree's struct schema: each field is null exactly for a null text. */
+  def flagsType(nullable: Boolean): StructType = StructType(Seq(
+    StructField("n_sentences", LongType, nullable),
+    StructField("has_brace", BooleanType, nullable),
+    StructField("has_lorem_ipsum", BooleanType, nullable),
+    StructField("n_kept_lines", LongType, nullable),
+    StructField("pass", BooleanType, nullable)))
+}
+
+/** `C4Lines(text)` → the lines of `text` that C4's line filter keeps,
+  * joined by `"\n"`; null for a null text. See [[C4Util]].
+  */
+case class C4Lines(child: Expression, minLineWords: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = StringType
+  override def prettyName: String = "c4_lines"
+
+  // read from the session when first used, as Spark's Lower reads it
+  private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override protected def nullSafeEval(t: Any): Any =
+    C4Util.filtered(t.asInstanceOf[UTF8String], minLineWords, useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = org.apache.spark.sql.graft.C4Util.filtered($t, $minLineWords, $useICU);")
+
+  override protected def withNewChildInternal(newChild: Expression): C4Lines =
+    copy(child = newChild)
+}
+
+/** `C4DocFlags(text)` → C4's page flags as one struct (never null; its
+  * fields are null for a null text). See [[C4Util.docFlags]].
+  */
+case class C4DocFlags(child: Expression, minSentences: Int, minLineWords: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = C4Util.flagsType(child.nullable)
+  override def nullable: Boolean = false
+  override def prettyName: String = "c4_doc_flags"
+
+  private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def eval(input: InternalRow): Any =
+    C4Util.docFlags(child.eval(input).asInstanceOf[UTF8String], minSentences,
+      minLineWords, useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${t.code}
+      InternalRow ${ev.value} = org.apache.spark.sql.graft.C4Util.docFlags(
+        ${t.isNull} ? null : ${t.value}, $minSentences, $minLineWords, $useICU);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): C4DocFlags =
+    copy(child = newChild)
+}
+
+/** The thresholds and required stop words of [[GopherFlags]], literal
+  * parameters of the expression (defaults in
+  * [[graft.functions.TextFunctions.gopherQualityFlags]]).
+  */
+final case class GopherParams(minWords: Int, maxWords: Int,
+    minMeanWordLen: Double, maxMeanWordLen: Double, maxSymbolRatio: Double,
+    maxBulletFrac: Double, maxEllipsisFrac: Double, minAlphaWordFrac: Double,
+    requiredStops: Seq[String], minStops: Int) {
+  // one set per listed stop, so a stop listed twice counts twice, as the
+  // tree's sum of per-stop array_contains did
+  @transient lazy val stops: MarkerTable = new MarkerTable(requiredStops.map(Seq(_)))
+}
+
+/** Shared kernel of [[GopherFlags]]: Gopher's quality rules (Rae et al.
+  * 2021, Table A1) in one byte walk. Words are the non-empty `" "`-
+  * separated tokens (a newline is part of a word); lines split on
+  * `"\n"`. Per word: its code-point length, whether it holds an ASCII
+  * letter, and whether it is a required stop. Per line: whether it
+  * starts with `"- "` or `"* "` and whether it ends with `"..."`. The
+  * symbols are `#` and `...`, counted as `#|\.\.\.` matches do, leftmost
+  * and non-overlapping: a run of k dots holds ⌊k/3⌋. Every ratio is
+  * `count / n_words` (or `/ n_lines`) in double, null when `n_words` is
+  * 0, as the tree's `safeDiv`. Contract in [[TextRuleUtil]].
+  */
+object GopherUtil {
+  def flags(text: UTF8String, p: GopherParams): InternalRow = {
+    if (text == null) return nullTextRow(p)
+    val b = TextRuleUtil.splitBytes(text)
+    val n = b.length
+    val stopHits = new Array[Int](p.stops.nSets + 1)
+    var nWords = 0L
+    var lenSum = 0L
+    var nAlpha = 0L
+    var nSymbols = 0L
+    var nLines = 1L
+    var nBullets = 0L
+    var nEllipses = 0L
+    var wordStart = -1 // start of the current word, −1 between words
+    var wordLen = 0
+    var wordAlpha = false
+    var dots = 0       // length of the current run of '.'
+    var lineStart = 0
+    var i = 0
+    while (i <= n) {
+      val c: Int = if (i < n) b(i) else 0x0A
+      if (i == n || c == 0x20) {
+        if (wordStart >= 0) {
+          nWords += 1
+          lenSum += wordLen
+          if (wordAlpha) nAlpha += 1
+          p.stops.hit(b, wordStart, i, stopHits)
+          wordStart = -1
+        }
+      } else {
+        if (wordStart < 0) { wordStart = i; wordLen = 0; wordAlpha = false }
+        if ((c & 0xC0) != 0x80) wordLen += 1
+        val f = c | 0x20
+        if (f >= 'a' && f <= 'z') wordAlpha = true
+      }
+      if (c == '.') dots += 1
+      else {
+        nSymbols += dots / 3
+        if (c == '#') nSymbols += 1
+        if (c == 0x0A) {
+          if (dots >= 3) nEllipses += 1
+          if (i - lineStart >= 2 && (b(lineStart) == '-' || b(lineStart) == '*') &&
+            b(lineStart + 1) == 0x20) nBullets += 1
+          if (i < n) nLines += 1
+          lineStart = i + 1
+        }
+        dots = 0
+      }
+      i += 1
+    }
+    var nStops = 0L
+    var k = 0
+    while (k < p.stops.nSets) { if (stopHits(k) > 0) nStops += 1; k += 1 }
+    def perWord(x: Long): Any = if (nWords == 0) null else x.toDouble / nWords.toDouble
+    val meanLen = perWord(lenSum)
+    val symbolRatio = perWord(nSymbols)
+    val alphaFrac = perWord(nAlpha)
+    val bulletFrac = nBullets.toDouble / nLines.toDouble
+    val ellipsisFrac = nEllipses.toDouble / nLines.toDouble
+    val passWords = nWords >= p.minWords && nWords <= p.maxWords
+    val passMeanLen = meanLen != null && {
+      val m = meanLen.asInstanceOf[Double]
+      m >= p.minMeanWordLen && m <= p.maxMeanWordLen
+    }
+    val passSymbol = symbolRatio != null && symbolRatio.asInstanceOf[Double] <= p.maxSymbolRatio
+    val passBullet = bulletFrac < p.maxBulletFrac
+    val passEllipsis = ellipsisFrac < p.maxEllipsisFrac
+    val passAlpha = alphaFrac != null && alphaFrac.asInstanceOf[Double] >= p.minAlphaWordFrac
+    val passStops = nStops >= p.minStops
+    new GenericInternalRow(Array[Any](nWords, meanLen, symbolRatio, bulletFrac,
+      ellipsisFrac, alphaFrac, nStops, passWords, passMeanLen, passSymbol,
+      passBullet, passEllipsis, passAlpha, passStops,
+      passWords && passMeanLen && passSymbol && passBullet && passEllipsis &&
+        passAlpha && passStops))
+  }
+
+  /** A null text's row, the tree's values with ANSI mode on: no words
+    * (n_words, the per-word ratios and the word-count rule null), no
+    * lines (fractions 0.0), no stops, `pass` false.
+    */
+  private def nullTextRow(p: GopherParams): InternalRow =
+    new GenericInternalRow(Array[Any](null, null, null, 0.0, 0.0, null, 0L,
+      null, false, false, 0.0 < p.maxBulletFrac, 0.0 < p.maxEllipsisFrac, false,
+      0L >= p.minStops, false))
+
+  /** The tree's struct schema: n_words, pass_word_count and pass are null
+    * only for a null text, the per-word ratios also when there are no
+    * words.
+    */
+  def flagsType(nullable: Boolean): StructType = StructType(Seq(
+    StructField("n_words", LongType, nullable),
+    StructField("mean_word_len", DoubleType, nullable = true),
+    StructField("symbol_ratio", DoubleType, nullable = true),
+    StructField("bullet_frac", DoubleType, nullable = false),
+    StructField("ellipsis_frac", DoubleType, nullable = false),
+    StructField("alpha_word_frac", DoubleType, nullable = true),
+    StructField("n_required_stops", LongType, nullable = false),
+    StructField("pass_word_count", BooleanType, nullable),
+    StructField("pass_mean_word_len", BooleanType, nullable = false),
+    StructField("pass_symbol_ratio", BooleanType, nullable = false),
+    StructField("pass_bullets", BooleanType, nullable = false),
+    StructField("pass_ellipsis", BooleanType, nullable = false),
+    StructField("pass_alpha_words", BooleanType, nullable = false),
+    StructField("pass_stopwords", BooleanType, nullable = false),
+    StructField("pass", BooleanType, nullable)))
+}
+
+/** `GopherFlags(text)` → Gopher's quality signals, per-rule verdicts and
+  * composite `pass` as one struct (never null). See [[GopherUtil]].
+  */
+case class GopherFlags(child: Expression, params: GopherParams)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = GopherUtil.flagsType(child.nullable)
+  override def nullable: Boolean = false
+  override def prettyName: String = "gopher_flags"
+
+  override def eval(input: InternalRow): Any =
+    GopherUtil.flags(child.eval(input).asInstanceOf[UTF8String], params)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = child.genCode(ctx)
+    val ref = ctx.addReferenceObj("gopher", params, classOf[GopherParams].getName)
+    ev.copy(code = code"""
+      ${t.code}
+      InternalRow ${ev.value} = org.apache.spark.sql.graft.GopherUtil.flags(
+        ${t.isNull} ? null : ${t.value}, $ref);""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): GopherFlags =
+    copy(child = newChild)
+}
+
 object StringExpressions {
   import org.apache.spark.sql.classic.ExpressionUtils
+
+  def markerCount(text: Column, markers: Seq[String], ratio: Boolean): Column =
+    ExpressionUtils.column(MarkerCount(ExpressionUtils.expression(text), markers, ratio))
+
+  def markerLangId(text: Column, langs: Seq[(String, Seq[String])]): Column =
+    ExpressionUtils.column(MarkerLangId(ExpressionUtils.expression(text), langs))
+
+  def c4Lines(text: Column, minLineWords: Int): Column =
+    ExpressionUtils.column(C4Lines(ExpressionUtils.expression(text), minLineWords))
+
+  def c4DocFlags(text: Column, minSentences: Int, minLineWords: Int): Column =
+    ExpressionUtils.column(
+      C4DocFlags(ExpressionUtils.expression(text), minSentences, minLineWords))
+
+  def gopherFlags(text: Column, params: GopherParams): Column =
+    ExpressionUtils.column(GopherFlags(ExpressionUtils.expression(text), params))
 
   def tokenWindows(text: Column, sep: String, width: Int, step: Int,
       partial: Boolean): Column =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, NamedLambdaVariable, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction, NamedLambdaVariable, StringSplit}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -154,6 +154,18 @@ class PlanAuditSpec extends AnyFunSuite {
       .filter(_._2.nonEmpty)
     assert(bad.isEmpty, bad.map { case (n, s) =>
       s"$n: ${s.size} × ${s.distinct.mkString(", ")}" }.mkString("\n"))
+  }
+
+  test("noLambda plans hold no higher-order function") {
+    val flagged = audited.filter(_._1.noLambda)
+    assert(flagged.nonEmpty)
+    val bad = for {
+      (a, _) <- flagged
+      node <- withCachedPlans(a.df.queryExecution.executedPlan)
+      f <- node.expressions.flatMap(_.collect { case f: HigherOrderFunction => f })
+    } yield s"${a.name}: ${f.prettyName} in ${node.nodeName}"
+    if (bad.nonEmpty) fail(s"${bad.size} higher-order functions:\n" +
+      bad.groupBy(identity).map { case (k, v) => s"${v.size} × $k" }.mkString("\n"))
   }
 
   test("bucketed candidate generators plan equijoins, not cartesian/nested-loop") {

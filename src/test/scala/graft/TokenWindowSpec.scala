@@ -1,7 +1,8 @@
 package graft
 
 import graft.functions.{TextFunctions, TextTreeForms}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.KernelDiff.assertSame
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFunctions
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,26 +40,6 @@ class TokenWindowSpec extends AnyFunSuite {
   private def fixture: DataFrame =
     texts.toDF("t").union(spark.range(1)
       .select(unhex(lit(malformedHex)).cast("string").as("t")))
-
-  /** Asserts native == tree on every row and the same output schema,
-    * through both evaluation paths: the optimizer folds a projection
-    * over local rows with the interpreted `eval`, and a projection
-    * above an exchange runs the generated code.
-    */
-  private def assertSame(df: DataFrame,
-      pairs: Seq[(String, Column, Column)]): Unit =
-    for (d <- Seq(df, df.repartition(1))) {
-      val sel = d.select(col("t") +: pairs.zipWithIndex.flatMap {
-        case ((_, n, e), i) =>
-          Seq(n.as(s"n$i"), e.as(s"e$i"), (n <=> e).as(s"eq$i"))
-      }: _*)
-      for (((label, _, _), i) <- pairs.zipWithIndex)
-        assert(sel.schema(s"n$i").copy(name = "") === sel.schema(s"e$i").copy(name = ""),
-          s"schema of $label")
-      for (r <- sel.collect(); ((label, _, _), i) <- pairs.zipWithIndex)
-        assert(r.getBoolean(3 * i + 3),
-          s"$label on '${r.get(0)}': native ${r.get(3 * i + 1)} != tree ${r.get(3 * i + 2)}")
-    }
 
   test("fixture keeps its malformed row as raw bytes") {
     assert(fixture.filter(hex(col("t")) === malformedHex).count() === 1L)

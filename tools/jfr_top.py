@@ -1,12 +1,16 @@
 #!/usr/bin/env python3
 """Where do a JFR recording's executor CPU samples go?
 
-Runs `jfr print --events jdk.ExecutionSample --stack-depth 80` on a
+Runs `jfr print --events jdk.ExecutionSample --stack-depth 2048` on a
 recording, keeps the samples taken on Spark executor threads ("Executor
 task launch worker ...") from an optional start time on, and prints the
 top groups three ways:
 
-  expression path   the Catalyst expression classes on the stack, from the
+  expression path   "(task deserialization)" for a sample under
+                    `JavaSerializerInstance.deserialize` (a task reading
+                    its task binary: the plan, its closures and the
+                    objects code generation references); otherwise the
+                    Catalyst expression classes on the stack, from the
                     operator's root expression inward (generated classes,
                     row plumbing and consecutive repeats dropped), cut at
                     --depth; without one, the innermost operator frame
@@ -20,6 +24,10 @@ Usage:
 
 `--since HH:MM:SS` keeps samples taken at or after that time of day (the
 clock `jfr print` shows); `--since -60` keeps the last 60 s of samples.
+
+The JVM records 64 frames per stack by default, too few to see which
+frame a deep deserialization sample sits under; record with
+`-XX:FlightRecorderOptions:stackdepth=2048`.
 """
 import argparse
 import collections
@@ -32,13 +40,15 @@ import sys
 EXECUTOR = "Executor task launch worker"
 CATALYST = "org.apache.spark.sql.catalyst.expressions."
 GRAFT = ("graft.", "org.apache.spark.sql.graft.")
+DESERIALIZE = "org.apache.spark.serializer.JavaSerializerInstance.deserialize"
+STACK_DEPTH = "2048"
 TIME = re.compile(r"startTime = (\d+):(\d+):(\d+(?:\.\d+)?)")
 
 
 def samples(path):
     """Yield (seconds since midnight, thread name, frames leaf first)."""
     jfr = shutil.which("jfr") or sys.exit("jfr_top: no `jfr` on PATH")
-    cmd = [jfr, "print", "--events", "jdk.ExecutionSample", "--stack-depth", "80", path]
+    cmd = [jfr, "print", "--events", "jdk.ExecutionSample", "--stack-depth", STACK_DEPTH, path]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True, errors="replace")
     t, thread, frames, in_stack = None, "", [], False
     for line in proc.stdout:
@@ -77,6 +87,8 @@ PLUMBING = ("Unsafe", "InterpretedUnsafeProjection", "CodeGeneratorWithInterpret
 
 
 def expression_path(frames, depth):
+    if any(f.startswith(DESERIALIZE) for f in frames):
+        return "(task deserialization)"
     path = []
     for f in reversed(frames):  # root first
         if f.startswith(CATALYST) and "GeneratedClass" not in f and ".codegen." not in f:
