@@ -62,6 +62,10 @@ object PlanAudit {
     *    lambda runs interpreted, element by element, and the lambda tree
     *    is deserialized with every task — set on the curation page
     *    filter, whose rules each run as one native pass.
+    *  - `smallTaskBinaries`: every map stage's task binary, the plan and
+    *    closures each task deserializes, stays under a bound that no
+    *    per-signature-value expression tree fits in — set on the MinHash
+    *    plans, whose k signature values come from one kernel call.
     */
   final case class Audited(
       name: String,
@@ -79,7 +83,8 @@ object PlanAudit {
       noSort: Boolean = false,
       joinFree: Boolean = false,
       noLoopInvariantSplit: Boolean = false,
-      noLambda: Boolean = false)
+      noLambda: Boolean = false,
+      smallTaskBinaries: Boolean = false)
 
   /** Every operator of a physical plan outside its cached relations:
     * the walk stops at each InMemoryTableScan and looks through AQE's
@@ -140,11 +145,13 @@ object PlanAudit {
         noSinglePartition = true, equiJoinOnly = true),
       Audited("minhash LSH banding (shuffle on (band, slice-array) key)",
         Dedup.minHashPairs(docs, col("doc_id"), col("text")),
-        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true),
-      Audited("minhash keep verdicts (claim agg + verdict agg, no pair join)",
+        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true,
+        smallTaskBinaries = true),
+      Audited("minhash keep verdicts (claim window + verdict agg, no join)",
         Dedup.minHashKeep(docs, col("doc_id"), col("text"),
           ord = col("doc_id")),
-        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true),
+        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true,
+        smallTaskBinaries = true),
       Audited("brute-force ANN (native cosine expr — scoring inside codegen)",
         graft.operators.Similarity.bruteForceTopK(embs,
           embs.filter(col("vec_id") < 5), col("vec_id"), col("embedding"), 5),

@@ -210,6 +210,7 @@ object Dedup {
     * a ∈ [1, p−1], b ∈ [0, p−1], drawn from a seeded generator.
     */
   def minHashCoeffs(k: Int, seed: Long = 42L): Seq[(Long, Long)] = {
+    requireK(k)
     val p = graft.functions.PortableHash.P
     val rnd = new scala.util.Random(seed)
     // floorMod, not abs-then-mod. NOTE: the two differ for EVERY
@@ -223,30 +224,49 @@ object Dedup {
       java.lang.Math.floorMod(rnd.nextLong(), p)))
   }
 
+  private def requireK(k: Int): Unit =
+    require(k >= 1, s"k, the MinHash signature length, must be >= 1, got $k")
+
   /** MinHash signatures: k permutation-style hash functions
     * `h_j(s) = (a_j·x + b_j) mod p` over a base shingle hash x,
-    * minimized per document in ONE aggregation pass (k min
-    * aggregates, no per-hash shuffle). Deterministic: a/b derive from
-    * a seeded generator. `baseHash` defaults to xxhash64; pass
+    * minimized per document: one aggregation collects each document's
+    * hashes, and the native kernel
+    * ([[org.apache.spark.sql.graft.MinHashMins]]) folds them in one pass
+    * with k running mins. Deterministic: a/b derive from a seeded
+    * generator. `baseHash` defaults to xxhash64; pass
     * [[graft.functions.PortableHash.polyHash]] when results must be
     * reproducible outside Spark (cross-engine verification).
     */
   def minHashSignatures(sh: DataFrame, k: Int = 64,
       seed: Long = 42L,
       baseHash: Column => Column = xxhash64(_)): DataFrame = {
-    // 2^31−1: a·x stays under 2^62, so the mulmod never overflows a
-    // long (ANSI-safe)
-    val p = graft.functions.PortableHash.P
-    val abs = minHashCoeffs(k, seed)
-    val x = pmod(baseHash(col("shingle")), lit(p))
-    val mins = abs.zipWithIndex.map { case ((a, b), j) =>
-      F.min(pmod(x * lit(a) + lit(b), lit(p))).as(s"h$j")
-    }
-    sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until k).map(j => col(s"h$j")): _*).as("sig"))
+    requireK(k)
+    docSignatures(sh.select(col("doc_id"), array(baseHash(col("shingle"))).as("__hs")),
+      k, seed)
   }
 
-  private def pmod(x: Column, m: Column): Column = ((x % m) + m) % m
+  /** One signature per distinct `doc_id` of `rows` (doc_id, __hs: an
+    * array of base hashes): the kernel over the concatenation of the
+    * id's hash arrays, which equals the signature of the union of its
+    * shingles because the min is duplicate-insensitive. Ids whose arrays
+    * hold no hash at all are dropped.
+    */
+  private def docSignatures(rows: DataFrame, k: Int, seed: Long): DataFrame =
+    rows.groupBy("doc_id").agg(F.flatten(F.collect_list(col("__hs"))).as("__hs"))
+      .filter(F.size(col("__hs")) > 0)
+      .select(col("doc_id"), signatureOf(col("__hs"), k, seed).as("sig"))
+
+  /** The base hashes of a text's word n-grams: the kernel's input, which
+    * it reduces mod p itself. A lambda, because `baseHash` is any column
+    * function.
+    */
+  private def gramHashes(text: Column, n: Int, sep: String,
+      baseHash: Column => Column): Column =
+    F.transform(shingleArray(text, n, sep), baseHash)
+
+  /** The k-value signature of a base-hash array (one kernel call). */
+  private def signatureOf(hs: Column, k: Int, seed: Long): Column =
+    org.apache.spark.sql.graft.MinHashExpressions.minHashMins(hs, minHashCoeffs(k, seed))
 
   /** LSH banding: split the signature into `bands` rows-per-band
     * slices; documents sharing any identical (band, slice) are
@@ -273,14 +293,15 @@ object Dedup {
     * size(sig) div bands, with the LAST band absorbing the remainder —
     * every signature hash participates in banding even when bands does
     * not divide k. (bands > k degenerates to empty early slices; the
-    * public entry points reject that combination.)
+    * public entry points reject that combination.) A null `sig` gives
+    * no rows.
     */
   private[operators] def bandBuckets(withSig: DataFrame, bands: Int): DataFrame = {
     val rpb = s"(size(sig) div $bands)"
     val len = s"IF(b = ${bands - 1}, size(sig) - b * $rpb, $rpb)"
     withSig.select(col("*"),
-        posexplode(expr(s"transform(sequence(0, ${bands - 1}), b -> " +
-          s"slice(sig, b * $rpb + 1, $len))")))
+        posexplode(expr(s"IF(sig IS NULL, NULL, transform(sequence(0, ${bands - 1}), b -> " +
+          s"slice(sig, b * $rpb + 1, $len)))")))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
       .drop("sig")
@@ -310,12 +331,12 @@ object Dedup {
     *
     * `cacheSignatures` (default on) persists the signature table —
     * k longs per document, tiny next to the corpus — before the
-    * banding stage. The signature aggregation (shingle explode +
-    * distinct + k-min pass over every token) is the pipeline's
-    * dominant cost and has FOUR consumers downstream (both sides of
-    * the band self-join and both agreement re-joins); without the
-    * persist, Spark's exchange reuse only partially deduplicates the
-    * recomputation under AQE. The cache entry is released by the
+    * banding stage. The table (every document's shingle hashes,
+    * collected per doc_id, then one kernel pass per document) has FOUR
+    * consumers downstream (both sides of the band self-join and both
+    * agreement re-joins); without the persist, Spark's exchange reuse
+    * only partially deduplicates the recomputation under AQE. The
+    * cache entry is released by the
     * ContextCleaner once the result plan is unreachable; pass false to
     * manage persistence yourself (e.g. when composing with your own
     * cache of the signatures).
@@ -343,10 +364,15 @@ object Dedup {
       baseHash: Column => Column = xxhash64(_),
       cacheSignatures: Boolean = true,
       sep: String = " "): (DataFrame, DataFrame) = {
+    requireK(k)
     require(bands >= 1 && bands <= k,
       s"bands must be in [1, k=$k], got $bands (bands > k would make " +
         "every per-band slice empty — all docs collide in every bucket)")
-    val sigs = minHashSignatures(shingles(df, id, text, n, sep), k, seed, baseHash)
+    // the shingle hashes are computed row-locally and collected per
+    // doc_id: one shuffle of 8-byte hashes instead of the distinct and
+    // the aggregation of the exploded (doc_id, shingle) string table
+    val sigs = docSignatures(
+      df.select(id.as("doc_id"), gramHashes(text, n, sep, baseHash).as("__hs")), k, seed)
     val shared =
       if (cacheSignatures)
         sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -364,31 +390,18 @@ object Dedup {
     * Documents with no shingles (shorter than n words) get an
     * all-null signature — filter or handle explicitly downstream.
     *
-    * The intermediate base-hash array is materialized in its own
-    * projection so the k per-coefficient folds share ONE hash pass
-    * (CollapseProject keeps a multiply-referenced non-trivial alias
-    * out of line rather than inlining it k times).
+    * One hash pass per shingle and one kernel call per row
+    * ([[org.apache.spark.sql.graft.MinHashMins]]): the k mins are taken
+    * in a single loop over the hashes.
     */
   def withMinHashSignature(df: DataFrame, text: Column, out: String = "sig",
       n: Int = 2, k: Int = 64, seed: Long = 42L,
       baseHash: Column => Column = xxhash64(_), sep: String = " "): DataFrame = {
-    val p = graft.functions.PortableHash.P
-    val coeffs = minHashCoeffs(k, seed)
+    requireK(k)
     require(!df.columns.contains(out),
       s"output column '$out' already exists on the input — pick another " +
         "`out` name (silently replacing a caller's column is never right)")
-    // collision-free temp name: the input may legitimately carry
-    // __graft_xs (e.g. a frame round-tripped through another graft op)
-    val xs = Iterator.from(0)
-      .map(i => if (i == 0) "__graft_xs" else s"__graft_xs$i")
-      .find(n => !df.columns.contains(n)).get
-    df.withColumn(xs,
-        F.transform(shingleArray(text, n, sep), s => pmod(baseHash(s), lit(p))))
-      .withColumn(out, F.array(coeffs.map { case (a, b) =>
-        array_min(F.transform(col(xs),
-          x => pmod(x * lit(a) + lit(b), lit(p))))
-      }: _*))
-      .drop(xs)
+    df.withColumn(out, signatureOf(gramHashes(text, n, sep, baseHash), k, seed))
   }
 
   /** Near-dup SUPPRESSION (a keep/drop verdict per document) rather
@@ -400,9 +413,14 @@ object Dedup {
     * near-dups of a SUPPRESSED document may also be suppressed
     * (transitive chains — the standard greedy bucket-claim behavior).
     *
-    * Returns (doc_id, lost_bands, kept), one row per document with at
-    * least one shingle. All stages are bounded aggregations/joins on
-    * the (band, bucket) key — no pair materialization at all. Cost
+    * Returns (doc_id, lost_bands, kept), one row per document with a
+    * non-null id and at least one shingle. Each input row is banded on
+    * its own: two rows sharing an id both claim (identical rows are
+    * counted twice in `lost_bands`). The signatures are a projection of
+    * the input rows (one kernel call per row), claims are one window
+    * on the (band, bucket) key and the verdict one aggregation by
+    * doc_id — two shuffles of docs × bands rows, no join and no pair
+    * materialization at all. Cost
     * regime (measured head-to-head vs [[minHashPairs]] + anti-join,
     * the Bench `dedup_minhash_keep*` rows): at gate-scale duplicate
     * density the two forms are within ~35% of each other either way —
@@ -418,22 +436,23 @@ object Dedup {
       n: Int = 2, k: Int = 64, bands: Int = 16, seed: Long = 42L,
       baseHash: Column => Column = xxhash64(_),
       sep: String = " "): DataFrame = {
+    requireK(k)
     require(bands >= 1 && bands <= k,
       s"bands must be in [1, k=$k], got $bands")
-    val sigs = minHashSignatures(shingles(df, id, text, n, sep), k, seed, baseHash)
-    val ords = df.select(id.as("doc_id"), ord.as("__ord"))
-    // NOT materialized (round-14, measured): the claim aggregation and
-    // the verdict join both hash-partition this table by (band,
-    // bucket), so exchange reuse already computes the signature
-    // pipeline once and shares the one exchange — a localCheckpoint
-    // here replaced that shared exchange with a materialization plus
-    // TWO exchanges and read 2.8× slower on the dedup_minhash_keep row
-    val withOrd = bandBuckets(sigs, bands).join(ords, "doc_id")
-    val claims = withOrd.groupBy("band", "bucket")
-      .agg(F.min(struct(col("__ord"), col("doc_id"))).as("__c"))
-      .select(col("band"), col("bucket"),
-        col("__c").getField("doc_id").as("__claimant"))
-    withOrd.join(claims, Seq("band", "bucket"))
+    // (doc_id, __ord, sig) in one pass over the rows. The hash array is
+    // its own projection, so the size test and the kernel share it, and
+    // a text with no shingle gets a null sig, which bandBuckets explodes
+    // to nothing: a Filter here would be pushed below the projection
+    // and hash every shingle twice.
+    val sigs = df.select(id.as("doc_id"), ord.as("__ord"),
+        gramHashes(text, n, sep, baseHash).as("__hs"))
+      .filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), col("__ord"),
+        when(F.size(col("__hs")) > 0, signatureOf(col("__hs"), k, seed)).as("sig"))
+    val claimant = F.min(struct(col("__ord"), col("doc_id")))
+      .over(Window.partitionBy("band", "bucket")).getField("doc_id")
+    bandBuckets(sigs, bands)
+      .select(col("doc_id"), claimant.as("__claimant"))
       .groupBy("doc_id")
       .agg(F.count(when(col("__claimant") =!= col("doc_id"), lit(1)))
         .as("lost_bands"))
@@ -461,6 +480,7 @@ object Dedup {
       n: Int = 2, k: Int = 64, bands: Int = 16, seed: Long = 42L,
       baseHash: Column => Column = xxhash64(_),
       sep: String = " "): DataFrame = {
+    requireK(k)
     require(bands >= 1 && bands <= k,
       s"bands must be in [1, k=$k], got $bands")
     if (!df.isStreaming)
@@ -1009,6 +1029,7 @@ object Dedup {
       baseHash: Column => Column = xxhash64(_),
       broadcastEval: Boolean = true, sep: String = " ",
       cacheSignatures: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
+    requireK(k)
     require(bands >= 1 && bands <= k,
       s"bands must be in [1, k=$k], got $bands")
     def sigOf(df: DataFrame, id: Column, text: Column, outId: String) = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFun
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.graft.SparkJobs
+import org.apache.spark.sql.graft.{SparkJobs, TaskBinaries}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Machine-checked scale invariants over [[PlanAudit.plans]] — the same
@@ -17,6 +17,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
+
+  /** The smallTaskBinaries bound. With k = 64, the largest map-stage
+    * binary of the MinHash plans was 436.1 KiB (keep) and 416.5 KiB
+    * (pairs) while the signatures were 64 min aggregates and 64 lambdas,
+    * each tree carrying its attributes and creation stack traces, and is
+    * 70.0 KiB and 27.2 KiB with the kernel.
+    */
+  private val MaxTaskBinaryBytes = 128 * 1024
 
   private lazy val audited = PlanAudit.plans(spark, dir)
     .map(a => (a, a.df.queryExecution.executedPlan.toString))
@@ -166,6 +174,19 @@ class PlanAuditSpec extends AnyFunSuite {
     } yield s"${a.name}: ${f.prettyName} in ${node.nodeName}"
     if (bad.nonEmpty) fail(s"${bad.size} higher-order functions:\n" +
       bad.groupBy(identity).map { case (k, v) => s"${v.size} × $k" }.mkString("\n"))
+  }
+
+  test("smallTaskBinaries plans ship no map-stage task binary over the bound") {
+    val flagged = audited.filter(_._1.smallTaskBinaries)
+    assert(flagged.nonEmpty)
+    for ((a, _) <- flagged) {
+      a.df.collect()
+      val stages = TaskBinaries.mapStages(a.df)
+      assert(stages.nonEmpty, a.name)
+      info(s"${a.name}:\n${stages.mkString("\n")}")
+      val big = stages.filter(_.bytes > MaxTaskBinaryBytes)
+      assert(big.isEmpty, s"${a.name}, over $MaxTaskBinaryBytes bytes:\n${big.mkString("\n")}")
+    }
   }
 
   test("bucketed candidate generators plan equijoins, not cartesian/nested-loop") {
