@@ -66,6 +66,14 @@ object PlanAudit {
     *    closures each task deserializes, stays under a bound that no
     *    per-signature-value expression tree fits in — set on the MinHash
     *    plans, whose k signature values come from one kernel call.
+    *  - `noRegex`: no `regexp_replace`, `regexp_extract_all`, `rlike` or
+    *    `regexp_count` anywhere in the plan — set on the PII redaction,
+    *    whose four categories run as one native pass per document.
+    *  - `signOnce`: the plan and each cache it reads call the MinHash
+    *    kernel at most once per distinct input — set on the fuzzy
+    *    decontamination, where a filter on the signature, pushed below
+    *    the projection that computes it, would sign every document
+    *    twice.
     */
   final case class Audited(
       name: String,
@@ -84,7 +92,9 @@ object PlanAudit {
       joinFree: Boolean = false,
       noLoopInvariantSplit: Boolean = false,
       noLambda: Boolean = false,
-      smallTaskBinaries: Boolean = false)
+      smallTaskBinaries: Boolean = false,
+      noRegex: Boolean = false,
+      signOnce: Boolean = false)
 
   /** Every operator of a physical plan outside its cached relations:
     * the walk stops at each InMemoryTableScan and looks through AQE's
@@ -246,7 +256,8 @@ object PlanAudit {
         Dedup.contaminationFuzzy(docs.where(col("doc_id") % 10 =!= 0),
           col("doc_id"), col("text"),
           docs.where(col("doc_id") % 10 === 0), col("doc_id"), col("text")),
-        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true),
+        noSinglePartition = true, equiJoinOnly = true, noLoopInvariantSplit = true,
+        signOnce = true),
       Audited("semdedup (map-side centroid assignment; cluster-key equijoin only)",
         Dedup.semDedup(embs, col("vec_id"), col("embedding"), col("vec_id"),
           graft.operators.Similarity.ivfCentroids(embs, col("vec_id"),
@@ -403,6 +414,12 @@ object PlanAudit {
           .filter(TextFunctions.gopherQualityFlags(text).getField("pass"))
           .withColumn("lang", TextFunctions.langIdScript(text))
       }, noLambda = true),
+      Audited("pii redaction (one native pass per document, no regex)", {
+        val text = col("text")
+        docs.withColumn("pii", TextFunctions.piiStats(text))
+          .withColumn("text", TextFunctions.redactPii(text))
+          .withColumn("tokens", TextFunctions.tokenCountWs(text))
+      }, noShuffle = true, noRegex = true),
       Audited("resample (one (keys, bucket) hash agg + summary-sized bin-domain equijoin)",
         graft.operators.Resample.resample(
           new GroupBy(ev, Seq(col("user_id"))), col("ts"), 21600000000000L,

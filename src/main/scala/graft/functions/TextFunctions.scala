@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.graft.{GopherParams, StringExpressions}
+import org.apache.spark.sql.graft.{GopherParams, PiiExpressions, StringExpressions}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Text-analysis expressions for training-data pipelines: token
@@ -17,8 +17,12 @@ object TextFunctions {
   // The counts below use array_size, not size: size(null) is −1 when
   // spark.sql.ansi.enabled is false, and a −1 poisons token sums.
 
-  /** Whitespace token count; null for a null text. */
-  def tokenCountWs(text: Column): Column = array_size(split(text, " "))
+  /** Whitespace token count: the size of `split(text, " ")`, so
+    * leading, trailing and repeated spaces count empty tokens and `""`
+    * is one token; null for a null text. Counted natively, without the
+    * token array ([[org.apache.spark.sql.graft.SpaceTokenCount]]).
+    */
+  def tokenCountWs(text: Column): Column = StringExpressions.spaceTokenCount(text)
 
   /** Regex token count — a BPE-ish lexer class; null for a null text. */
   def tokenCountRegex(text: Column, pattern: String = "[a-z0-9]+"): Column =
@@ -573,7 +577,7 @@ object TextFunctions {
 
   // ------------------------------------------------------ PII scrubbing
   // Standard pretraining-pipeline redaction (emails, IPs, SSN-shaped
-  // ids, phone numbers) as row-local regexp expressions — a projection
+  // ids, phone numbers) as one row-local native pass — a projection
   // over the corpus scan, no shuffle, nothing to tune at 100 TB. The
   // patterns deliberately use only the Java-regex ∩ RE2 common subset
   // (char classes, bounded quantifiers, \b, alternation — no
@@ -582,7 +586,12 @@ object TextFunctions {
   // pattern can eat part of an earlier category's match.
 
   /** The category → (pattern, replacement token) redaction table, in
-    * application order.
+    * application order. The kernel behind [[redactPii]] and [[piiStats]]
+    * ([[org.apache.spark.sql.graft.PiiUtil]]) applies exactly these
+    * patterns with Spark's regex semantics, in time linear in the text
+    * (the email pattern alone, run as a Java regex, is quadratic in the
+    * length of a run with no `@`); the oracle SQL replays them as
+    * regexes.
     */
   val PiiPatterns: Seq[(String, String, String)] = Seq(
     ("email", "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>"),
@@ -591,24 +600,24 @@ object TextFunctions {
     ("phone", "\\+\\d{9,15}|\\b\\d{3}[-.]\\d{3}[-.]\\d{4}\\b", "<PHONE>"))
 
   /** Text with every PII category replaced by its token, categories
-    * applied in [[PiiPatterns]] order.
+    * applied in [[PiiPatterns]] order: `regexp_replace` by each pattern
+    * in turn, as one linear-time native pass. Null for a null text.
     */
   def redactPii(text: Column): Column =
-    PiiPatterns.foldLeft(text) { case (t, (_, pat, tok)) =>
-      regexp_replace(t, pat, tok)
-    }
+    PiiExpressions.piiScan(text).getField("text")
 
   /** Per-category PII match counts as a struct — counted on the same
     * progressively-redacted text [[redactPii]] replaces on, so the
-    * counts are exactly the substitutions it performs.
+    * counts are exactly the substitutions it performs (`regexp_count`
+    * by each pattern on its category's input). The same linear-time
+    * native pass as [[redactPii]]: a projection holding both runs it
+    * once. Every count is null for a null text.
     */
   def piiStats(text: Column): Column = {
-    val (_, fields) = PiiPatterns.foldLeft((text, Seq.empty[Column])) {
-      case ((t, acc), (cat, pat, tok)) =>
-        (regexp_replace(t, pat, tok),
-          acc :+ regexp_count(t, lit(pat)).cast(LongType).as(s"n_$cat"))
-    }
-    struct(fields: _*)
+    val scan = PiiExpressions.piiScan(text)
+    struct(PiiPatterns.map { case (cat, _, _) =>
+      scan.getField(s"n_$cat").as(s"n_$cat")
+    }: _*)
   }
 
   // --------------------------------------- published curation rule sets

@@ -404,6 +404,21 @@ object Dedup {
     df.withColumn(out, signatureOf(gramHashes(text, n, sep, baseHash), k, seed))
   }
 
+  /** `df` with its column `text` replaced by the signature `sig`, one
+    * row for each row with shingle signal: a shingle with a non-null hash
+    * (without one the kernel's k values would all be null). The hash
+    * array is a projection of its own that the test and the kernel
+    * share, and a row without signal explodes to no row: a Filter on
+    * `sig` would be pushed below the projection that computes it and
+    * sign every document twice.
+    */
+  private def signaturesWithSignal(df: DataFrame, text: String, n: Int, k: Int,
+      seed: Long, baseHash: Column => Column, sep: String): DataFrame =
+    df.withColumn("__hs", gramHashes(col(text), n, sep, baseHash))
+      .select(col("*"), explode(when(F.array_max(col("__hs")).isNotNull,
+        array(signatureOf(col("__hs"), k, seed)))).as("sig"))
+      .drop(text, "__hs")
+
   /** Near-dup SUPPRESSION (a keep/drop verdict per document) rather
     * than pair enumeration: each of a document's LSH band buckets is
     * CLAIMED by the first document sharing it (minimum `ord`, doc_id
@@ -488,12 +503,10 @@ object Dedup {
         seed, baseHash, sep)
         .filter(col("kept")).select("doc_id")
     else {
-      val sigDf = withMinHashSignature(
-          df.select(id.as("doc_id"), col(eventTime), text.as("__graft_t")),
-          col("__graft_t"), "sig", n, k, seed, baseHash, sep)
-        .drop("__graft_t")
-        // empty documents have no shingle signal: all-null signature
-        .filter(F.size(col("sig")) > 0 && col("sig").getItem(0).isNotNull)
+      // empty documents have no shingle signal and no row here
+      val sigDf = signaturesWithSignal(
+        df.select(id.as("doc_id"), col(eventTime), text.as("__graft_t")),
+        "__graft_t", n, k, seed, baseHash, sep)
       bandBuckets(sigDf, bands)
         .withWatermark(eventTime, horizon)
         .dropDuplicatesWithinWatermark(Seq("band", "bucket"))
@@ -1033,14 +1046,10 @@ object Dedup {
     require(bands >= 1 && bands <= k,
       s"bands must be in [1, k=$k], got $bands")
     def sigOf(df: DataFrame, id: Column, text: Column, outId: String) = {
-      val sig =
-        withMinHashSignature(df.select(id.as(outId), text.as("__graft_t")),
-          col("__graft_t"), "sig", n, k, seed, baseHash, sep)
-          .drop("__graft_t")
-          // sub-n-word documents have no shingle signal (all-null
-          // signature) — mirror the aggregation form, which never
-          // emits a row for them
-          .filter(F.size(col("sig")) > 0 && col("sig").getItem(0).isNotNull)
+      // sub-n-word documents have no shingle signal — mirror the
+      // aggregation form, which never emits a row for them
+      val sig = signaturesWithSignal(df.select(id.as(outId), text.as("__graft_t")),
+        "__graft_t", n, k, seed, baseHash, sep)
       // persisted like minHashPairs' signature table: each side's
       // k-element signature expression feeds BOTH the band explode
       // (which would otherwise collapse the projection and re-evaluate

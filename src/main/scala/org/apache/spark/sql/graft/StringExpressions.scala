@@ -1134,6 +1134,46 @@ case class GopherFlags(child: Expression, params: GopherParams)
     copy(child = newChild)
 }
 
+/** `SpaceTokenCount(text)` → the size of `split(text, " ")` without the
+  * token array: the number of 0x20 bytes plus one, null for a null text.
+  * Java's `split` with limit −1 gives n separators n+1 tokens, so `""` is
+  * one token and leading, trailing and repeated spaces count empty ones.
+  * A space byte never occurs inside a multi-byte sequence, and the
+  * decoding `split` applies to malformed UTF-8 keeps every ASCII byte, so
+  * the raw bytes are counted as they are.
+  */
+case class SpaceTokenCount(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "token_count_ws"
+
+  override protected def nullSafeEval(t: Any): Any =
+    TokenCountUtil.spaces(t.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"org.apache.spark.sql.graft.TokenCountUtil.spaces($t)")
+
+  override protected def withNewChildInternal(newChild: Expression): SpaceTokenCount =
+    copy(child = newChild)
+}
+
+/** Shared kernel of [[SpaceTokenCount]]. */
+object TokenCountUtil {
+  def spaces(text: UTF8String): Int = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    var n = 1
+    var i = 0
+    while (i < text.numBytes) {
+      if (Platform.getByte(base, off + i) == 0x20) n += 1
+      i += 1
+    }
+    n
+  }
+}
+
 object StringExpressions {
   import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -1178,4 +1218,7 @@ object StringExpressions {
   def normalizeForDedup(text: Column): Column =
     ExpressionUtils.column(
       NormalizeForDedup(ExpressionUtils.expression(text)))
+
+  def spaceTokenCount(text: Column): Column =
+    ExpressionUtils.column(SpaceTokenCount(ExpressionUtils.expression(text)))
 }

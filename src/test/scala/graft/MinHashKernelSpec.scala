@@ -121,6 +121,32 @@ class MinHashKernelSpec extends AnyFunSuite {
     sigs.unpersist()
   }
 
+  test("contaminationFuzzyWithSignatures rows equal the filtered signature projection") {
+    val train = fixture.withColumn("id", coalesce(col("id"), lit(-1L)))
+    val eval = docs.select(col("doc_id"), col("text")).limit(40)
+      .union(Seq((900L, "alpha beta gamma delta"), (901L, "x"), (902L, null: String))
+        .toDF("doc_id", "text"))
+    for ((h, baseHash) <- hashes) {
+      // the form the signature tables had: signature projection, then a
+      // filter on its first value
+      def filtered(d: DataFrame, id: String, t: String, out: String) =
+        Dedup.withMinHashSignature(d.select(col(id).as(out), col(t).as("__t")),
+          col("__t"), baseHash = baseHash).drop("__t")
+          .filter(F.size(col("sig")) > 0 && col("sig").getItem(0).isNotNull)
+      val (flags, tSig, eSig) = Dedup.contaminationFuzzyWithSignatures(train, col("id"),
+        col("t"), eval, col("doc_id"), col("text"), threshold = 0.0, baseHash = baseHash)
+      val tRef = filtered(train, "id", "t", "doc_id")
+      val eRef = filtered(eval, "doc_id", "text", "eval_id")
+      assert(rows(tSig) === rows(tRef), s"train signatures, $h")
+      assert(rows(eSig) === rows(eRef), s"eval signatures, $h")
+      assert(tSig.schema === tRef.schema && eSig.schema === eRef.schema, h)
+      assert(rows(flags) === rows(Dedup.contaminationFuzzyWithSignatures(train, col("id"),
+        col("t"), eval, col("doc_id"), col("text"), threshold = 0.0, baseHash = baseHash,
+        cacheSignatures = false)._1), s"flags, $h")
+      tSig.unpersist(); eSig.unpersist()
+    }
+  }
+
   test("a null-id document is absent and claims no bucket") {
     val text = "alpha beta gamma delta epsilon zeta"
     val d = Seq((None, text, 0L), (Some(2L), text, 1L),

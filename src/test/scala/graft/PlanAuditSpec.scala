@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction, NamedLambdaVariable, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction, NamedLambdaVariable, RLike, RegExpCount, RegExpExtractAll, RegExpReplace, StringSplit}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.graft.{SparkJobs, TaskBinaries}
+import org.apache.spark.sql.graft.{MinHashMins, SparkJobs, TaskBinaries}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Machine-checked scale invariants over [[PlanAudit.plans]] — the same
@@ -186,6 +186,42 @@ class PlanAuditSpec extends AnyFunSuite {
       info(s"${a.name}:\n${stages.mkString("\n")}")
       val big = stages.filter(_.bytes > MaxTaskBinaryBytes)
       assert(big.isEmpty, s"${a.name}, over $MaxTaskBinaryBytes bytes:\n${big.mkString("\n")}")
+    }
+  }
+
+  test("noRegex plans run no regular expression") {
+    val flagged = audited.filter(_._1.noRegex)
+    assert(flagged.nonEmpty)
+    val bad = for {
+      (a, _) <- flagged
+      node <- withCachedPlans(a.df.queryExecution.executedPlan)
+      e <- node.expressions.flatMap(_.collect {
+        case e @ (_: RegExpReplace | _: RegExpExtractAll | _: RLike | _: RegExpCount) => e
+      })
+    } yield s"${a.name}: ${e.prettyName} in ${node.nodeName}"
+    assert(bad.isEmpty, bad.distinct.mkString("\n"))
+  }
+
+  test("signOnce plans call the MinHash kernel once per input, caches included") {
+    val flagged = audited.filter(_._1.signOnce)
+    assert(flagged.nonEmpty)
+    for ((a, plan) <- flagged) {
+      val root = a.df.queryExecution.executedPlan
+      // the plan outside its caches, then each cache it reads on its own
+      val caches = withCachedPlans(root).collect {
+        case m: InMemoryTableScanExec => m.relation.cacheBuilder.cachedPlan
+      }.distinct
+      val units = (root +: caches).map(PlanAudit.operators)
+      assert(units.flatten.exists(_.expressions.exists(_.exists(_.isInstanceOf[MinHashMins]))),
+        s"${a.name}: no MinHash kernel\n$plan")
+      for (unit <- units) {
+        val calls = unit.flatMap(_.expressions.flatMap(_.collect {
+          case m: MinHashMins => m.canonicalized
+        }))
+        val repeated = calls.groupBy(identity).filter(_._2.size > 1)
+        assert(repeated.isEmpty, s"${a.name}: ${repeated.values.map(_.size).mkString(", ")} " +
+          s"calls on one input in\n${unit.head.treeString}")
+      }
     }
   }
 

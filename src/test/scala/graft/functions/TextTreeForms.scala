@@ -49,6 +49,29 @@ object TextTreeForms {
       i => array_join(F.slice(w, i * step + 1, lit(size)), sep))
   }
 
+  /** [[TextFunctions.tokenCountWs]]: the size of the token array. */
+  def tokenCountWs(text: Column): Column = array_size(split(text, " "))
+
+  /** [[TextFunctions.redactPii]]: one `regexp_replace` per
+    * [[TextFunctions.PiiPatterns]] category, in order.
+    */
+  def redactPii(text: Column): Column =
+    TextFunctions.PiiPatterns.foldLeft(text) { case (t, (_, pat, tok)) =>
+      regexp_replace(t, pat, tok)
+    }
+
+  /** [[TextFunctions.piiStats]]: each category's `regexp_count` on the
+    * text the earlier categories' `regexp_replace` left.
+    */
+  def piiStats(text: Column): Column = {
+    val (_, fields) = TextFunctions.PiiPatterns.foldLeft((text, Seq.empty[Column])) {
+      case ((t, acc), (cat, pat, tok)) =>
+        (regexp_replace(t, pat, tok),
+          acc :+ regexp_count(t, lit(pat)).cast(LongType).as(s"n_$cat"))
+    }
+    struct(fields: _*)
+  }
+
   /** [[TextFunctions.fingerprint]] as the fold the oracle SQL mirrors. */
   def fingerprint(text: Column): Column =
     F.aggregate(split(text, " "), lit(0L),
@@ -96,7 +119,7 @@ object TextTreeForms {
   def stopwordRatio(text: Column,
       stopwords: Seq[String] = TextFunctions.DefaultStopwords): Column =
     Num.safeDiv(langScore(text, stopwords).cast(DoubleType),
-      TextFunctions.tokenCountWs(text).cast(DoubleType))
+      tokenCountWs(text).cast(DoubleType))
 
   /** [[TextFunctions.qualityScore]] over the tree [[stopwordRatio]]. */
   def qualityScore(text: Column, nChars: Column): Column =
