@@ -74,6 +74,16 @@ object PlanAudit {
     *    decontamination, where a filter on the signature, pushed below
     *    the projection that computes it, would sign every document
     *    twice.
+    *  - `noSlidingFrame`: no window expression in the plan aggregates
+    *    over a bounded ROWS frame (one whose lower bound is not
+    *    unbounded preceding). Spark re-aggregates such a frame on every
+    *    row, so a `rowsBetween(-49, 0)` costs 50 aggregate updates per
+    *    row — set on the rolling plans, whose kernel keeps its own ring
+    *    over the running frame.
+    *  - `noCollect`: no `collect_list`, `sort_array` or `explode`
+    *    anywhere in the plan — set on the ewm plan, whose recurrence is
+    *    stepped row by row over the running frame instead of folding
+    *    each key's collected rows.
     */
   final case class Audited(
       name: String,
@@ -94,7 +104,9 @@ object PlanAudit {
       noLambda: Boolean = false,
       smallTaskBinaries: Boolean = false,
       noRegex: Boolean = false,
-      signOnce: Boolean = false)
+      signOnce: Boolean = false,
+      noSlidingFrame: Boolean = false,
+      noCollect: Boolean = false)
 
   /** Every operator of a physical plan outside its cached relations:
     * the walk stops at each InMemoryTableScan and looks through AQE's
@@ -183,7 +195,7 @@ object PlanAudit {
         new graft.operators.RollingOps(new GroupBy(ev, Seq(col("user_id"))))
           .rollingSum(col("value"), col("ts"), 50, minPeriods = Some(1),
             sliceWidth = Some(sixHoursNs)),
-        noSinglePartition = true, keySlicedWindows = true),
+        noSinglePartition = true, keySlicedWindows = true, noSlidingFrame = true),
       Audited("cumsum sliceWidth (one injected prefix row per slice)",
         new graft.operators.RollingOps(new GroupBy(ev, Seq(col("user_id"))))
           .cumsum(col("value"), col("ts"), exact = true,
@@ -194,7 +206,7 @@ object PlanAudit {
           .rollingSum(col("value"), col("ts"), 50, minPeriods = Some(1),
             mask = Some(col("event_type") =!= "click"),
             sliceWidth = Some(sixHoursNs)),
-        noSinglePartition = true, keySlicedWindows = true),
+        noSinglePartition = true, keySlicedWindows = true, noSlidingFrame = true),
       Audited("sessionize sliceWidth (gap flags + sliced running count)",
         new graft.operators.RollingOps(new GroupBy(ev, Seq(col("user_id"))))
           .groupNearbyMembers(col("ts"), col("ts"), 4.32e13,
@@ -404,9 +416,15 @@ object PlanAudit {
       Audited("persisted transform mean (key window over the key-sorted cache: no sort)",
         evCached.mean(Seq(col("value")), transform = true),
         cacheLocal = true, noSort = true),
-      Audited("persisted ewm mean (one fold over whole rows: no join-back, no exchange)",
+      Audited("persisted rolling sum and mean (running frame)", {
+        val sums = new graft.operators.RollingOps(evCached)
+          .rollingSum(col("value"), col("ts"), 50, minPeriods = Some(1))
+        new graft.operators.RollingOps(new GroupBy(sums, Seq(col("user_id"))))
+          .rollingMean(col("value"), col("ts"), 50, minPeriods = Some(1))
+      }, cacheLocal = true, joinFree = true, noSlidingFrame = true),
+      Audited("persisted ewm mean (one running-frame window: no collect, no join-back, no exchange)",
         new graft.operators.RollingOps(evCached).ewmMean(col("value"), col("ts"), 0.25),
-        cacheLocal = true, joinFree = true),
+        cacheLocal = true, joinFree = true, noCollect = true),
       Audited("curation page filter (one native pass per text rule, no lambda)", {
         val text = col("text")
         docs.withColumn("text", TextFunctions.c4FilteredText(text))

@@ -1,16 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.graft.WindowExpressions
 
-/** Exponentially weighted mean — pandas `GroupBy.ewm(alpha).mean()`
-  * with full `adjust` × `ignore_na` parity (the reference stops at
-  * plain rolling windows, `pandas_plus/groupby/numba.py:1520-1910`;
-  * ewm is the one classic pandas window family it lacks, added here
-  * for surface completeness).
+/** Exponentially weighted mean, variance and std — pandas
+  * `GroupBy.ewm(alpha).mean()/var()/std()` with full `adjust` ×
+  * `ignore_na` parity (the reference stops at plain rolling windows,
+  * `pandas_plus/groupby/numba.py:1520-1910`; ewm is the one classic
+  * pandas window family it lacks, added here for surface completeness).
   *
   * Semantics (pandas `_libs/window/aggregations.pyx::ewma`): state is
   * `(y, w)` — the running mean and the accumulated relative weight of
@@ -35,29 +34,27 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * sample_temperature lesson). Results can differ from pandas by an
   * ulp after long null runs, never in which rows are filled.
   *
-  * Scale shape: an ewm is a linear recurrence — irreducibly
-  * sequential per key — so this is the funnel pattern: ONE
-  * `groupBy(keys)`, a row-local sorted fold over each key's history,
-  * and an explode that brings every row back out beside its output.
-  * The collected rows are whole rows (ord, value and the input's
-  * other columns), so there is no join back on (keys, ord) and no
-  * second shuffle; over a [[GroupBy.persisted]] cache, which is
-  * range-partitioned and sorted by the keys once, the groupBy itself
-  * needs no exchange. Per-key state is that key's whole rows; keys
-  * with histories too large for one task should be pre-thinned or
-  * time-sessionized first (same contract as Funnel.funnel). No
-  * window-rescaling trick survives unbounded spans: the prefix-sum
-  * form needs `(1-α)^(-rank)`, which overflows double past
-  * `~690/-ln(1-α)` rows, so the honest general path is the fold.
-  *
-  * Known limit of the fold form: the per-row output append copies the
-  * accumulated array, so a SINGLE key's cost is quadratic in its
-  * history length — negligible to ~10⁴ rows per key, real beyond.
-  * The known extension for extreme histories is the affine-scan
-  * form — per-row state maps `(N, D) → (f·N + nw·x, f·D + nw)`
-  * compose associatively, so slices can fold independently and chain
-  * summary-sized carries — at the cost of a different summation order
-  * than pandas (no longer bit-equal, hence not the default here).
+  * Scale shape: an ewm is a linear recurrence, sequential per key, and
+  * a window over the running frame is exactly a per-key sequential
+  * pass: Spark feeds each key's rows in ord order, one update and one
+  * evaluate per row. So every op here is ONE window,
+  * `when(keysOk, kernel.over(running))` over the input rows, where the
+  * kernel ([[org.apache.spark.sql.graft.EwmWindow]]) holds the
+  * six-field state of [[org.apache.spark.sql.graft.EwmState]]: O(1)
+  * state and work per row, however long a key's history. The window
+  * needs the rows clustered by key and sorted by (key, ord): one hash
+  * exchange and one sort, and over a [[GroupBy.persisted]] cache,
+  * range-partitioned and key-sorted once, no exchange. No rows are
+  * collected, so no key's history has to fit one array and the input's
+  * other columns stay where they are. A single hot key still runs in
+  * one task. No window-rescaling trick survives unbounded spans: the
+  * prefix-sum form needs `(1-α)^(-rank)`, which overflows double past
+  * `~690/-ln(1-α)` rows, so the honest general path is the recurrence.
+  * The known extension for a hot key is the affine-scan form — per-row
+  * state maps `(N, D) → (f·N + nw·x, f·D + nw)` compose associatively,
+  * so slices can run independently and chain summary-sized carries —
+  * at the cost of a different summation order than pandas (no longer
+  * bit-equal, hence not the default here).
   */
 object Ewm {
 
@@ -83,63 +80,38 @@ object Ewm {
   }
 
   /** See object doc. `ord` must be non-null on every grouped row and
-    * unique within each group (it orders the fold); value casts to
-    * double. The per-key fold is ONE native O(n) pass
-    * ([[org.apache.spark.sql.graft.EwmMeanFold]]) — the same IEEE
-    * operation sequence as the DuckDB replay [[meanSql]].
+    * unique within each group (it orders the recurrence); value casts
+    * to double. The same IEEE operation sequence as the DuckDB replay
+    * [[meanSql]].
     */
   def mean(gb: GroupBy, value: Column, ord: Column, alpha: Double,
       adjust: Boolean = true, ignoreNa: Boolean = false,
       name: String = "ewm_mean"): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    foldRows(gb, value, ord, name)(rows =>
-      org.apache.spark.sql.graft.FoldExpressions.ewmMeanFold(
-        rows, alpha, adjust, ignoreNa))
+    running(gb, ord, name)(WindowExpressions.ewmMean(value, alpha, adjust, ignoreNa))
   }
 
-  /** The shape [[mean]] and [[variance]] share: ONE `groupBy(keys)`
-    * collects each grouped row whole — `(__ord, __v, __p)`, where the
-    * payload `__p` holds the row's non-key columns — sorts the rows by
-    * ord, runs `fold` over them and explodes each payload back out
-    * beside its output. Null-key rows that `gb.base` drops come back
-    * through a union with a null output. Output columns: the keys, the
-    * input's other columns in order, then `name`.
+  /** The shape [[mean]] and [[variance]] share: ONE window over the
+    * running frame of each key in ord order, `when(keysOk, kernel)`, so
+    * null-key rows that `gb.base` drops come out with a null output.
+    * Output columns: the keys, the input's other columns in order, then
+    * `name`.
     */
-  private def foldRows(gb: GroupBy, value: Column, ord: Column,
-      name: String)(fold: Column => Column): DataFrame = {
-    val keyC = gb.keyNames.map(col)
-    val restNames = gb.dfWithKeys.columns.toSeq.filterNot(gb.keyNames.contains)
-    val rest = restNames.map(c => col(s"`$c`"))
-    val checkedOrd = when(ord.isNull, raise_error(lit(
+  private def running(gb: GroupBy, ord: Column, name: String)(
+      kernel: Column): DataFrame = {
+    val checkedOrd = when(gb.keysOk && ord.isNull, raise_error(lit(
       "graft: ewm requires a non-null ord on every grouped row")))
       .otherwise(ord)
-    val payload = struct(rest: _*)
-    val rows = F.collect_list(struct(checkedOrd.as("__ord"),
-      value.cast(DoubleType).as("__v"), payload.as("__p")))
-    // sort_array compares whole structs, which (ord, value) settle when
-    // ord is unique; a payload that cannot be ordered (a map column)
-    // sorts through an ord-only comparator instead
-    val sorted =
-      if (RowOrdering.isOrderable(gb.dfWithKeys.select(payload).schema.head.dataType))
-        sort_array(rows)
-      else array_sort(rows, (l, r) => {
-        val (a, b) = (l.getField("__ord"), r.getField("__ord"))
-        when(a < b, -1).when(a > b, 1).otherwise(0)
-      })
-    val folded = gb.base.groupBy(keyC: _*).agg(sorted.as("__rows"))
-      .select(keyC :+ explode(zip_with(col("__rows"), fold(col("__rows")),
-        (r, o) => struct(r.getField("__p").as("__p"), o.as(name)))).as("__e"): _*)
-      .select(keyC ++ restNames.map(c => col("__e.__p").getField(c).as(c)) :+
-        col("__e").getField(name).as(name): _*)
-    if (!gb.dropNullKeys) folded
-    else folded.union(gb.dfWithKeys
-      .filter(!gb.keyNames.map(col(_).isNotNull).reduce(_ && _))
-      .select(keyC ++ rest :+ lit(null).cast(DoubleType).as(name): _*))
+    val w = Window.partitionBy(gb.keyCols: _*).orderBy(checkedOrd)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val rest = gb.dfWithKeys.columns.toSeq.filterNot(gb.keyNames.contains)
+    gb.dfWithKeys.select(gb.keyCols ++ rest.map(c => col(s"`$c`")) :+
+      when(gb.keysOk, kernel.over(w)).as(name): _*)
   }
 
   /** Exponentially weighted variance — pandas `ewm(alpha).var()`
     * (`aggregations.pyx::ewmcov` with x = y), same `adjust` ×
-    * `ignore_na` parity and fold shape as [[mean]]. State per key is
+    * `ignore_na` parity and window shape as [[mean]]. State per key is
     * `(mean, cov, Σw, Σw², w_old, nobs)`; per non-null row the three
     * weight sums decay stepwise, the mean blends (skipping the no-op
     * blend like pandas), and the biased second moment updates as
@@ -147,10 +119,8 @@ object Ewm {
     * Each row emits the debiased value `Σw² / (Σw² − Σw²ᵢ) · cov`
     * (`bias = true` emits cov itself), null while fewer than
     * `max(minPeriods, 1)` values have arrived or when the debias
-    * denominator is ≤ 0 (a single value has no spread). Same scale
-    * contract as [[mean]]: one groupBy, a sorted fold over each key's
-    * whole rows, explode — no join-back; bit-exact replay via
-    * [[varianceSql]].
+    * denominator is ≤ 0 (a single value has no spread). Bit-exact
+    * replay via [[varianceSql]].
     */
   def variance(gb: GroupBy, value: Column, ord: Column, alpha: Double,
       adjust: Boolean = true, ignoreNa: Boolean = false,
@@ -158,81 +128,8 @@ object Ewm {
       name: String = "ewm_var"): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
     require(minPeriods >= 0, s"minPeriods must be >= 0, got $minPeriods")
-    // ONE native O(n) pass ([[org.apache.spark.sql.graft.EwmVarFold]]);
-    // [[varianceOutsDeclarative]] is retained ONLY as the differential
-    // reference (DifferentialSpec pins bit-equality on randomized null
-    // patterns; the 6-field state is where operation-order risk
-    // concentrates, so the pin is the proof)
-    foldRows(gb, value, ord, name)(rows =>
-      org.apache.spark.sql.graft.FoldExpressions.ewmVarFold(
-        rows, alpha, adjust, ignoreNa, bias, minPeriods))
-  }
-
-  /** The pre-round-15 declarative fold of [[variance]] — kept ONLY as
-    * the differential reference DifferentialSpec pins
-    * [[org.apache.spark.sql.graft.EwmVarFold]] against (the pattern of
-    * the retired text tree forms): given the sorted
-    * `array<struct<__ord, __v:double>>` of one key, returns the
-    * per-row output array under the identical recurrence.
-    */
-  private[graft] def varianceOutsDeclarative(rows: Column, alpha: Double,
-      adjust: Boolean, ignoreNa: Boolean, bias: Boolean,
-      minPeriods: Int): Column = {
-    val f = 1.0 - alpha
-    val nw = if (adjust) 1.0 else alpha
-    val minp = math.max(minPeriods, 1)
-    val init = struct(lit(null).cast(DoubleType).as("m"),
-      lit(0.0).as("cv"), lit(1.0).as("swt"), lit(1.0).as("swt2"),
-      lit(1.0).as("owt"), lit(0L).as("nobs"),
-      lit(Array.empty[Double]).cast(ArrayType(DoubleType)).as("outs"))
-    F.aggregate(rows, init, (acc, e) => {
-      val m = acc.getField("m"); val cv = acc.getField("cv")
-      val swt = acc.getField("swt"); val swt2 = acc.getField("swt2")
-      val owt = acc.getField("owt"); val nobs = acc.getField("nobs")
-      val cur = e.getField("__v")
-      val isObs = cur.isNotNull
-      val decay = isObs || lit(!ignoreNa)
-      val swt1 = when(decay, swt * lit(f)).otherwise(swt)
-      val swt21 = when(decay, swt2 * (lit(f) * lit(f))).otherwise(swt2)
-      val owt1 = when(decay, owt * lit(f)).otherwise(owt)
-      val mNew = when(cur === m, m)
-        .otherwise((owt1 * m + lit(nw) * cur) / (owt1 + lit(nw)))
-      val dm = m - mNew
-      val dx = cur - mNew
-      val cvNew = (owt1 * (cv + dm * dm) + lit(nw) * (dx * dx)) /
-        (owt1 + lit(nw))
-      // post-observation weight sums (adjust keeps them growing;
-      // the recursive form renormalizes by the new old_wt)
-      val swtO = swt1 + lit(nw); val swt2O = swt21 + lit(nw) * lit(nw)
-      val owtO = owt1 + lit(nw)
-      val stepped =
-        if (adjust) struct(mNew.as("m"), cvNew.as("cv"), swtO.as("swt"),
-          swt2O.as("swt2"), owtO.as("owt"))
-        else struct(mNew.as("m"), cvNew.as("cv"), (swtO / owtO).as("swt"),
-          (swt2O / (owtO * owtO)).as("swt2"), lit(1.0).as("owt"))
-      val carried = struct(m.as("m"), cv.as("cv"), swt1.as("swt"),
-        swt21.as("swt2"), owt1.as("owt"))
-      val fresh = struct(cur.as("m"), lit(0.0).as("cv"), swt.as("swt"),
-        swt2.as("swt2"), owt.as("owt"))
-      val next = when(m.isNull, when(isObs, fresh).otherwise(
-          struct(m.as("m"), cv.as("cv"), swt.as("swt"), swt2.as("swt2"),
-            owt.as("owt"))))
-        .otherwise(when(isObs, stepped).otherwise(carried))
-      val nobsNew = nobs + when(isObs, lit(1L)).otherwise(lit(0L))
-      val nswt = next.getField("swt"); val nswt2 = next.getField("swt2")
-      val out0 =
-        if (bias) next.getField("cv")
-        else {
-          val num = nswt * nswt
-          val den = num - nswt2
-          when(den > 0.0, num / den * next.getField("cv"))
-        }
-      val out = when(nobsNew >= minp && next.getField("m").isNotNull, out0)
-      struct(next.getField("m").as("m"), next.getField("cv").as("cv"),
-        nswt.as("swt"), nswt2.as("swt2"), next.getField("owt").as("owt"),
-        nobsNew.as("nobs"),
-        concat(acc.getField("outs"), array(out)).as("outs"))
-    }).getField("outs")
+    running(gb, ord, name)(WindowExpressions.ewmVar(value, alpha, adjust,
+      ignoreNa, bias, minPeriods))
   }
 
   /** `sqrt` of [[variance]] — pandas `ewm(alpha).std()`. */

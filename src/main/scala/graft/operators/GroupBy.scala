@@ -99,6 +99,13 @@ final class GroupBy(
       } else d.withColumn(n, k)
     }
 
+  /** True on rows that participate in grouping: every key non-null
+    * under `dropNullKeys`, else every row. Row-shaped outputs are
+    * `when(keysOk, …)`, so a dropped row keeps a null output.
+    */
+  private[operators] def keysOk: Column =
+    if (dropNullKeys) keyNames.map(col(_).isNotNull).reduce(_ && _) else lit(true)
+
   /** Rows that participate in grouping (null keys dropped by default). */
   private[operators] lazy val base: DataFrame =
     if (dropNullKeys)
@@ -316,8 +323,6 @@ final class GroupBy(
 
   private def transformAgg(specs: Seq[AggSpec], mask: Option[Column]): DataFrame = {
     val w = Window.partitionBy(keyCols: _*)
-    val keysOk =
-      if (dropNullKeys) keyNames.map(col(_).isNotNull).reduce(_ && _) else lit(true)
     specs.foldLeft(dfWithKeys) { (d, spec) =>
       d.withColumn(spec.name, when(keysOk, aggExpr(spec, mask, Some(w))))
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.graft.WindowExpressions
 
 /** Grouped rolling / cumulative / positional-shift operators —
   * the reference's `numba.py` window kernels re-expressed as Spark
@@ -33,9 +34,7 @@ import org.apache.spark.sql.{functions => F}
   */
 final class RollingOps(val gb: GroupBy) extends AnyVal {
 
-  private def keysOk: Column =
-    if (gb.dropNullKeys) gb.keyNames.map(col(_).isNotNull).reduce(_ && _)
-    else lit(true)
+  private def keysOk: Column = gb.keysOk
 
   /** Materializes `ord` for a sliced path, failing loudly when a
     * grouped row carries a null ord: the slicing machinery would file
@@ -380,12 +379,33 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
     * sub-stream ([[maskedSliced]] — a skewed key usually stays skewed
     * after filtering). Output equals the unsplit path
     * (DifferentialSpec).
+    *
+    * Every shape runs [[org.apache.spark.sql.graft.RollingWindow]] over
+    * the running frame: one update and one evaluate per row, where a
+    * bounded ROWS frame re-aggregates all `window` frame rows on every
+    * row. The kernel re-folds its ring of the last `window` values in
+    * the bounded frame's update order, so outputs are bit-identical to
+    * it (WindowKernelSpec). `exact = true` (decimal sums) and `prod`
+    * (log sums) keep Spark's aggregates over the bounded frame.
     */
   def rollingAgg(op: String, value: Column, ord: Column, window: Int,
       minPeriods: Option[Int] = None, mask: Option[Column] = None,
       name: String = "rolling", exact: Boolean = false,
       sliceWidth: Option[Long] = None): DataFrame = {
+    require(window >= 1, s"window must be >= 1, got $window")
     val mp = minPeriods.getOrElse(window)
+    // `v` over the ord-ascending window `w`: the running-frame kernel,
+    // or, for the decimal sums of `exact` and the log sums of `prod`,
+    // Spark's aggregates over the bounded frame
+    def agg(v: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
+      if (exact || op == "prod") {
+        val frame = w.rowsBetween(-(window - 1), Window.currentRow)
+        when(F.count(v).over(frame) >= mp, liftAgg(op, v, exact, frame))
+      } else {
+        val vv = if (op == "var" || op == "std") v.cast("double") else v
+        WindowExpressions.rolling(op, vv, window, mp)
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+      }
     (mask, sliceWidth) match {
       case (Some(m), Some(_)) =>
         maskedSliced(value, ord, m, name) { sub =>
@@ -393,18 +413,14 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
             None, name, exact, sliceWidth)
         }
       case (None, Some(wdt)) =>
-        rollingSliced(op, value, ord, window, mp, name, exact, wdt)
-      case (None, None) =>
-        val frame = Window.partitionBy(gb.keyCols: _*).orderBy(ord)
-          .rowsBetween(-(window - 1), Window.currentRow)
-        gb.dfWithKeys.withColumn(name,
-          when(keysOk && F.count(value).over(frame) >= mp,
-            liftAgg(op, value, exact, frame)))
-      case (Some(_), None) =>
-        subStream(value, ord, mask, name) { (v, w) =>
-          val frame = w.orderBy(col("__ord")).rowsBetween(-(window - 1), Window.currentRow)
-          when(F.count(v).over(frame) >= mp, liftAgg(op, v, exact, frame))
+        slicedStream(value, ord, window - 1, wdt, forward = false, name) {
+          (v, w) => when(keysOk, agg(v, w))
         }
+      case (None, None) =>
+        gb.dfWithKeys.withColumn(name, when(keysOk,
+          agg(value, Window.partitionBy(gb.keyCols: _*).orderBy(ord))))
+      case (Some(_), None) =>
+        subStream(value, ord, mask, name) { (v, w) => agg(v, w.orderBy(col("__ord"))) }
     }
   }
 
@@ -420,8 +436,10 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
     * the Funnel timestamp rule); masked rows are removed from the
     * sub-stream and emit null exactly like the row-count form. Same
     * scale shape as every window op: one hash exchange by key, one
-    * sort; a RANGE frame costs the same as ROWS in Spark's window
-    * exec (frame bounds slide monotonically).
+    * sort. Cost per row grows with the frame: Spark's window exec
+    * re-aggregates a bounded RANGE frame on every row whose bounds
+    * move, as it does a bounded ROWS frame, and no running-frame kernel
+    * covers RANGE frames yet (the rows a time span holds vary per row).
     */
   def rollingAggRange(op: String, value: Column, ord: Column, span: Long,
       minPeriods: Int = 1, mask: Option[Column] = None,
@@ -551,17 +569,6 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       .filter(col(inj) === 0)
       .drop(o, v, sl, inj)
   }
-
-  /** Skew-split rolling (see [[rollingAgg]]'s `sliceWidth`). */
-  private def rollingSliced(op: String, value: Column, ord: Column,
-      window: Int, mp: Int, name: String, exact: Boolean,
-      wdt: Long): DataFrame =
-    slicedStream(value, ord, window - 1, wdt, forward = false, name) {
-      (v, w) =>
-        val frame = w.rowsBetween(-(window - 1), Window.currentRow)
-        when(keysOk && F.count(v).over(frame) >= mp,
-          liftAgg(op, v, exact, frame))
-    }
 
   def rollingSum(value: Column, ord: Column, window: Int,
       minPeriods: Option[Int] = None, mask: Option[Column] = None,
@@ -865,7 +872,8 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
 
   /** Exponentially weighted mean — pandas `ewm(alpha).mean()`, full
     * `adjust` × `ignore_na` parity; see [[Ewm.mean]] (a linear
-    * recurrence, so the funnel-pattern sorted fold, not a window).
+    * recurrence, stepped once per row by a kernel over the running
+    * frame of each key: O(1) state per key, no rows collected).
     */
   def ewmMean(value: Column, ord: Column, alpha: Double,
       adjust: Boolean = true, ignoreNa: Boolean = false,

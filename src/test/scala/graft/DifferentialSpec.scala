@@ -296,14 +296,14 @@ class DifferentialSpec extends AnyFunSuite {
     }
 
     test(s"seed=$seed: native EwmVarFold bit-equals the declarative fold (all adjust x ignore_na x bias x minPeriods)") {
-      // round-15: Ewm.variance moved from the declarative aggregate
-      // lambda to the native EwmVarFold expression; the 6-field state
-      // is where operation-order risk concentrates, so the retired
-      // declarative form is pinned as the differential reference on
-      // this null-heavy randomized fixture (bit equality, not
-      // tolerance — the native fold claims the identical IEEE
-      // operation sequence)
-      import org.apache.spark.sql.graft.FoldExpressions
+      // the two retired forms of Ewm.variance (now in WindowTreeForms,
+      // the references WindowKernelSpec pins the running-frame kernel
+      // against): the native EwmVarFold and the declarative aggregate
+      // lambda. The 6-field state is where operation-order risk
+      // concentrates, so they are pinned to each other on this
+      // null-heavy randomized fixture (bit equality, not tolerance —
+      // both claim the identical IEEE operation sequence)
+      import org.apache.spark.sql.graft.WindowTreeForms
       val arrDf = df.select(struct(col("ord").as("__ord"),
           col("v").cast("double").as("__v")).as("s"))
         .groupBy().agg(sort_array(collect_list(col("s"))).as("rows"))
@@ -314,9 +314,9 @@ class DifferentialSpec extends AnyFunSuite {
       for (adjust <- Seq(true, false); ignoreNa <- Seq(true, false);
            bias <- Seq(true, false); minP <- Seq(0, 3)) {
         val row = arrDf.select(
-          FoldExpressions.ewmVarFold(col("rows"), 0.25, adjust, ignoreNa,
+          WindowTreeForms.ewmVarFold(col("rows"), 0.25, adjust, ignoreNa,
             bias, minP).as("n"),
-          graft.operators.Ewm.varianceOutsDeclarative(col("rows"), 0.25,
+          WindowTreeForms.varianceOutsDeclarative(col("rows"), 0.25,
             adjust, ignoreNa, bias, minP).as("d")).head()
         assert(bits(row.getSeq[Any](0)) === bits(row.getSeq[Any](1)),
           s"adjust=$adjust ignoreNa=$ignoreNa bias=$bias minPeriods=$minP")

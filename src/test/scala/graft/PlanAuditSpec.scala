@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction, NamedLambdaVariable, RLike, RegExpCount, RegExpExtractAll, RegExpReplace, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{Explode, Expression, HigherOrderFunction, LambdaFunction, NamedLambdaVariable, OffsetWindowFunction, RLike, RegExpCount, RegExpExtractAll, RegExpReplace, RowFrame, SortArray, SpecifiedWindowFrame, StringSplit, UnboundedPreceding, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -223,6 +224,39 @@ class PlanAuditSpec extends AnyFunSuite {
           s"calls on one input in\n${unit.head.treeString}")
       }
     }
+  }
+
+  /** Every expression of every operator, caches included. */
+  private def allExpressions(a: PlanAudit.Audited): Seq[(String, Expression)] =
+    for {
+      node <- withCachedPlans(a.df.queryExecution.executedPlan)
+      top <- node.expressions
+      e <- top.collect { case e => e }
+    } yield (node.nodeName, e)
+
+  test("noSlidingFrame plans aggregate over no bounded ROWS frame") {
+    val flagged = audited.filter(_._1.noSlidingFrame)
+    assert(flagged.nonEmpty)
+    val bad = for {
+      (a, _) <- flagged
+      (_, w) <- allExpressions(a).collect { case (n, w: WindowExpression) => (n, w) }
+      frame <- Some(w.windowSpec.frameSpecification).collect {
+        case f @ SpecifiedWindowFrame(RowFrame, lower, _) if lower != UnboundedPreceding => f
+      }
+      if !w.windowFunction.isInstanceOf[OffsetWindowFunction]
+    } yield s"${a.name}: ${w.windowFunction.prettyName} over $frame"
+    assert(bad.isEmpty, bad.distinct.mkString("\n"))
+  }
+
+  test("noCollect plans collect, sort and explode no arrays") {
+    val flagged = audited.filter(_._1.noCollect)
+    assert(flagged.nonEmpty)
+    val bad = for {
+      (a, _) <- flagged
+      (node, e) <- allExpressions(a)
+      if e.isInstanceOf[CollectList] || e.isInstanceOf[SortArray] || e.isInstanceOf[Explode]
+    } yield s"${a.name}: ${e.prettyName} in $node"
+    assert(bad.isEmpty, bad.distinct.mkString("\n"))
   }
 
   test("bucketed candidate generators plan equijoins, not cartesian/nested-loop") {
