@@ -69,4 +69,51 @@ object Num {
     val ss = lift(sum(pow(v.cast(DoubleType), 2)))
     when(n > ddof, (ss - s * s / n) / (n - lit(ddof.toDouble)))
   }
+
+  /** `⌊c / w⌋` of an integral `c` as a long, exact across the whole long
+    * range (negative values round toward −∞): Spark's `/` on longs is
+    * double division, inexact past 2^53, so the remainder is subtracted
+    * in `decimal(38,0)` first, which makes the quotient integral.
+    */
+  def floorDiv(c: Column, w: Long): Column =
+    ((c.cast("decimal(38,0)") - pmod(c, lit(w))) / lit(w)).cast("long")
+
+  /** The sums a pairwise-complete covariance or correlation of `x` and
+    * `y` needs: the pair count and Σx, Σy, Σxy, Σx², Σy² over the rows
+    * where `both` is non-null, each placed by `agg(op, column)` with op
+    * "sum" or "count" (a grouped aggregate or one over a window frame).
+    * `exact` accumulates the sums in decimal, so they do not depend on
+    * the order rows arrive in; otherwise they are plain double sums.
+    */
+  def pairMoments(x: Column, y: Column, both: Column, exact: Boolean)(
+      agg: (String, Column) => Column): PairMoments = {
+    val xd = x.cast(DoubleType); val yd = y.cast(DoubleType)
+    def s(c: Column, dec: DecimalType): Column = {
+      val paired = when(both.isNotNull, c.cast(DoubleType))
+      if (exact) agg("sum", paired.cast(dec)).cast(DoubleType) else agg("sum", paired)
+    }
+    PairMoments(agg("count", both).cast(DoubleType), s(xd, SumDec), s(yd, SumDec),
+      s(xd * yd, MomentDec), s(xd * xd, MomentDec), s(yd * yd, MomentDec))
+  }
+
+  /** [[pairMoments]]' sums, finished row-locally in double. */
+  final case class PairMoments(n: Column, sx: Column, sy: Column, sxy: Column,
+      sxx: Column, syy: Column) {
+
+    /** Covariance with divisor `n − ddof`, null when n ≤ ddof. */
+    def cov(ddof: Int): Column =
+      when(n > ddof, (sxy - sx * sy / n) / (n - lit(ddof.toDouble)))
+        .otherwise(lit(null).cast(DoubleType))
+
+    /** Pearson correlation, null when n < 2 or either marginal variance
+      * is not positive (pandas' NaN).
+      */
+    def corr: Column = {
+      val cxy = sxy - sx * sy / n
+      val cxx = sxx - sx * sx / n
+      val cyy = syy - sy * sy / n
+      when(n >= 2 && cxx > 0 && cyy > 0, cxy / sqrt(cxx * cyy))
+        .otherwise(lit(null).cast(DoubleType))
+    }
+  }
 }

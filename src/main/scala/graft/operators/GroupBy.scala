@@ -506,10 +506,7 @@ final class GroupBy(
   def cov(x: Column, y: Column, ddof: Int = 1, mask: Option[Column] = None,
       out: String = "cov", observedOnly: Boolean = true,
       exact: Boolean = false): DataFrame =
-    pairMoment(x, y, mask, observedOnly, exact) { (n, sx, sy, sxy, _, _) =>
-      when(n > ddof, (sxy - sx * sy / n) / (n - lit(ddof.toDouble)))
-        .otherwise(lit(null).cast(DoubleType)).as(out)
-    }
+    pairMoment(x, y, mask, observedOnly, exact)(_.cov(ddof).as(out))
 
   /** Per-group Pearson correlation of `x` and `y` (pandas
     * `GroupBy.corr` for one column pair): pairwise-complete
@@ -525,13 +522,7 @@ final class GroupBy(
   def corr(x: Column, y: Column, mask: Option[Column] = None,
       out: String = "corr", observedOnly: Boolean = true,
       exact: Boolean = false): DataFrame =
-    pairMoment(x, y, mask, observedOnly, exact) { (n, sx, sy, sxy, sxx, syy) =>
-      val cxy = sxy - sx * sy / n
-      val cxx = sxx - sx * sx / n
-      val cyy = syy - sy * sy / n
-      when(n >= 2 && cxx > 0 && cyy > 0, cxy / sqrt(cxx * cyy))
-        .otherwise(lit(null).cast(DoubleType)).as(out)
-    }
+    pairMoment(x, y, mask, observedOnly, exact)(_.corr.as(out))
 
   /** Per-group rank of `value` (pandas `GroupBy.rank`): a TRANSFORM —
     * input rows come back with a `rank` column appended.
@@ -603,15 +594,13 @@ final class GroupBy(
   }
 
   /** Shared single-pass pair-moment aggregation behind [[cov]] /
-    * [[corr]]: the five sums over pairwise-complete rows, exact
-    * decimal accumulation throughout ([[graft.functions.Num]]) so the
-    * statistic is partitioning-independent — then `f(n, Σx, Σy, Σxy,
-    * Σx², Σy²)` finishes row-locally in double.
+    * [[corr]]: [[Num.pairMoments]]' five sums over pairwise-complete
+    * rows as grouped aggregates, then `f` finishes them row-locally in
+    * double.
     */
   private def pairMoment(x: Column, y: Column, mask: Option[Column],
-      observedOnly: Boolean, exact: Boolean = true)(
-      f: (Column, Column, Column, Column, Column, Column) => Column): DataFrame = {
-    val both = masked(mask, when(x.isNotNull && y.isNotNull, lit(1)))
+      observedOnly: Boolean, exact: Boolean)(
+      f: Num.PairMoments => Column): DataFrame = {
     // exact=false (the cov/corr DEFAULT since round 11): plain double
     // partial sums — stays inside whole-stage codegen (the decimal
     // casts are the one expensive expression in this aggregation,
@@ -619,15 +608,11 @@ final class GroupBy(
     // accumulation-order sensitivity in the last ulps. exact=true is
     // the determinism-contract path (partitioning-independent bit
     // equality) — the oracle gate passes it explicitly.
-    def s(c: Column, dec: org.apache.spark.sql.types.DecimalType) =
-      if (exact)
-        F.sum(when(both.isNotNull, c.cast(DoubleType)).cast(dec)).cast(DoubleType)
-      else F.sum(when(both.isNotNull, c.cast(DoubleType)))
-    val xd = x.cast(DoubleType); val yd = y.cast(DoubleType)
-    val n = F.count(both).cast(DoubleType)
-    val stat = f(n, s(xd, Num.SumDec), s(yd, Num.SumDec),
-      s(xd * yd, Num.MomentDec), s(xd * xd, Num.MomentDec),
-      s(yd * yd, Num.MomentDec))
+    val both = masked(mask, when(x.isNotNull && y.isNotNull, lit(1)))
+    val stat = f(Num.pairMoments(x, y, both, exact) {
+      case ("sum", c) => F.sum(c)
+      case (_, c) => F.count(c)
+    })
     val needSize = observedOnly && mask.isDefined
     val exprs = Seq(stat) ++
       (if (needSize) Seq(F.count(masked(mask, lit(1))).as(GroupBy.SizeCol)) else Nil)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -179,12 +180,8 @@ object Joins {
       case None => rightPart.unionByName(leftPart)
       case Some(wdt) =>
         require(wdt > 0, s"sliceWidth must be positive, got $wdt")
-        // floor division, exact across the long range (see rangeJoin)
-        def fdiv(c: Column): Column =
-          ((c.cast("decimal(38,0)") - pmod(c, lit(wdt))) / lit(wdt))
-            .cast("long")
-        val rightS = rightPart.withColumn(sl, fdiv(col(ts)))
-        val leftS = leftPart.withColumn(sl, fdiv(col(ts)))
+        val rightS = rightPart.withColumn(sl, Num.floorDiv(col(ts), wdt))
+        val leftS = leftPart.withColumn(sl, Num.floorDiv(col(ts), wdt))
         val dirs = direction match {
           case Nearest => Seq(Backward, Forward)
           case d       => Seq(d)
@@ -284,18 +281,11 @@ object Joins {
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val b = "__graft_bucket"
-    // floor division without a double round-trip (nanos exceed 2^53;
-    // long `/` is double division in Spark) — safe across the whole
-    // long range incl. values within bucketWidth of Long.MinValue: the
-    // subtraction happens in decimal(38,0), the numerator is exactly
-    // divisible, so the quotient is integral and the casts are lossless
-    def fdiv(c: Column): Column =
-      ((c.cast("decimal(38,0)") - pmod(c, lit(bucketWidth))) / lit(bucketWidth))
-        .cast("long")
-
-    val rightB = right.withColumn(b,
-      explode(sequence(fdiv(col(rightLo)), fdiv(col(rightHi)))))
-    val leftB = left.withColumn(b, fdiv(col(leftPoint)))
+    // nanos exceed 2^53: the bucket is an exact floor division, never a
+    // double round-trip
+    val rightB = right.withColumn(b, explode(sequence(
+      Num.floorDiv(col(rightLo), bucketWidth), Num.floorDiv(col(rightHi), bucketWidth))))
+    val leftB = left.withColumn(b, Num.floorDiv(col(leftPoint), bucketWidth))
     leftB.join(rightB, on :+ b)
       .filter(col(leftPoint) >= col(rightLo) && col(leftPoint) <= col(rightHi))
       .drop(b)
@@ -325,16 +315,15 @@ object Joins {
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val b = "__graft_bucket"
-    def fdiv(c: Column): Column =
-      ((c.cast("decimal(38,0)") - pmod(c, lit(bucketWidth))) / lit(bucketWidth))
-        .cast("long")
     val leftB = left.filter(col(leftHi) >= col(leftLo))
-      .withColumn(b, explode(sequence(fdiv(col(leftLo)), fdiv(col(leftHi)))))
+      .withColumn(b, explode(sequence(
+        Num.floorDiv(col(leftLo), bucketWidth), Num.floorDiv(col(leftHi), bucketWidth))))
     val rightB = right.filter(col(rightHi) >= col(rightLo))
-      .withColumn(b, explode(sequence(fdiv(col(rightLo)), fdiv(col(rightHi)))))
+      .withColumn(b, explode(sequence(
+        Num.floorDiv(col(rightLo), bucketWidth), Num.floorDiv(col(rightHi), bucketWidth))))
     leftB.join(rightB, on :+ b)
       .filter(col(leftLo) <= col(rightHi) && col(rightLo) <= col(leftHi))
-      .filter(col(b) === fdiv(greatest(col(leftLo), col(rightLo))))
+      .filter(col(b) === Num.floorDiv(greatest(col(leftLo), col(rightLo)), bucketWidth))
       .drop(b)
   }
 

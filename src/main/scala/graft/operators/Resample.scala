@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
@@ -26,14 +27,6 @@ import org.apache.spark.sql.{functions => F}
   */
 object Resample {
 
-  /** Floor division, exact for the whole long range (negative ords
-    * round toward −∞, matching pandas' bucket anchoring) — the
-    * Joins.rangeJoin idiom: plain `/` on longs is double division and
-    * loses exactness past 2^53.
-    */
-  private def fdiv(c: Column, w: Long): Column =
-    ((c.cast("decimal(38,0)") - pmod(c, lit(w))) / lit(w)).cast("long")
-
   def resample(gb: GroupBy, ord: Column, width: Long,
       specs: Seq[AggSpec], bucketName: String = "bucket"): DataFrame = {
     require(width >= 1, s"width must be >= 1, got $width")
@@ -44,7 +37,7 @@ object Resample {
       "graft: resample requires a non-null ord on every grouped row")))
       .otherwise(ord)
     val keyN = gb.keyNames
-    val bucketed = gb.base.withColumn(bucketName, fdiv(checkedOrd, width))
+    val bucketed = gb.base.withColumn(bucketName, Num.floorDiv(checkedOrd, width))
     val agg = new GroupBy(bucketed, (keyN :+ bucketName).map(col),
       sort = false, dropNullKeys = gb.dropNullKeys).aggregate(specs)
     // per-key bin domain: [min bucket, max bucket], one row per bin —

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -67,10 +68,8 @@ final class SelectionOps(val gb: GroupBy) extends AnyVal {
     val checked = when(ordCol.isNull, raise_error(lit(
       "graft: sliceWidth positional selection requires a non-null ord " +
         "on every grouped row"))).otherwise(ordCol)
-    // floor division valid for negative ords too (pmod is non-negative)
-    val slice = ((checked.cast("decimal(38,0)") - pmod(checked, lit(wdt))) /
-      lit(wdt)).cast("long")
-    val base = gb.base.withColumn(o, checked).withColumn(sl, slice)
+    val base = gb.base.withColumn(o, checked)
+      .withColumn(sl, Num.floorDiv(checked, wdt))
     val counts = base.groupBy(gb.keyCols :+ col(sl): _*)
       .agg(F.count(lit(1)).as(cnt))
     val slOrd = if (descending) col(sl).desc else col(sl).asc

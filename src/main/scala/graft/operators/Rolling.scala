@@ -1,10 +1,12 @@
 package graft.operators
 
+import graft.functions.Num
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.graft.WindowExpressions
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Grouped rolling / cumulative / positional-shift operators —
   * the reference's `numba.py` window kernels re-expressed as Spark
@@ -16,6 +18,17 @@ import org.apache.spark.sql.graft.WindowExpressions
   * For masked variants `ord` must be unique within each group (it is
   * also the join-back key).
   *
+  * Frames: no op aggregates over a bounded ROWS frame, which Spark
+  * re-aggregates on every row. Row-count rolling (`rollingAgg`, cov and
+  * corr) places [[org.apache.spark.sql.graft.RollingWindow]], a kernel
+  * that keeps the last `window` values itself, over the running frame
+  * `rowsBetween(unboundedPreceding, currentRow)`: one update and one
+  * evaluate per row. Cumulative ops place Spark's own aggregates over
+  * the running frame, RANGE rolling over a value range. All three
+  * build the composite statistics from one table of formulas
+  * ([[liftAgg]]): the exact decimal sum and mean, the Σx² variance and
+  * the log-sum product.
+  *
   * Mask semantics (the genuinely tricky parity items, SURVEY §2.3):
   *   - '''Cumulative''': masked rows pass through the previous
   *     accumulator (`numba.py:1663-1667`). A windowed aggregate over
@@ -25,12 +38,14 @@ import org.apache.spark.sql.graft.WindowExpressions
   *     carry the accumulator (`numba.py` cumsum docstring:
   *     `[1, nan, 3] → [1, 1, 4]`) — which is precisely what
   *     null-skipping SQL aggregates do. No joins needed.
-  *   - '''Rolling''': masked rows are removed from the window stream
-  *     entirely and emit null (`numba.py:1212-1213`); the window
-  *     advances only over mask-passing rows. Computed on the
-  *     filtered sub-stream and joined back on (keys, ord) — a
-  *     co-partitioned shuffle join on the same keys, no driver
-  *     materialization.
+  *   - '''Rolling, shift, diff''': masked rows are removed from the
+  *     window stream entirely and emit null (`numba.py:1212-1213`); the
+  *     window advances only over mask-passing rows. A masked op is the
+  *     unmasked op, `sliceWidth` included, run on the mask-filtered
+  *     sub-stream and joined back on (keys, ord) by [[onSubStream]]: a
+  *     shuffle join, no driver materialization, null-safe on the keys
+  *     under `dropNullKeys = false`. It returns the unmasked op's
+  *     columns in the same order.
   */
 final class RollingOps(val gb: GroupBy) extends AnyVal {
 
@@ -49,66 +64,69 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
         "(null ords silently diverge from the unsplit path)")))
       .otherwise(ord)
 
-  private def aggOf(op: String, v: Column): Column = op match {
-    case "sum"   => F.sum(v)
-    case "mean"  => F.avg(v)
-    case "min"   => F.min(v)
-    case "max"   => F.max(v)
-    case "count" => F.count(v)
-    case other   => sys.error(s"unknown rolling/cumulative op: $other")
+  /** Spark's own aggregates over the frame `w`. */
+  private def sparkFrame(w: WindowSpec): RollingOps.Frame = { (op, c, minPeriods) =>
+    val a = (op match {
+      case "sum"   => F.sum(c)
+      case "mean"  => F.avg(c)
+      case "min"   => F.min(c)
+      case "max"   => F.max(c)
+      case "count" => F.count(c)
+      case other   => sys.error(s"unknown rolling/cumulative op: $other")
+    }).over(w)
+    if (minPeriods == 0) a else when(F.count(c).over(w) >= minPeriods, a)
   }
 
-  /** Windowed aggregate with optional order-insensitive decimal
-    * accumulation for sum/mean (see [[graft.functions.Num]]) — running
-    * double sums are association-order-dependent and differ across
+  /** `op` of `v` over one frame, null while fewer than `minPeriods`
+    * values of `v` in it are non-null: the one formula table of the
+    * cumulative, RANGE and ROWS forms. `frame` places the plain
+    * aggregates; the rest are built from them, with `exact` summing
+    * through decimals (see [[graft.functions.Num]]) — running double
+    * sums are association-order-dependent and differ across
     * engines/partitionings in the last ulps; exact mode removes that.
     */
-  private def liftAgg(op: String, v: Column, exact: Boolean,
-      w: org.apache.spark.sql.expressions.WindowSpec): Column = op match {
-    case "sum" if exact =>
-      F.sum(v.cast(graft.functions.Num.SumDec)).over(w)
-        .cast(org.apache.spark.sql.types.DoubleType)
-    case "mean" if exact =>
-      graft.functions.Num.safeDiv(
-        F.sum(v.cast(graft.functions.Num.SumDec)).over(w)
-          .cast(org.apache.spark.sql.types.DoubleType),
-        F.count(v).over(w).cast(org.apache.spark.sql.types.DoubleType))
-    case "var" | "std" =>
-      // pandas rolling var/std (ddof=1) via the Σx² identity over the
-      // frame. Exact mode accumulates both sums through decimals so
-      // the statistic is partitioning- and engine-independent; the
-      // closing arithmetic is fixed-order row-local IEEE double. The
-      // 0-clamp absorbs the tiny negative cancellation residue a
-      // constant-valued window can produce (pandas clamps the same
-      // way internally before its sqrt).
-      val dt = org.apache.spark.sql.types.DoubleType
-      val vd = v.cast(dt)
-      val n = F.count(v).over(w).cast(dt)
-      val (s, ss) =
-        if (exact)
-          (F.sum(vd.cast(graft.functions.Num.SumDec)).over(w).cast(dt),
-            F.sum((vd * vd).cast(graft.functions.Num.MomentDec)).over(w).cast(dt))
-        else (F.sum(vd).over(w), F.sum(vd * vd).over(w))
-      val varC = when(n > 1, greatest((ss - s * s / n) / (n - 1), lit(0.0)))
-        .otherwise(lit(null).cast(dt))
-      if (op == "var") varC else sqrt(varC)
-    case "prod" =>
-      // running/windowed product via exp(Σ ln|x|)·(−1)^#neg with a
-      // zero latch — the [[GroupBy]] "prod" formula lifted over the
-      // frame; null before the first non-null value (house cumulative
-      // rule: null values carry the running product)
-      val dt = org.apache.spark.sql.types.DoubleType
-      val av = v.cast(dt)
-      val cnt = F.count(av).over(w)
-      val zeros = F.count(when(av === 0.0, lit(1))).over(w)
-      val negs = F.count(when(av < 0.0, lit(1))).over(w)
-      val sumln = F.sum(when(av =!= 0.0, log(abs(av)))
-        .cast(graft.functions.Num.DotDec)).over(w).cast(dt)
-      val sign = when(pmod(negs, lit(2L)) === 0, lit(1.0)).otherwise(lit(-1.0))
-      when(cnt === 0, lit(null).cast(dt))
-        .when(zeros > 0, lit(0.0))
-        .otherwise(exp(sumln) * sign)
-    case _ => aggOf(op, v).over(w)
+  private def liftAgg(op: String, v: Column, exact: Boolean, minPeriods: Int,
+      frame: RollingOps.Frame): Column = {
+    val dt = DoubleType
+    def agg(o: String, c: Column): Column = frame(o, c, 0)
+    def decSum(c: Column, dec: DecimalType): Column = agg("sum", c.cast(dec)).cast(dt)
+    val n = agg("count", v)
+    def gated(out: Column): Column =
+      if (minPeriods == 0) out else when(n >= minPeriods, out)
+    op match {
+      case "sum" if exact => gated(decSum(v, Num.SumDec))
+      case "mean" if exact => gated(Num.safeDiv(decSum(v, Num.SumDec), n.cast(dt)))
+      case "var" | "std" =>
+        // pandas rolling var/std (ddof=1) via the Σx² identity over the
+        // frame. Exact mode accumulates both sums through decimals so
+        // the statistic is partitioning- and engine-independent; the
+        // closing arithmetic is fixed-order row-local IEEE double. The
+        // 0-clamp absorbs the tiny negative cancellation residue a
+        // constant-valued window can produce (pandas clamps the same
+        // way internally before its sqrt).
+        val vd = v.cast(dt)
+        val nd = n.cast(dt)
+        val (s, ss) =
+          if (exact) (decSum(vd, Num.SumDec), decSum(vd * vd, Num.MomentDec))
+          else (agg("sum", vd), agg("sum", vd * vd))
+        val varC = when(nd > 1, greatest((ss - s * s / nd) / (nd - 1), lit(0.0)))
+          .otherwise(lit(null).cast(dt))
+        gated(if (op == "var") varC else sqrt(varC))
+      case "prod" =>
+        // running/windowed product via exp(Σ ln|x|)·(−1)^#neg with a
+        // zero latch — the [[GroupBy]] "prod" formula lifted over the
+        // frame; null before the first non-null value (house cumulative
+        // rule: null values carry the running product)
+        val av = v.cast(dt)
+        val zeros = agg("count", when(av === 0.0, lit(1)))
+        val negs = agg("count", when(av < 0.0, lit(1)))
+        val sumln = decSum(when(av =!= 0.0, log(abs(av))), Num.DotDec)
+        val sign = when(pmod(negs, lit(2L)) === 0, lit(1.0)).otherwise(lit(-1.0))
+        gated(when(agg("count", av) === 0, lit(null).cast(dt))
+          .when(zeros > 0, lit(0.0))
+          .otherwise(exp(sumln) * sign))
+      case _ => frame(op, v, minPeriods)
+    }
   }
 
   // ------------------------------------------------------------ cumulative
@@ -133,7 +151,7 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       val cum = Window.partitionBy(gb.keyCols: _*).orderBy(ord)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val v = mask.map(m => when(m, value)).getOrElse(value)
-      val out0 = liftAgg(op, v, exact, cum)
+      val out0 = liftAgg(op, v, exact, 0, sparkFrame(cum))
       val out =
         if (skipNa) out0
         else {
@@ -160,26 +178,18 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
   private def cumSliced(op: String, value: Column, ord: Column,
       mask: Option[Column], skipNa: Boolean, name: String, exact: Boolean,
       wdt: Long): DataFrame = {
-    require(wdt > 0, s"sliceWidth must be positive, got $wdt")
     require(!Seq("sum", "mean").contains(op) || exact,
       s"sliceWidth cum $op needs exact=true: the injected prefix is an " +
         "aggregate, and double running sums re-associate under slicing")
-    val sl = "__graft_slice"; val inj = "__graft_inj"
-    val o = "__graft_o"; val v = "__graft_v"
+    import RollingOps.{SliceOrd => o, SliceValue => v, Slice => sl}
     val cw = "__graft_cw"; val nw = "__graft_nw"
-    def fdiv(c: Column): Column =
-      ((c.cast("decimal(38,0)") - pmod(c, lit(wdt))) / lit(wdt)).cast("long")
     val vRaw = mask.map(m => when(m, value)).getOrElse(value)
     val decimal = exact && (op == "sum" || op == "mean")
-    val vCast = if (decimal) vRaw.cast(graft.functions.Num.SumDec) else vRaw
     val nullFlag = mask.map(m => m && value.isNull).getOrElse(value.isNull)
-    val native = gb.dfWithKeys
-      .withColumn(o, checkedOrd(ord))
-      .withColumn(v, vCast)
-      .withColumn(cw, when(vRaw.isNotNull, 1L).otherwise(0L))
-      .withColumn(nw, when(nullFlag, 1L).otherwise(0L))
-      .withColumn(sl, fdiv(col(o)))
-      .withColumn(inj, lit(0))
+    val native = slicePrologue(ord, wdt,
+      v -> (if (decimal) vRaw.cast(Num.SumDec) else vRaw),
+      cw -> when(vRaw.isNotNull, 1L).otherwise(0L),
+      nw -> when(nullFlag, 1L).otherwise(0L))
     val keySl = gb.keyCols :+ col(sl)
     // per-slice partials (non-null-key rows), then the running prefix
     // over slice summaries — one row per occupied slice, tiny per key
@@ -194,11 +204,7 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       case "max" => F.max(col("__mx")).over(pwf)
       case _     => F.sum(col("__s")).over(pwf)
     }
-    val vType = native.schema(v).dataType
-    val others = native.columns
-      .filterNot(c => gb.keyNames.contains(c) ||
-        Seq(o, v, cw, nw, sl, inj).contains(c))
-    val injected = partials
+    val carries = partials
       .withColumn("__pv", prefixV)
       .withColumn("__pc", F.sum(col("__c")).over(pwf))
       .withColumn("__pn", F.sum(col("__n")).over(pwf))
@@ -208,32 +214,18 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       .withColumn("__po", F.max(col("__mo")).over(pwf))
       .withColumn("__rn", row_number().over(pw))
       .filter(col("__rn") > 1)
-      .select(
-        gb.keyNames.map(col) ++
-          others.map(c => lit(null).cast(native.schema(c).dataType).as(c)) ++
-          Seq(col("__po").as(o), col("__pv").cast(vType).as(v),
-            coalesce(col("__pc"), lit(0L)).as(cw),
-            coalesce(col("__pn"), lit(0L)).as(nw),
-            col(sl), lit(1).as(inj)): _*)
     val cum = Window.partitionBy(keySl: _*).orderBy(col(o))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cnt = F.sum(col(cw)).over(cum)
-    val out0 = op match {
-      case "sum" =>
-        F.sum(col(v)).over(cum).cast(org.apache.spark.sql.types.DoubleType)
-      case "mean" => graft.functions.Num.safeDiv(
-        F.sum(col(v)).over(cum).cast(org.apache.spark.sql.types.DoubleType),
-        cnt.cast(org.apache.spark.sql.types.DoubleType))
-      case "min"   => F.min(col(v)).over(cum)
-      case "max"   => F.max(col(v)).over(cum)
-      case "count" => cnt
-      case other   => sys.error(s"unknown sliced cumulative op: $other")
-    }
+    // the value count is the running sum of the count weights, which
+    // the injected row's prefix count enters whole
+    val out0 = liftAgg(op, col(v), exact, 0, { (agg, c, _) =>
+      if (agg == "count") F.sum(col(cw)).over(cum) else sparkFrame(cum)(agg, c, 0)
+    })
     val out = if (skipNa) out0 else when(F.sum(col(nw)).over(cum) === 0, out0)
-    native.unionByName(injected.select(native.columns.map(col): _*))
-      .withColumn(name, when(keysOk, out))
-      .filter(col(inj) === 0)
-      .drop(o, v, cw, nw, sl, inj)
+    sliceEpilogue(native, carries,
+      Seq(col("__po").as(o), col("__pv").cast(native.schema(v).dataType).as(v),
+        coalesce(col("__pc"), lit(0L)).as(cw), coalesce(col("__pn"), lit(0L)).as(nw)),
+      name, when(keysOk, out))
   }
 
   def cumsum(value: Column, ord: Column, mask: Option[Column] = None,
@@ -279,62 +271,46 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
 
   /** Lag (n>0) / lead (n<0) within group in `ord` order (reference
     * `core.py:1789-1838`). Masked rows emit null and are skipped by
-    * the shift stream (`numba.py:1533-1583`). `sliceWidth`: hot-key
+    * the shift stream (`numba.py:1533-1583`): the unmasked shift of the
+    * mask-filtered sub-stream ([[onSubStream]]). `sliceWidth`: hot-key
     * lever (see [[rollingAgg]]) — a lag reaches at most n rows back
-    * (lead: forward), so slices inject n boundary rows; combined with
-    * `mask` it slices the filtered sub-stream ([[maskedSliced]]).
+    * (lead: forward), so slices inject n boundary rows.
     */
   def shift(value: Column, ord: Column, n: Int = 1,
       mask: Option[Column] = None, name: String = "shift",
       sliceWidth: Option[Long] = None): DataFrame =
-    (mask, sliceWidth) match {
-      case (Some(m), Some(_)) =>
-        maskedSliced(value, ord, m, name) { sub =>
-          sub.shift(col("__v"), col("__ord"), n, None, name, sliceWidth)
-        }
-      case (None, Some(wdt)) =>
-        slicedStream(value, ord, math.abs(n), wdt, forward = n < 0, name) {
-          (v, w) =>
-            when(keysOk,
-              if (n >= 0) lag(v, n).over(w) else lead(v, -n).over(w))
-        }
-      case (None, None) =>
-        val w = Window.partitionBy(gb.keyCols: _*).orderBy(ord)
-        val e = if (n >= 0) lag(value, n).over(w) else lead(value, -n).over(w)
-        gb.dfWithKeys.withColumn(name, when(keysOk, e))
-      case (Some(_), None) =>
-        subStream(value, ord, mask, name) { (v, w) =>
-          if (n >= 0) lag(v, n).over(w.orderBy(col("__ord"))) else lead(v, -n).over(w.orderBy(col("__ord")))
-        }
-    }
+    shifted(value, ord, n, mask, name, sliceWidth)((_, lagged) => lagged)
 
   /** `x[i] − x[i−n]` within group (reference `core.py:1840-1889`).
-    * `sliceWidth`: hot-key lever, as in [[shift]].
+    * Masked and `sliceWidth` forms as in [[shift]].
     */
   def diff(value: Column, ord: Column, n: Int = 1,
       mask: Option[Column] = None, name: String = "diff",
       sliceWidth: Option[Long] = None): DataFrame =
+    shifted(value, ord, n, mask, name, sliceWidth)(_ - _)
+
+  /** `out(v, v shifted by n)` per row: the machinery of [[shift]] and
+    * [[diff]].
+    */
+  private def shifted(value: Column, ord: Column, n: Int, mask: Option[Column],
+      name: String, sliceWidth: Option[Long])(out: (Column, Column) => Column): DataFrame = {
+    def lagged(v: Column, w: WindowSpec): Column =
+      if (n >= 0) lag(v, n).over(w) else lead(v, -n).over(w)
     (mask, sliceWidth) match {
-      case (Some(m), Some(_)) =>
-        maskedSliced(value, ord, m, name) { sub =>
-          sub.diff(col("__v"), col("__ord"), n, None, name, sliceWidth)
+      case (Some(m), _) =>
+        onSubStream(value, ord, m, name) { sub =>
+          sub.shifted(col(RollingOps.SubValue), col(RollingOps.SubOrd), n, None,
+            name, sliceWidth)(out)
         }
       case (None, Some(wdt)) =>
         slicedStream(value, ord, math.abs(n), wdt, forward = n < 0, name) {
-          (v, w) =>
-            when(keysOk,
-              v - (if (n >= 0) lag(v, n).over(w) else lead(v, -n).over(w)))
+          (v, w) => when(keysOk, out(v, lagged(v, w)))
         }
       case (None, None) =>
-        val w = Window.partitionBy(gb.keyCols: _*).orderBy(ord)
-        val lagged = if (n >= 0) lag(value, n).over(w) else lead(value, -n).over(w)
-        gb.dfWithKeys.withColumn(name, when(keysOk, value - lagged))
-      case (Some(_), None) =>
-        subStream(value, ord, mask, name) { (v, w) =>
-          val ww = w.orderBy(col("__ord"))
-          v - (if (n >= 0) lag(v, n).over(ww) else lead(v, -n).over(ww))
-        }
+        gb.dfWithKeys.withColumn(name, when(keysOk,
+          out(value, lagged(value, Window.partitionBy(gb.keyCols: _*).orderBy(ord)))))
     }
+  }
 
   /** Fractional change vs the n-back row within group (pandas
     * `pct_change`): `(x[i] − x[i−n]) / x[i−n]` as DOUBLE. Delegates
@@ -353,7 +329,7 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       .map(i => if (i == 0) "__graft_pcbase" else s"__graft_pcbase$i")
       .find(c => !gb.df.columns.contains(c)).get
     shift(value, ord, n, mask, tmp, sliceWidth)
-      .withColumn(name, graft.functions.Num.safeDiv(
+      .withColumn(name, Num.safeDiv(
         value.cast("double") - col(tmp).cast("double"),
         col(tmp).cast("double")))
       .drop(tmp)
@@ -362,10 +338,11 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
   // -------------------------------------------------------------- rolling
 
   /** Rolling aggregate over the last `window` rows per group;
-    * `minPeriods` (default = window) counts '''non-null values in the
-    * window''' (`numba.py:1240`). Masked variant computes over the
-    * filtered sub-stream and joins back — masked rows are null and do
-    * not advance the window.
+    * `minPeriods` (default = window; 0 ≤ minPeriods ≤ window, as pandas
+    * requires) counts '''non-null values in the window'''
+    * (`numba.py:1240`). The masked variant is the unmasked op over the
+    * mask-filtered sub-stream, joined back ([[onSubStream]]) — masked
+    * rows are null and do not advance the window.
     *
     * `sliceWidth` is the hot-key skew lever (the windowed analogue of
     * `GroupBy.aggregateSalted`, same design as `Joins.asof`): the
@@ -376,41 +353,39 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
     * then spreads over (time range / sliceWidth) tasks instead of
     * serializing on one. Requires an integral, per-key-unique,
     * non-null `ord`; combined with `mask` it slices the mask-filtered
-    * sub-stream ([[maskedSliced]] — a skewed key usually stays skewed
-    * after filtering). Output equals the unsplit path
-    * (DifferentialSpec).
+    * sub-stream (a skewed key usually stays skewed after filtering).
+    * Output equals the unsplit path (DifferentialSpec).
     *
-    * Every shape runs [[org.apache.spark.sql.graft.RollingWindow]] over
-    * the running frame: one update and one evaluate per row, where a
-    * bounded ROWS frame re-aggregates all `window` frame rows on every
+    * Every shape and op runs [[org.apache.spark.sql.graft.RollingWindow]]
+    * over the running frame: one update and one evaluate per row, where
+    * a bounded ROWS frame re-aggregates all `window` frame rows on every
     * row. The kernel re-folds its ring of the last `window` values in
     * the bounded frame's update order, so outputs are bit-identical to
-    * it (WindowKernelSpec). `exact = true` (decimal sums) and `prod`
-    * (log sums) keep Spark's aggregates over the bounded frame.
+    * it (WindowKernelSpec). The kernel folds a double var/std itself;
+    * `exact = true` (decimal sums, and var/std over them) and `prod`
+    * (log sums) are [[liftAgg]]'s formulas over the kernel's sums and
+    * counts.
     */
   def rollingAgg(op: String, value: Column, ord: Column, window: Int,
       minPeriods: Option[Int] = None, mask: Option[Column] = None,
       name: String = "rolling", exact: Boolean = false,
       sliceWidth: Option[Long] = None): DataFrame = {
-    require(window >= 1, s"window must be >= 1, got $window")
-    val mp = minPeriods.getOrElse(window)
-    // `v` over the ord-ascending window `w`: the running-frame kernel,
-    // or, for the decimal sums of `exact` and the log sums of `prod`,
-    // Spark's aggregates over the bounded frame
-    def agg(v: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
-      if (exact || op == "prod") {
-        val frame = w.rowsBetween(-(window - 1), Window.currentRow)
-        when(F.count(v).over(frame) >= mp, liftAgg(op, v, exact, frame))
-      } else {
-        val vv = if (op == "var" || op == "std") v.cast("double") else v
-        WindowExpressions.rolling(op, vv, window, mp)
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-      }
+    val mp = RollingOps.minPeriodsIn(window, minPeriods)
+    // `v` over the ord-ascending window `w`: kernels over its running
+    // frame. The kernel folds a double var/std itself, in one ring where
+    // liftAgg's formula holds three (half the time at window 50)
+    def agg(v: Column, w: WindowSpec): Column = {
+      val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      def kernel(o: String, c: Column, m: Int): Column =
+        WindowExpressions.rolling(o, c, window, m).over(running)
+      if (!exact && (op == "var" || op == "std")) kernel(op, v.cast(DoubleType), mp)
+      else liftAgg(op, v, exact, mp, kernel)
+    }
     (mask, sliceWidth) match {
-      case (Some(m), Some(_)) =>
-        maskedSliced(value, ord, m, name) { sub =>
-          sub.rollingAgg(op, col("__v"), col("__ord"), window, Some(mp),
-            None, name, exact, sliceWidth)
+      case (Some(m), _) =>
+        onSubStream(value, ord, m, name) { sub =>
+          sub.rollingAgg(op, col(RollingOps.SubValue), col(RollingOps.SubOrd),
+            window, Some(mp), None, name, exact, sliceWidth)
         }
       case (None, Some(wdt)) =>
         slicedStream(value, ord, window - 1, wdt, forward = false, name) {
@@ -419,8 +394,6 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       case (None, None) =>
         gb.dfWithKeys.withColumn(name, when(keysOk,
           agg(value, Window.partitionBy(gb.keyCols: _*).orderBy(ord))))
-      case (Some(_), None) =>
-        subStream(value, ord, mask, name) { (v, w) => agg(v, w.orderBy(col("__ord"))) }
     }
   }
 
@@ -433,13 +406,13 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
     * `minPeriods` defaults to 1 like pandas offset windows (not the
     * row-count form's full-window default). `ord` must be integral
     * (timestamp callers pass `unix_micros(ts)` with `span` in micros —
-    * the Funnel timestamp rule); masked rows are removed from the
-    * sub-stream and emit null exactly like the row-count form. Same
-    * scale shape as every window op: one hash exchange by key, one
+    * the Funnel timestamp rule); the masked form is the unmasked op on
+    * the mask-filtered sub-stream, exactly like the row-count form.
+    * Same scale shape as every window op: one hash exchange by key, one
     * sort. Cost per row grows with the frame: Spark's window exec
     * re-aggregates a bounded RANGE frame on every row whose bounds
-    * move, as it does a bounded ROWS frame, and no running-frame kernel
-    * covers RANGE frames yet (the rows a time span holds vary per row).
+    * move, and no running-frame kernel covers RANGE frames yet (the
+    * rows a time span holds vary per row).
     */
   def rollingAggRange(op: String, value: Column, ord: Column, span: Long,
       minPeriods: Int = 1, mask: Option[Column] = None,
@@ -456,18 +429,16 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
         s"closed must be right/both/left/neither, got $other")
     }
     mask match {
+      case Some(m) =>
+        onSubStream(value, ord, m, name) { sub =>
+          sub.rollingAggRange(op, col(RollingOps.SubValue), col(RollingOps.SubOrd),
+            span, minPeriods, None, closed, name, exact)
+        }
       case None =>
         val frame = Window.partitionBy(gb.keyCols: _*).orderBy(ord)
           .rangeBetween(lo, hi)
         gb.dfWithKeys.withColumn(name,
-          when(keysOk && F.count(value).over(frame) >= minPeriods,
-            liftAgg(op, value, exact, frame)))
-      case Some(_) =>
-        subStream(value, ord, mask, name) { (v, w) =>
-          val frame = w.orderBy(col("__ord")).rangeBetween(lo, hi)
-          when(F.count(v).over(frame) >= minPeriods,
-            liftAgg(op, v, exact, frame))
-        }
+          when(keysOk, liftAgg(op, value, exact, minPeriods, sparkFrame(frame))))
     }
   }
 
@@ -516,19 +487,12 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
     */
   private def slicedStream(value: Column, ord: Column, lim: Int, wdt: Long,
       forward: Boolean, name: String)(
-      out: (Column, org.apache.spark.sql.expressions.WindowSpec) => Column): DataFrame = {
-    require(wdt > 0, s"sliceWidth must be positive, got $wdt")
-    val sl = "__graft_slice"; val inj = "__graft_inj"
-    val o = "__graft_o"; val v = "__graft_v"
-    // floor division, exact across the long range (see Joins.rangeJoin)
-    def fdiv(c: Column): Column =
-      ((c.cast("decimal(38,0)") - pmod(c, lit(wdt))) / lit(wdt)).cast("long")
-    val native = gb.dfWithKeys
-      .withColumn(o, checkedOrd(ord)).withColumn(v, value)
-      .withColumn(sl, fdiv(col(o))).withColumn(inj, lit(0))
-    val injected = if (lim == 0) {
+      out: (Column, WindowSpec) => Column): DataFrame = {
+    import RollingOps.{SliceOrd => o, SliceValue => v, Slice => sl}
+    val native = slicePrologue(ord, wdt, v -> value)
+    val carries = if (lim == 0) {
       // a frame that never leaves the current row needs no injection
-      native.limit(0)
+      native.limit(0).withColumn("__t", struct(col(o).as("o"), col(v).as("v")))
     } else {
       val keySl = gb.keyCols :+ col(sl)
       val tw = Window.partitionBy(keySl: _*)
@@ -546,7 +510,7 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       val sw = Window.partitionBy(gb.keyCols: _*)
         .orderBy(if (forward) col(sl).desc else col(sl).asc)
         .rowsBetween(Window.unboundedPreceding, -1)
-      val carries = tailAgg
+      tailAgg
         .withColumn("__prev",
           sort_array(flatten(F.collect_list(col("__tail")).over(sw))))
         .filter(F.size(col("__prev")) > 0)
@@ -555,19 +519,45 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
           else when(F.size(col("__prev")) <= lim, col("__prev"))
             .otherwise(F.slice(col("__prev"), -lim, lim)))
         .select(gb.keyCols ++ Seq(col(sl), explode(col("__keep")).as("__t")): _*)
-      val others = native.columns
-        .filterNot(c => gb.keyNames.contains(c) || Seq(o, v, sl, inj).contains(c))
-      carries.select(
-        gb.keyNames.map(col) ++
-          others.map(c => lit(null).cast(native.schema(c).dataType).as(c)) ++
-          Seq(col("__t").getField("o").as(o), col("__t").getField("v").as(v),
-            col(sl), lit(1).as(inj)): _*)
     }
-    val w = Window.partitionBy(gb.keyCols :+ col(sl): _*).orderBy(col(o))
+    sliceEpilogue(native, carries,
+      Seq(col("__t").getField("o").as(o), col("__t").getField("v").as(v)),
+      name, out(col(v), Window.partitionBy(gb.keyCols :+ col(sl): _*).orderBy(col(o))))
+  }
+
+  /** The slice prologue of the skew-split ops ([[slicedStream]],
+    * [[cumSliced]]): [[GroupBy.dfWithKeys]] plus the checked ord, the
+    * given value columns, the slice index `⌊ord / wdt⌋` and the
+    * injected-row flag, 0 on these native rows.
+    */
+  private def slicePrologue(ord: Column, wdt: Long,
+      values: (String, Column)*): DataFrame = {
+    require(wdt > 0, s"sliceWidth must be positive, got $wdt")
+    import RollingOps.{SliceOrd, Slice, Injected}
+    values.foldLeft(gb.dfWithKeys.withColumn(SliceOrd, checkedOrd(ord))) {
+      case (d, (n, c)) => d.withColumn(n, c)
+    }.withColumn(Slice, Num.floorDiv(col(SliceOrd), wdt))
+      .withColumn(Injected, lit(0))
+  }
+
+  /** The slice epilogue: one injected row per `carries` row — its keys
+    * and slice, the prologue's columns from `set`, every other input
+    * column null — unioned into `native`; `out` over both as column
+    * `name`; then the injected rows and the prologue's columns dropped.
+    */
+  private def sliceEpilogue(native: DataFrame, carries: DataFrame,
+      set: Seq[Column], name: String, out: Column): DataFrame = {
+    import RollingOps.{Slice, Injected}
+    val input = gb.dfWithKeys.columns.toSeq
+    val injected = carries.select(
+      gb.keyNames.map(col) ++
+        input.filterNot(gb.keyNames.contains)
+          .map(c => lit(null).cast(native.schema(c).dataType).as(c)) ++
+        set :+ col(Slice) :+ lit(1).as(Injected): _*)
     native.unionByName(injected.select(native.columns.map(col): _*))
-      .withColumn(name, out(col(v), w))
-      .filter(col(inj) === 0)
-      .drop(o, v, sl, inj)
+      .withColumn(name, out)
+      .filter(col(Injected) === 0)
+      .drop(native.columns.filterNot(input.contains): _*)
   }
 
   def rollingSum(value: Column, ord: Column, window: Int,
@@ -624,15 +614,19 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
     * rows (pandas `rolling().cov()` for one pair, ddof=1): only
     * frame rows where BOTH are non-null contribute
     * (pairwise-complete, the [[GroupBy.cov]] rule); `minPeriods`
-    * counts those pairs (default = window); null when pairs ≤ ddof.
+    * counts those pairs (default = window, at most window); null when
+    * pairs ≤ ddof. The pair count and the five sums are
+    * [[org.apache.spark.sql.graft.RollingWindow]]s over the running
+    * frame, like every [[rollingAgg]] form — no bounded frame — and are
+    * built and finished by the same [[graft.functions.Num.pairMoments]]
+    * as the grouped [[GroupBy.cov]].
     *
     * `exact = true` accumulates the pair moments in decimal —
-    * bit-identical replay, the oracle-gate path. The default is the
-    * plain-double codegen path (the grouped [[GroupBy.cov]] twin's
-    * round-11 treatment): window frames accumulate in a deterministic
-    * per-partition order anyway, so the double path here is
-    * RUN-deterministic — exact only buys decimal (order-free)
-    * arithmetic for cross-engine bit equality.
+    * bit-identical replay, the oracle-gate path. The default is plain
+    * double sums (the grouped [[GroupBy.cov]] twin's round-11
+    * treatment): the kernel folds each window oldest to newest, so the
+    * double path here is RUN-deterministic — exact only buys decimal
+    * (order-free) arithmetic for cross-engine bit equality.
     *
     * CONDITIONING (measured, pinned in RollingSpec "ill-conditioned"):
     * neither path is robust to a large common offset with small
@@ -653,11 +647,7 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
   def rollingCov(x: Column, y: Column, ord: Column, window: Int,
       minPeriods: Option[Int] = None, ddof: Int = 1,
       name: String = "rolling_cov", exact: Boolean = false): DataFrame =
-    pairMomentWindow(x, y, ord, window, minPeriods, name, exact) {
-      (n, sx, sy, sxy, _, _) =>
-        when(n > ddof, (sxy - sx * sy / n) / (n - lit(ddof.toDouble)))
-          .otherwise(lit(null).cast(org.apache.spark.sql.types.DoubleType))
-    }
+    pairMomentWindow(x, y, ord, window, minPeriods, name, exact)(_.cov(ddof))
 
   /** Rolling pairwise Pearson correlation (pandas `rolling().corr()`
     * for one pair): null when either marginal variance of the frame's
@@ -668,43 +658,24 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
   def rollingCorr(x: Column, y: Column, ord: Column, window: Int,
       minPeriods: Option[Int] = None,
       name: String = "rolling_corr", exact: Boolean = false): DataFrame =
-    pairMomentWindow(x, y, ord, window, minPeriods, name, exact) {
-      (n, sx, sy, sxy, sxx, syy) =>
-        val cxy = sxy - sx * sy / n
-        val cxx = sxx - sx * sx / n
-        val cyy = syy - sy * sy / n
-        when(n >= 2 && cxx > 0 && cyy > 0, cxy / sqrt(cxx * cyy))
-          .otherwise(lit(null).cast(org.apache.spark.sql.types.DoubleType))
-    }
+    pairMomentWindow(x, y, ord, window, minPeriods, name, exact)(_.corr)
 
-  /** Shared frame-scoped pair-moment machinery behind
-    * [[rollingCov]]/[[rollingCorr]]: the five frame sums over
-    * pairwise-complete rows plus the pair count, finished row-locally
-    * by `f`. `exact` picks decimal accumulation (bit-exact replay,
-    * oracle path) over the plain-double default — the same twin shape
-    * as the grouped [[GroupBy]] `pairMoment`.
+  /** [[rollingCov]] / [[rollingCorr]]: the pair count and five sums of
+    * [[graft.functions.Num.pairMoments]] — the builder the grouped
+    * [[GroupBy.cov]] / [[GroupBy.corr]] use — each a
+    * [[org.apache.spark.sql.graft.RollingWindow]] over the running
+    * frame, null below `minPeriods` pairs, finished row-locally by `f`.
     */
   private def pairMomentWindow(x: Column, y: Column, ord: Column,
-      window: Int, minPeriods: Option[Int], name: String,
-      exact: Boolean = false)(
-      f: (Column, Column, Column, Column, Column, Column) => Column): DataFrame = {
-    val dt = org.apache.spark.sql.types.DoubleType
-    val mp = minPeriods.getOrElse(window)
-    val frame = Window.partitionBy(gb.keyCols: _*).orderBy(ord)
-      .rowsBetween(-(window - 1), Window.currentRow)
-    val both = when(x.isNotNull && y.isNotNull, lit(1))
-    def s(c: Column, dec: org.apache.spark.sql.types.DecimalType) =
-      if (exact)
-        F.sum(when(both.isNotNull, c.cast(dt)).cast(dec)).over(frame).cast(dt)
-      else F.sum(when(both.isNotNull, c.cast(dt))).over(frame)
-    val xd = x.cast(dt); val yd = y.cast(dt)
-    val n = F.count(both).over(frame).cast(dt)
-    val stat = f(n, s(xd, graft.functions.Num.SumDec),
-      s(yd, graft.functions.Num.SumDec),
-      s(xd * yd, graft.functions.Num.MomentDec),
-      s(xd * xd, graft.functions.Num.MomentDec),
-      s(yd * yd, graft.functions.Num.MomentDec))
-    gb.dfWithKeys.withColumn(name, when(keysOk && n >= mp, stat))
+      window: Int, minPeriods: Option[Int], name: String, exact: Boolean)(
+      f: Num.PairMoments => Column): DataFrame = {
+    val mp = RollingOps.minPeriodsIn(window, minPeriods)
+    val running = Window.partitionBy(gb.keyCols: _*).orderBy(ord)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val m = Num.pairMoments(x, y, when(x.isNotNull && y.isNotNull, lit(1)), exact) {
+      (op, c) => WindowExpressions.rolling(op, c, window, 0).over(running)
+    }
+    gb.dfWithKeys.withColumn(name, when(keysOk && m.n >= mp, f(m)))
   }
 
   /** Expanding (cumulative) mean — pandas `expanding().mean()`: the
@@ -739,46 +710,32 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
       skipNa: Boolean = true, name: String = "cumprod"): DataFrame =
     cumAgg("prod", value, ord, mask, skipNa, name, exact = false, None)
 
-  /** Compute `build(__v, partitionWindow)` over the mask-filtered
-    * sub-stream and left-join the result back on (keys, ord). Both
-    * sides shuffle on the same keys, so Catalyst co-partitions the
-    * join with the window stage; masked-out rows emit null.
+  /** A masked op: `run` computes the unmasked op (its `sliceWidth` form
+    * included) on a [[RollingOps]] over the mask-filtered sub-stream of
+    * (keys, [[RollingOps.SubOrd]], [[RollingOps.SubValue]]), and its
+    * column `name` is left-joined back on (keys, ord); masked-out rows
+    * emit null. The expression join keeps `dfWithKeys`' column order,
+    * which is the unmasked op's. Unless the sub-stream is broadcast,
+    * both sides shuffle on (keys, ord): Spark does not take the window
+    * stage's hash(keys) layout for that join. Under
+    * `dropNullKeys = false` a null key is a group, so the keys join
+    * null-safe; Spark then hashes (coalesce(k, default), isnull(k),
+    * ord), with the same number of exchanges.
     */
-  private def subStream(value: Column, ord: Column, mask: Option[Column],
-      name: String)(build: (Column, org.apache.spark.sql.expressions.WindowSpec) => Column): DataFrame = {
-    val keyC = gb.keyCols
-    val sub = gb.base.filter(mask.get)
-      .select(keyC :+ ord.as("__ord") :+ value.as("__v"): _*)
-    val w = Window.partitionBy(keyC: _*)
-    val subOut = sub
-      .withColumn(name, build(col("__v"), w))
-      .select(keyC :+ col("__ord") :+ col(name): _*)
-    gb.dfWithKeys
-      .withColumn("__ord", ord)
-      .join(subOut, gb.keyNames :+ "__ord", "left")
-      .drop("__ord")
-  }
-
-  /** Masked + sliceWidth: the masked variants run on the mask-filtered
-    * sub-stream, which can itself be hot-key skewed (a bot-heavy key
-    * stays hot after a quality filter). This builds a [[RollingOps]]
-    * over that sub-stream — where the whole sliced machinery applies
-    * unchanged — lets `run` compute the sliced op on it, and joins the
-    * result back on (keys, ord) exactly like [[subStream]]. Same
-    * contract as the unmasked sliced paths: integral, per-key-unique,
-    * non-null `ord` (on the sub-stream's rows).
-    */
-  private def maskedSliced(value: Column, ord: Column, mask: Column,
+  private def onSubStream(value: Column, ord: Column, mask: Column,
       name: String)(run: RollingOps => DataFrame): DataFrame = {
+    import RollingOps.{SubOrd, SubValue}
     val sub = gb.base.filter(mask)
-      .select(gb.keyCols :+ ord.as("__ord") :+ value.as("__v"): _*)
-    val subOut = run(new RollingOps(
-        new GroupBy(sub, gb.keyNames.map(col), gb.sort, gb.dropNullKeys)))
-      .select(gb.keyCols :+ col("__ord") :+ col(name): _*)
-    gb.dfWithKeys
-      .withColumn("__ord", ord)
-      .join(subOut, gb.keyNames :+ "__ord", "left")
-      .drop("__ord")
+      .select(gb.keyCols :+ ord.as(SubOrd) :+ value.as(SubValue): _*)
+    val joinKeys = gb.keyNames :+ SubOrd
+    val out = run(new RollingOps(new GroupBy(sub, gb.keyCols, gb.sort, gb.dropNullKeys)))
+      .select(joinKeys.map(n => col(n).as(s"__graft_r_$n")) :+ col(name): _*)
+    val keyEq: (Column, Column) => Column = if (gb.dropNullKeys) _ === _ else _ <=> _
+    val on = gb.keyNames.map(n => keyEq(col(n), col(s"__graft_r_$n"))) :+
+      (col(SubOrd) === col(s"__graft_r_$SubOrd"))
+    gb.dfWithKeys.withColumn(SubOrd, ord)
+      .join(out, on.reduce(_ && _), "left")
+      .drop(SubOrd +: joinKeys.map(n => s"__graft_r_$n"): _*)
   }
 
   // ------------------------------------------------------------------ fill
@@ -940,4 +897,31 @@ final class RollingOps(val gb: GroupBy) extends AnyVal {
 object RollingOps {
   import scala.language.implicitConversions
   implicit def toRollingOps(gb: GroupBy): RollingOps = new RollingOps(gb)
+
+  /** Places aggregate `op` ("sum", "mean", "min", "max" or "count") of a
+    * column over one window frame, null while fewer than `minPeriods`
+    * of the column's values in the frame are non-null.
+    */
+  private type Frame = (String, Column, Int) => Column
+
+  /** The ord and value columns of a masked op's sub-stream. */
+  private val SubOrd = "__ord"
+  private val SubValue = "__v"
+
+  /** The columns the slice prologue adds to the input rows. */
+  private val SliceOrd = "__graft_o"
+  private val SliceValue = "__graft_v"
+  private val Slice = "__graft_slice"
+  private val Injected = "__graft_inj"
+
+  /** A row-count window's `minPeriods`: `window` by default, and like
+    * pandas' `min_periods` at least 0 and at most `window`.
+    */
+  private def minPeriodsIn(window: Int, minPeriods: Option[Int]): Int = {
+    require(window >= 1, s"window must be >= 1, got $window")
+    val mp = minPeriods.getOrElse(window)
+    require(mp >= 0, s"min_periods $mp must be >= 0")
+    require(mp <= window, s"min_periods $mp must be <= window $window")
+    mp
+  }
 }

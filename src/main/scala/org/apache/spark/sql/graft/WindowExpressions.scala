@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSeq, BindReferences, Expression, GenericInternalRow, InterpretedMutableProjection, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSeq, BindReferences, Expression, GenericInternalRow, JoinedRow, MutableProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, DeclarativeAggregate, Max, Min, Sum, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -21,13 +21,18 @@ import org.apache.spark.sql.types._
   * (`rowsBetween(unboundedPreceding, currentRow)`) is one update and one
   * evaluate per row. These aggregates are meant only for that frame
   * (each output is the state after the current row) and keep the state
-  * a window needs themselves:
+  * a window needs themselves; with them no operator of the library
+  * aggregates over a bounded ROWS frame:
   *
   *   - [[RollingWindow]]: a ring of the last `window` values with null
   *     flags. Evaluate re-folds the ring oldest to newest with the
   *     update sequence of Spark's `Sum`, `Average`, `Min`, `Max` and
   *     `Count`, so each output is bit-identical to the same aggregate
-  *     over the bounded frame, at `window` primitive steps per row.
+  *     over the bounded frame, at `window` steps per row. Every
+  *     row-count rolling statistic is this kernel or a formula over
+  *     several of them (`RollingOps.liftAgg`): the decimal sums of
+  *     `exact` (and its Σx² variance), the log-sum product and the five
+  *     sums of cov/corr.
   *   - [[EwmWindow]]: the six-field ewm state, stepped once per row by
   *     [[EwmState.step]] — pandas' `ewma` / `ewmcov(x, x)` recurrence.
   *
@@ -114,14 +119,16 @@ final class RollingRing(window: Int, generic: Boolean) {
   *     (Spark's `Least` / `Greatest` ordering);
   *   - `count`: the non-null count;
   *   - `var` / `std`: the Σx² identity of the bounded-frame form,
-  *     `max((Σx² − (Σx)²/n)/(n − 1), 0)` with n > 1, std its sqrt.
+  *     `max((Σx² − (Σx)²/n)/(n − 1), 0)` with n > 1, std its sqrt (one
+  *     ring, where the same formula over three kernels holds three).
   * Double inputs (and the double casts `mean` makes of integral and
   * float inputs, and `sum` of float inputs) fold as primitives. Other
   * types fold through Spark's own `Sum` / `Average` / `Min` / `Max`
-  * update and evaluate expressions, interpreted, in the same order —
-  * an integral sum keeps its long type and ANSI overflow error, a
-  * decimal sum or mean its decimal type. `var` / `std` take a double
-  * child.
+  * update and evaluate expressions, compiled as Spark's window
+  * aggregate processor compiles them, in the same order — an integral
+  * sum keeps its long type and ANSI overflow error, a decimal sum or
+  * mean its decimal type (the exact sums of the rolling operators).
+  * `var` / `std` take a double child.
   */
 case class RollingWindow(child: Expression, op: String, window: Int,
     minPeriods: Int, mutableAggBufferOffset: Int = 0,
@@ -231,12 +238,12 @@ case class RollingWindow(child: Expression, op: String, window: Int,
     if (found) best else null
   }
 
-  // the reference aggregate's expressions, bound once per task
+  // the reference aggregate's expressions, bound and compiled once per
+  // task (interpreted where code generation is off)
   @transient private lazy val genericInit =
-    new InterpretedMutableProjection(reference.initialValues)
-  @transient private lazy val genericUpdate = new InterpretedMutableProjection(
-    BindReferences.bindReferences(reference.updateExpressions,
-      AttributeSeq(reference.aggBufferAttributes :+ slot)))
+    MutableProjection.create(reference.initialValues)
+  @transient private lazy val genericUpdate = MutableProjection.create(
+    reference.updateExpressions, reference.aggBufferAttributes :+ slot)
   @transient private lazy val genericEval = BindReferences.bindReference(
     reference.evaluateExpression, AttributeSeq(reference.aggBufferAttributes))
 

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * partitioning key turning a window global — fails CI instead of
   * relying on someone reading stdout).
   *
-  * Usage: `sbt "runMain graft.PlanAudit /root/testdata/sf0.001"`.
+  * Test-scope: only PlanAuditSpec and the `main` below use it. Usage:
+  * `sbt "Test/runMain graft.PlanAudit /root/testdata/sf0.001"`.
   */
 object PlanAudit {
 
@@ -422,6 +423,16 @@ object PlanAudit {
         new graft.operators.RollingOps(new GroupBy(sums, Seq(col("user_id"))))
           .rollingMean(col("value"), col("ts"), 50, minPeriods = Some(1))
       }, cacheLocal = true, joinFree = true, noSlidingFrame = true),
+      Audited("rolling exact, prod and pair moments (running frame)", {
+        def ops(d: DataFrame) =
+          new graft.operators.RollingOps(new GroupBy(d, Seq(col("user_id"))))
+        val (v, ts, y) = (col("value"), col("ts"), col("value") * 0.5 + col("ts") % 7)
+        val d1 = ops(ev).rollingSum(v, ts, 50, Some(1), exact = true)
+        val d2 = ops(d1).rollingVar(v, ts, 50, Some(1), exact = true)
+        val d3 = ops(d2).rollingAgg("prod", v, ts, 50, Some(1), name = "rolling_prod")
+        val d4 = ops(d3).rollingCorr(v, y, ts, 50, Some(2), exact = true)
+        ops(d4).rollingCov(v, y, ts, 50, Some(2))
+      }, noSlidingFrame = true),
       Audited("persisted ewm mean (one running-frame window: no collect, no join-back, no exchange)",
         new graft.operators.RollingOps(evCached).ewmMean(col("value"), col("ts"), 0.25),
         cacheLocal = true, joinFree = true, noCollect = true),

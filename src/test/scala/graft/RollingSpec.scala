@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{GroupBy, RollingOps}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -794,5 +794,74 @@ class RollingSpec extends AnyFunSuite {
         .ewmMean(col("value"), col("ord"), 0.5).collect()
     }
     assert(ex.getMessage.contains("non-null ord"))
+  }
+
+  test("masked ops keep the null-key group under dropNullKeys=false") {
+    // keys null x3, v = 10, 20, 30, mask = T, F, T: the sub-stream is
+    // [10, 30], the masked row emits null
+    val d = Seq[(Int, Option[Int], Double, Boolean)](
+      (1, None, 10.0, true), (2, None, 20.0, false), (3, None, 30.0, true))
+      .toDF("ord", "key", "value", "m")
+    val g = new RollingOps(new GroupBy(d, Seq(col("key")), dropNullKeys = false))
+    val m = Some(col("m"))
+    assert(vals(g.rollingSum(col("value"), col("ord"), 2, Some(1)), "rolling_sum") ===
+      Seq(10.0, 30.0, 50.0))
+    assert(vals(g.rollingSum(col("value"), col("ord"), 2, Some(1), mask = m),
+      "rolling_sum") === Seq(10.0, null, 40.0))
+    assert(vals(g.rollingSum(col("value"), col("ord"), 2, Some(1), mask = m,
+      sliceWidth = Some(2L)), "rolling_sum") === Seq(10.0, null, 40.0))
+    assert(vals(g.shift(col("value"), col("ord"), 1, mask = m), "shift") ===
+      Seq(null, null, 10.0))
+    assert(vals(g.diff(col("value"), col("ord"), 1, mask = m), "diff") ===
+      Seq(null, null, 20.0))
+    // span 3 over ords 1..3: row 3's frame (0, 3] holds ords 1 and 3
+    assert(vals(g.rollingSumRange(col("value"), col("ord"), 3, mask = m),
+      "rolling_sum") === Seq(10.0, null, 40.0))
+  }
+
+  test("a masked op returns the unmasked op's columns in the same order") {
+    // neither key leads: a column key after ord and an appended expression key
+    val d = Seq[(Int, Int, Double, Boolean)](
+      (1, 0, 10.0, true), (2, 0, 20.0, false), (3, 1, 30.0, true), (4, 1, 40.0, true))
+      .toDF("ord", "key", "value", "m")
+    for (drop <- Seq(true, false)) {
+      val g = new RollingOps(new GroupBy(d, Seq(col("key"), (col("ord") % 2).as("par")),
+        dropNullKeys = drop))
+      val (v, o, m) = (col("value"), col("ord"), Some(col("m")))
+      val pairs = Seq[Option[Column] => DataFrame](
+        mk => g.rollingSum(v, o, 2, Some(1), mask = mk),
+        mk => g.rollingSum(v, o, 2, Some(1), mask = mk, sliceWidth = Some(2L)),
+        mk => g.shift(v, o, 1, mask = mk),
+        mk => g.diff(v, o, 1, mask = mk),
+        mk => g.rollingSumRange(v, o, 3, mask = mk))
+      for (f <- pairs) {
+        val plain = f(None).columns.toSeq
+        assert(plain.take(5) === Seq("ord", "key", "value", "m", "par"), plain)
+        assert(f(m).columns.toSeq === plain)
+      }
+    }
+  }
+
+  test("rolling minPeriods must lie in [0, window], as pandas requires") {
+    val d = df((0, 0, Some(1.0), true), (1, 0, Some(2.0), true))
+    for (exact <- Seq(false, true)) {
+      val over = intercept[IllegalArgumentException](
+        ops(d).rollingSum(col("value"), col("ord"), 2, Some(3), exact = exact))
+      assert(over.getMessage.contains("min_periods 3 must be <= window 2"), over.getMessage)
+      val neg = intercept[IllegalArgumentException](
+        ops(d).rollingSum(col("value"), col("ord"), 2, Some(-1), exact = exact))
+      assert(neg.getMessage.contains("min_periods -1 must be >= 0"), neg.getMessage)
+      for (mp <- Seq(-1, 3)) {
+        intercept[IllegalArgumentException](ops(d).rollingCov(col("value"),
+          col("value"), col("ord"), 2, Some(mp), exact = exact))
+        intercept[IllegalArgumentException](ops(d).rollingCorr(col("value"),
+          col("value"), col("ord"), 2, Some(mp), exact = exact))
+      }
+    }
+    // the bounds themselves stay legal
+    assert(vals(ops(d).rollingSum(col("value"), col("ord"), 2, Some(0)), "rolling_sum") ===
+      Seq(1.0, 3.0))
+    assert(vals(ops(d).rollingSum(col("value"), col("ord"), 2, Some(2)), "rolling_sum") ===
+      Seq(null, 3.0))
   }
 }

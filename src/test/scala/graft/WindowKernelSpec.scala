@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Differential spec of the running-frame window kernels
   * ([[org.apache.spark.sql.graft.RollingWindow]],
   * [[org.apache.spark.sql.graft.EwmWindow]]) against the forms they
-  * replaced ([[WindowTreeForms]]): the bounded-frame rolling aggregates,
-  * plain and masked, and the collected-row ewm folds. Equality is in
+  * replaced ([[WindowTreeForms]]): the bounded-frame rolling aggregates
+  * — plain, exact, var/std, prod and the cov/corr pair moments; plain,
+  * masked and sliced — and the collected-row ewm folds. Equality is in
   * bits (`doubleToLongBits` / `floatToIntBits`: `-0.0` differs from
   * `0.0`, NaN is one value) and in schema, never within a tolerance — the kernels claim
   * the same IEEE operation sequence.
@@ -20,6 +21,9 @@ class WindowKernelSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val Ops = Seq("sum", "mean", "min", "max", "count", "var", "std")
+
+  /** The formulas over the kernel's sums and counts: op and `exact`. */
+  private val Formulas = Seq("sum", "mean", "var", "std").map(_ -> true) :+ ("prod" -> false)
 
   /** Keys 0..5 plus null, a unique int ord per key, doubles with nulls,
     * `±0.0`, NaN and `±Inf`; key 4 is all null, key 5 holds 130 rows
@@ -44,6 +48,17 @@ class WindowKernelSpec extends AnyFunSuite {
       rnd.nextDouble() < 0.6, s"p$i")
     rows.toDF("k", "ord", "v", "m", "pad")
   }
+
+  /** The fixture with `x`, its values finite below 1e9 (an exact sum
+    * casts to decimal, which a NaN or infinity fails under ANSI), and
+    * `y`, a second series whose nulls fall on other rows.
+    */
+  private lazy val pairs: DataFrame = fixture
+    .withColumn("x", when(!isnan(col("v")) && abs(col("v")) < 1e9, col("v")))
+    .withColumn("y", when(col("ord") % 5 =!= 2, cos(col("ord")) * 37.0))
+
+  private def formula(op: String, exact: Boolean): String =
+    if (exact) s"${op}_exact" else op
 
   private def ops(df: DataFrame, dropNullKeys: Boolean = true) =
     new RollingOps(new GroupBy(df, Seq(col("k")), dropNullKeys = dropNullKeys))
@@ -149,6 +164,81 @@ class WindowKernelSpec extends AnyFunSuite {
     }
   }
 
+  for (dropNullKeys <- Seq(true, false); window <- Seq(1, 3, 50)) {
+    test(s"exact and prod rolling formulas over the kernel bit-equal the bounded frame: " +
+        s"window=$window dropNullKeys=$dropNullKeys, minPeriods {0, 1, window}") {
+      val combos = for ((op, exact) <- Formulas; mp <- Seq(0, 1, window).distinct)
+        yield (op, exact, mp, s"${formula(op, exact)}_$mp")
+      val got = combos.foldLeft(pairs) { case (d, (op, exact, mp, name)) =>
+        ops(d, dropNullKeys).rollingAgg(op, col("x"), col("ord"), window, Some(mp),
+          name = name, exact = exact)
+      }
+      val want = combos.foldLeft(pairs) { case (d, (op, exact, mp, name)) =>
+        WindowTreeForms.rolling(d, Seq("k"), op, col("x"), col("ord"), window, mp,
+          name, dropNullKeys, exact)
+      }
+      sameAs(got, want, Seq("k", "ord") ++ combos.map(_._4),
+        s"window=$window dropNullKeys=$dropNullKeys")
+    }
+  }
+
+  for (window <- Seq(1, 3, 50)) {
+    test(s"masked exact and prod rolling formulas bit-equal the masked bounded frame: window=$window") {
+      val names = Formulas.map { case (op, exact) => formula(op, exact) }
+      val got = Formulas.foldLeft(pairs) { case (d, (op, exact)) =>
+        ops(d).rollingAgg(op, col("x"), col("ord"), window, Some(1),
+          mask = Some(col("m")), name = formula(op, exact), exact = exact)
+      }
+      val want = Formulas.foldLeft(pairs) { case (d, (op, exact)) =>
+        WindowTreeForms.rollingMasked(d, Seq("k"), op, col("x"), col("ord"),
+          window, 1, col("m"), formula(op, exact), exact = exact)
+      }
+      sameAs(got, want, Seq("k", "ord") ++ names, s"window=$window")
+    }
+  }
+
+  for (window <- Seq(2, 50)) {
+    test(s"sliceWidth exact and prod rolling formulas bit-equal the unsplit bounded frame, plain and masked: window=$window") {
+      for ((op, exact) <- Formulas; masked <- Seq(false, true)) {
+        val mask = if (masked) Some(col("m")) else None
+        val name = formula(op, exact)
+        val want =
+          if (masked) WindowTreeForms.rollingMasked(pairs, Seq("k"), op, col("x"),
+            col("ord"), window, 1, col("m"), name, exact = exact)
+          else WindowTreeForms.rolling(pairs, Seq("k"), op, col("x"), col("ord"),
+            window, 1, name, exact = exact)
+        sameAs(ops(pairs).rollingAgg(op, col("x"), col("ord"), window, Some(1),
+            mask = mask, name = name, exact = exact, sliceWidth = Some(40L)),
+          want, Seq("k", "ord", name), s"$name masked=$masked window=$window")
+      }
+    }
+  }
+
+  for (dropNullKeys <- Seq(true, false)) {
+    test(s"rolling cov and corr over the kernel bit-equal the bounded frame, double and exact: " +
+        s"dropNullKeys=$dropNullKeys") {
+      // the double forms read the raw values, NaN and infinities included
+      for (exact <- Seq(false, true); window <- Seq(1, 2, 3, 50);
+           mp <- Seq(0, 1, window).distinct) {
+        val x = col(if (exact) "x" else "v")
+        val clue = s"exact=$exact window=$window minPeriods=$mp"
+        for (ddof <- Seq(0, 1))
+          sameAs(
+            ops(pairs, dropNullKeys).rollingCov(x, col("y"), col("ord"), window,
+              Some(mp), ddof, name = "c", exact = exact),
+            WindowTreeForms.rollingPair(pairs, Seq("k"), "cov", x, col("y"),
+              col("ord"), window, mp, "c", ddof, exact, dropNullKeys),
+            Seq("k", "ord", "c"), s"cov ddof=$ddof $clue")
+        sameAs(
+          ops(pairs, dropNullKeys).rollingCorr(x, col("y"), col("ord"), window,
+            Some(mp), name = "c", exact = exact),
+          WindowTreeForms.rollingPair(pairs, Seq("k"), "corr", x, col("y"),
+            col("ord"), window, mp, "c", exact = exact, dropNullKeys = dropNullKeys),
+          Seq("k", "ord", "c"), s"corr $clue")
+      }
+    }
+  }
+
   for (dropNullKeys <- Seq(true, false)) {
     test(s"ewm kernel bit-equals the collected-row folds: dropNullKeys=$dropNullKeys, " +
         "adjust x ignoreNa x bias x minPeriods") {
@@ -217,6 +307,18 @@ class WindowKernelSpec extends AnyFunSuite {
           WindowTreeForms.rolling(d, Seq("k"), op, col("v"), col("ord"), 3, 1, op)
         }
         sameAs(got, want, Seq("k", "ord") ++ Ops, "rolling window=3")
+        for ((op, exact) <- Formulas)
+          sameAs(ops(pairs).rollingAgg(op, col("x"), col("ord"), 3, Some(1),
+              name = op, exact = exact),
+            WindowTreeForms.rolling(pairs, Seq("k"), op, col("x"), col("ord"), 3, 1,
+              op, exact = exact),
+            Seq("k", "ord", op), s"rolling ${formula(op, exact)} window=3")
+        for (exact <- Seq(false, true))
+          sameAs(ops(pairs).rollingCorr(col("x"), col("y"), col("ord"), 3,
+              Some(1), name = "c", exact = exact),
+            WindowTreeForms.rollingPair(pairs, Seq("k"), "corr", col("x"), col("y"),
+              col("ord"), 3, 1, "c", exact = exact),
+            Seq("k", "ord", "c"), s"rolling corr exact=$exact window=3")
         sameAs(ops(fixture).ewmVar(col("v"), col("ord"), 0.3, ignoreNa = true,
             minPeriods = 1, name = "e"),
           WindowTreeForms.ewmVar(fixture, Seq("k"), col("v"), col("ord"), 0.3,

@@ -216,8 +216,10 @@ case class EwmVarFold(child: Expression, alpha: Double, adjust: Boolean,
   * the running-frame kernels ([[RollingWindow]], [[EwmWindow]]) against:
   *
   *   - the bounded-frame rolling aggregates (Spark's `Sum`, `Average`,
-  *     `Min`, `Max`, `Count` over `rowsBetween(-(w-1), 0)`, and the Σx²
-  *     var/std identity over it), plain and over a masked sub-stream;
+  *     `Min`, `Max`, `Count` over `rowsBetween(-(w-1), 0)`, the Σx²
+  *     var/std identity, the exact decimal sums and means and the
+  *     log-sum product over it), plain and over a masked sub-stream, and
+  *     the bounded-frame pair moments of rolling cov and corr;
   *   - the ewm fold: each key's whole rows collected, sorted by ord,
   *     folded by [[EwmMeanFold]] / [[EwmVarFold]] (one native O(n) pass
   *     each) and exploded back out beside their outputs;
@@ -301,13 +303,21 @@ object WindowTreeForms {
 
   /** `op` of `v` over the bounded frame `rowsBetween(-(window-1), 0)` of
     * `w`, null below `minPeriods` non-null frame values: the aggregates
-    * the rolling kernel replaced (var/std by the Σx² identity, with the
-    * 0-clamp).
+    * the rolling kernel replaced — var/std by the Σx² identity, with the
+    * 0-clamp; `exact` sums, means and Σx² sums through decimals; `prod`
+    * as exp(Σ ln|x|) with the zero latch and the parity sign.
     */
   def boundedFrame(op: String, v: Column, window: Int, minPeriods: Int,
-      w: org.apache.spark.sql.expressions.WindowSpec): Column = {
+      w: org.apache.spark.sql.expressions.WindowSpec,
+      exact: Boolean = false): Column = {
     val frame = w.rowsBetween(-(window - 1), Window.currentRow)
+    def decSum(c: Column, dec: DecimalType): Column =
+      F.sum(c.cast(dec)).over(frame).cast(DoubleType)
     val out = op match {
+      case "sum" if exact => decSum(v, DecimalType(28, 6))
+      case "mean" if exact =>
+        val n = F.count(v).over(frame).cast(DoubleType)
+        when(n.isNull || n === 0, lit(null)).otherwise(decSum(v, DecimalType(28, 6)) / n)
       case "sum" => F.sum(v).over(frame)
       case "mean" => F.avg(v).over(frame)
       case "min" => F.min(v).over(frame)
@@ -316,10 +326,21 @@ object WindowTreeForms {
       case "var" | "std" =>
         val vd = v.cast(DoubleType)
         val n = F.count(v).over(frame).cast(DoubleType)
-        val (s, ss) = (F.sum(vd).over(frame), F.sum(vd * vd).over(frame))
+        val (s, ss) =
+          if (exact) (decSum(vd, DecimalType(28, 6)), decSum(vd * vd, DecimalType(38, 6)))
+          else (F.sum(vd).over(frame), F.sum(vd * vd).over(frame))
         val varC = when(n > 1, greatest((ss - s * s / n) / (n - 1), lit(0.0)))
           .otherwise(lit(null).cast(DoubleType))
         if (op == "var") varC else sqrt(varC)
+      case "prod" =>
+        val av = v.cast(DoubleType)
+        val zeros = F.count(when(av === 0.0, lit(1))).over(frame)
+        val negs = F.count(when(av < 0.0, lit(1))).over(frame)
+        val sumln = decSum(when(av =!= 0.0, log(abs(av))), DecimalType(38, 8))
+        val sign = when(pmod(negs, lit(2L)) === 0, lit(1.0)).otherwise(lit(-1.0))
+        when(F.count(av).over(frame) === 0, lit(null).cast(DoubleType))
+          .when(zeros > 0, lit(0.0))
+          .otherwise(exp(sumln) * sign)
     }
     when(F.count(v).over(frame) >= minPeriods, out)
   }
@@ -327,24 +348,59 @@ object WindowTreeForms {
   /** The retired plain `rollingAgg`: the bounded frame per key. */
   def rolling(df: DataFrame, keys: Seq[String], op: String, value: Column,
       ord: Column, window: Int, minPeriods: Int, name: String = "rolling",
-      dropNullKeys: Boolean = true): DataFrame =
+      dropNullKeys: Boolean = true, exact: Boolean = false): DataFrame =
     df.withColumn(name, when(keysOk(keys, dropNullKeys),
       boundedFrame(op, value, window, minPeriods,
-        Window.partitionBy(keys.map(col): _*).orderBy(ord))))
+        Window.partitionBy(keys.map(col): _*).orderBy(ord), exact)))
 
   /** The retired masked `rollingAgg`: the bounded frame over the
     * mask-filtered sub-stream, left-joined back on (keys, ord).
     */
   def rollingMasked(df: DataFrame, keys: Seq[String], op: String,
       value: Column, ord: Column, window: Int, minPeriods: Int, mask: Column,
-      name: String = "rolling", dropNullKeys: Boolean = true): DataFrame = {
+      name: String = "rolling", dropNullKeys: Boolean = true,
+      exact: Boolean = false): DataFrame = {
     val keyC = keys.map(col)
     val sub = df.filter(keysOk(keys, dropNullKeys)).filter(mask)
       .select(keyC :+ ord.as("__ord") :+ value.as("__v"): _*)
     val subOut = sub.withColumn(name, boundedFrame(op, col("__v"), window,
-        minPeriods, Window.partitionBy(keyC: _*).orderBy(col("__ord"))))
+        minPeriods, Window.partitionBy(keyC: _*).orderBy(col("__ord")), exact))
       .select(keyC :+ col("__ord") :+ col(name): _*)
     df.withColumn("__ord", ord).join(subOut, keys :+ "__ord", "left").drop("__ord")
+  }
+
+  /** The retired `rollingCov` (`stat = "cov"`, divisor `n − ddof`) and
+    * `rollingCorr` (`"corr"`): the pair count and the five sums of the
+    * pairwise-complete rows over the bounded frame — through decimals
+    * when `exact` — finished row-locally, null below `minPeriods` pairs.
+    */
+  def rollingPair(df: DataFrame, keys: Seq[String], stat: String, x: Column,
+      y: Column, ord: Column, window: Int, minPeriods: Int, name: String,
+      ddof: Int = 1, exact: Boolean = false,
+      dropNullKeys: Boolean = true): DataFrame = {
+    val dt = DoubleType
+    val frame = Window.partitionBy(keys.map(col): _*).orderBy(ord)
+      .rowsBetween(-(window - 1), Window.currentRow)
+    val both = when(x.isNotNull && y.isNotNull, lit(1))
+    def s(c: Column, dec: DecimalType) =
+      if (exact) F.sum(when(both.isNotNull, c.cast(dt)).cast(dec)).over(frame).cast(dt)
+      else F.sum(when(both.isNotNull, c.cast(dt))).over(frame)
+    val xd = x.cast(dt); val yd = y.cast(dt)
+    val n = F.count(both).over(frame).cast(dt)
+    val (sx, sy) = (s(xd, DecimalType(28, 6)), s(yd, DecimalType(28, 6)))
+    val sxy = s(xd * yd, DecimalType(38, 6))
+    val out = stat match {
+      case "cov" =>
+        when(n > ddof, (sxy - sx * sy / n) / (n - lit(ddof.toDouble)))
+          .otherwise(lit(null).cast(dt))
+      case "corr" =>
+        val cxy = sxy - sx * sy / n
+        val cxx = s(xd * xd, DecimalType(38, 6)) - sx * sx / n
+        val cyy = s(yd * yd, DecimalType(38, 6)) - sy * sy / n
+        when(n >= 2 && cxx > 0 && cyy > 0, cxy / sqrt(cxx * cyy))
+          .otherwise(lit(null).cast(dt))
+    }
+    df.withColumn(name, when(keysOk(keys, dropNullKeys) && n >= minPeriods, out))
   }
 
   /** The retired declarative fold of `Ewm.variance`: given the sorted
